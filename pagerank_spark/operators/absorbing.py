@@ -24,8 +24,77 @@ value is the horizon K itself, which is also the correct limit
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.iterate import iterate
+
+
+def _stochastic_edges(
+    edges: DataFrame, n: int | None, weight_col: str | None, name: str
+) -> tuple[DataFrame, int]:
+    """The walk's ``(src, dst, p)`` transition frame, materialized, and
+    the vertex count ``n`` (``1 + max id`` when not given)."""
+    cols = [
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+    ]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("double").alias("_w"))
+    e = edges.select(*cols)
+    if n is None:
+        row = e.agg(F.max(F.greatest("src", "dst")).alias("m")).first()
+        if row is None or row["m"] is None:
+            raise ValueError(f"{name}: empty edge table")
+        n = int(row["m"]) + 1
+    if weight_col is None:
+        od = e.groupBy("src").agg(F.count(F.lit(1)).alias("_od"))
+        w = e.join(od, "src").select(
+            "src", "dst", (F.lit(1.0) / F.col("_od")).alias("p")
+        )
+    else:
+        od = e.groupBy("src").agg(F.sum("_w").alias("_od"))
+        w = e.join(od, "src").select(
+            "src", "dst", (F.col("_w") / F.col("_od")).alias("p")
+        )
+    # materialize the stochastic edge frame ONCE: every level (and every
+    # eager localCheckpoint of the state) re-joins against it, and an
+    # unpersisted w rebuilds the O(E) degree agg + join per level
+    return w.localCheckpoint(eager=True), n
+
+
+def _absorbing_walk(
+    w: DataFrame,
+    h0: DataFrame,
+    boundary_expr: Callable[[Column], Column],
+    horizon: int,
+) -> DataFrame:
+    """``horizon`` levels of ``h ← boundary_expr(P·h)`` from ``h0``.
+
+    ``boundary_expr`` receives the gathered ``Σ_u P(v,u)·h(u)`` — or
+    ``h(v)`` itself for a dangling v, the self-loop patch — and pins
+    the absorbing sets. Each level is one out-edge SpMV: a join of the
+    ``(src, dst, p)`` frame against the ``(id, h)`` state on ``dst``
+    plus a map-side-combinable sum keyed on ``src``. The horizon is
+    fixed, so the level loop is ``iterate``'s fixed-horizon mode.
+    """
+
+    def _level(h: DataFrame, _level_no: int) -> DataFrame:
+        g = (
+            w.join(h.withColumnRenamed("id", "_d"), w["dst"] == F.col("_d"))
+            .groupBy("src")
+            .agg(F.sum(F.col("p") * F.col("h")).alias("_g"))
+            .withColumnRenamed("src", "id")
+        )
+        return h.join(g, "id", "left").select(
+            "id",
+            boundary_expr(F.coalesce(F.col("_g"), F.col("h"))).alias("h"),
+        )
+
+    h, _levels, _done = iterate(h0, _level, None, horizon)
+    return h
 
 
 def hitting_time(
@@ -33,7 +102,6 @@ def hitting_time(
     targets: list[int],
     horizon: int = 20,
     n: int | None = None,
-    checkpoint_every: int = 3,
     weight_col: str | None = None,
 ) -> DataFrame:
     """K-truncated expected hitting time to ``targets`` per vertex.
@@ -49,65 +117,23 @@ def hitting_time(
     edge frame against the O(n) value frame on ``dst`` plus a
     map-side-combinable sum keyed on ``src`` — identical cost to one
     PageRank iteration in join mode; the value frame is
-    localCheckpoint-ed every ``checkpoint_every`` levels to keep the
-    lineage flat. Horizon is fixed, so the whole run is ``horizon``
-    SpMVs, no convergence loop.
+    localCheckpoint-ed every third level (``iterate``'s fixed-horizon
+    cadence) to keep the lineage flat. Horizon is fixed, so the whole
+    run is ``horizon`` SpMVs, no convergence loop.
     """
-    spark = edges.sparkSession
-    cols = [
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias("_w"))
-    e = edges.select(*cols)
-    if n is None:
-        row = e.agg(F.max(F.greatest("src", "dst")).alias("m")).first()
-        if row is None or row["m"] is None:
-            raise ValueError("hitting_time: empty edge table")
-        n = int(row["m"]) + 1
     tset = sorted({int(t) for t in targets})
     if not tset:
         raise ValueError("hitting_time: empty target set")
-
-    if weight_col is None:
-        od = e.groupBy("src").agg(F.count(F.lit(1)).alias("_od"))
-        w = e.join(od, "src").select(
-            "src", "dst", (F.lit(1.0) / F.col("_od")).alias("p")
-        )
-    else:
-        od = e.groupBy("src").agg(F.sum("_w").alias("_od"))
-        w = e.join(od, "src").select(
-            "src", "dst", (F.col("_w") / F.col("_od")).alias("p")
-        )
-    # materialize the stochastic edge frame ONCE: every level (and every
-    # eager localCheckpoint of the state) re-joins against it, and an
-    # unpersisted w rebuilds the O(E) degree agg + join per level
-    w = w.localCheckpoint(eager=True)
+    w, n = _stochastic_edges(edges, n, weight_col, "hitting_time")
+    spark = edges.sparkSession
     v = spark.range(n).select(F.col("id").cast("long").alias("id"))
     is_target = F.col("id").isin(tset)
-    h = v.select("id", F.lit(0.0).alias("h"))
-    for k in range(horizon):
-        g = (
-            w.join(h.withColumnRenamed("id", "_d"), w["dst"] == F.col("_d"))
-            .groupBy("src")
-            .agg(F.sum(F.col("p") * F.col("h")).alias("_g"))
-            .withColumnRenamed("src", "id")
-        )
-        nxt = (
-            h.join(g, "id", "left")
-            .select(
-                "id",
-                F.when(is_target, F.lit(0.0))
-                .otherwise(1.0 + F.coalesce(F.col("_g"), F.col("h")))
-                .alias("h"),
-            )
-        )
-        h = (
-            nxt.localCheckpoint(eager=True)
-            if (k + 1) % checkpoint_every == 0
-            else nxt
-        )
+    h = _absorbing_walk(
+        w,
+        v.select("id", F.lit(0.0).alias("h")),
+        lambda g: F.when(is_target, F.lit(0.0)).otherwise(1.0 + g),
+        horizon,
+    )
     return h.select("id", F.col("h").alias("hitting"))
 
 
@@ -117,7 +143,6 @@ def absorption_probability(
     targets_b: list[int],
     horizon: int = 20,
     n: int | None = None,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """P[the walk from v hits A before B], truncated at ``horizon``.
 
@@ -136,55 +161,22 @@ def absorption_probability(
     shape as :func:`hitting_time` — one out-edge SpMV + an O(n) state
     join per level.
     """
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    )
-    if n is None:
-        row = e.agg(F.max(F.greatest("src", "dst")).alias("m")).first()
-        if row is None or row["m"] is None:
-            raise ValueError("absorption_probability: empty edge table")
-        n = int(row["m"]) + 1
     aset = sorted({int(t) for t in targets_a})
     bset = sorted({int(t) for t in targets_b})
     if not aset or not bset:
         raise ValueError("absorption_probability: both sets required")
     if set(aset) & set(bset):
         raise ValueError("absorption_probability: A and B must be disjoint")
-
-    od = e.groupBy("src").agg(F.count(F.lit(1)).alias("_od"))
-    w = e.join(od, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("_od")).alias("p")
-    )
-    # same as hitting_time: one materialization of the stochastic edge
-    # frame instead of horizon O(E) rebuilds
-    w = w.localCheckpoint(eager=True)
+    w, n = _stochastic_edges(edges, n, None, "absorption_probability")
+    spark = edges.sparkSession
     v = spark.range(n).select(F.col("id").cast("long").alias("id"))
     in_a, in_b = F.col("id").isin(aset), F.col("id").isin(bset)
-    h = v.select(
-        "id", F.when(in_a, F.lit(1.0)).otherwise(F.lit(0.0)).alias("h")
+    h = _absorbing_walk(
+        w,
+        v.select(
+            "id", F.when(in_a, F.lit(1.0)).otherwise(F.lit(0.0)).alias("h")
+        ),
+        lambda g: F.when(in_a, F.lit(1.0)).when(in_b, F.lit(0.0)).otherwise(g),
+        horizon,
     )
-    for k in range(horizon):
-        g = (
-            w.join(h.withColumnRenamed("id", "_d"), w["dst"] == F.col("_d"))
-            .groupBy("src")
-            .agg(F.sum(F.col("p") * F.col("h")).alias("_g"))
-            .withColumnRenamed("src", "id")
-        )
-        nxt = (
-            h.join(g, "id", "left")
-            .select(
-                "id",
-                F.when(in_a, F.lit(1.0))
-                .when(in_b, F.lit(0.0))
-                .otherwise(F.coalesce(F.col("_g"), F.col("h")))
-                .alias("h"),
-            )
-        )
-        h = (
-            nxt.localCheckpoint(eager=True)
-            if (k + 1) % checkpoint_every == 0
-            else nxt
-        )
     return h.select("id", F.col("h").alias("p_a"))

@@ -59,14 +59,6 @@ def label_propagation(
         sym = sym.union(
             sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    # NOTE (r6): a multiplicity collapse of parallel edges here (votes
-    # = Σm, bit-identical integers) was A/B-measured and REVERTED: the
-    # aggregate's AQE-coalesced output caches with low parallelism, so
-    # every round's message join ran on few tasks — net +1.5 s at
-    # sf0.1's 4 rounds. The raw mirrored table with one multiplicity
-    # row per instance stays; revisit at duplication factors ≫ 5 with
-    # an explicit post-aggregate repartition.
-    sym = sym.select("src", "dst", F.lit(1).alias("_m"))
     # persist, NOT localCheckpoint: the cached InMemoryRelation reports
     # its hashpartitioning(src) to the planner so the per-round join
     # skips the fat-side exchange; a checkpoint's LogicalRDD drops the
@@ -116,8 +108,10 @@ def label_propagation(
             .withColumnRenamed("id", "src")
             .hint(join_hint),
             "src",
-        ).select(F.col("dst").alias("id"), "label", "_m")
-        counts = msgs.groupBy("id", "label").agg(F.sum("_m").alias("c"))
+        ).select(F.col("dst").alias("id"), "label")
+        counts = msgs.groupBy("id", "label").agg(
+            F.count(F.lit(1)).alias("c")
+        )
         # argmax by (count, -label): most frequent label, ties -> min label.
         picked = counts.groupBy("id").agg(
             F.max(F.struct(F.col("c"), (-F.col("label")).alias("neg"))).alias("top")

@@ -31,17 +31,78 @@ agree in the limit.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.iterate import iterate
+
 
 @dataclass
 class PushResult:
+    """A push run's touched frontier and how it ended.
+
+    ``converged`` is True when no vertex is left above its push
+    threshold — also when the last of ``max_rounds`` rounds drained the
+    frontier, and with ``rounds == 0`` when the start vertex never
+    exceeded it. It is False only when ``max_rounds`` ran out with
+    active vertices left.
+    """
+
     estimates: DataFrame  # (id, p, r) — only TOUCHED vertices
     rounds: int
     converged: bool
+
+
+def _push_rounds(
+    flagged: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int,
+) -> PushResult:
+    """Run ``step`` on a state flagged with a boolean ``act`` column
+    until no row is active or ``max_rounds`` pushes ran.
+
+    ``step`` returns the next state already flagged, so the harness's
+    one eager checkpoint per round serves both the idle probe and the
+    next round's push/keep branches. A start state with nothing active
+    runs no round at all. The flag columns are dropped from the result.
+    """
+
+    def _idle(st: DataFrame) -> bool:
+        return st.where("act").isEmpty()
+
+    if _idle(flagged):
+        st, rounds, done = flagged, 0, True
+    else:
+        st, rounds, done = iterate(
+            flagged, step, lambda _prev, new, _round: _idle(new), max_rounds
+        )
+    return PushResult(st.drop("deg", "act"), rounds, done)
+
+
+def _settle(
+    st: DataFrame, inc: DataFrame, keys: list[str], alpha: float
+) -> DataFrame:
+    """One push's bookkeeping on the flagged ``(*keys, p, r, …, act)``
+    state: every active row moves ``α·r`` into ``p`` and drops its
+    residual, and the pushed mass ``inc`` (``*keys, dr``) lands on the
+    receivers' residuals — one sum-combinable aggregate on ``keys``.
+    """
+    kept = st.select(
+        *keys,
+        (F.col("p") + F.when(F.col("act"), alpha * F.col("r"))
+         .otherwise(F.lit(0.0))).alias("p"),
+        F.when(F.col("act"), F.lit(0.0)).otherwise(F.col("r")).alias("r"),
+    )
+    return (
+        kept.unionByName(
+            inc.select(*keys, F.lit(0.0).alias("p"), F.col("dr").alias("r"))
+        )
+        .groupBy(*keys)
+        .agg(F.sum("p").alias("p"), F.sum("r").alias("r"))
+    )
 
 
 def ppr_push(
@@ -50,7 +111,6 @@ def ppr_push(
     alpha: float = 0.15,
     eps_push: float = 1e-6,
     max_rounds: int = 200,
-    checkpoint_every: int = 1,
 ) -> PushResult:
     """Single-seed PPR estimates by batched forward push.
 
@@ -61,6 +121,9 @@ def ppr_push(
     the implicit (p, r) = (0, 0); ``sum(p)`` certifies the global
     max-error bound ``1 − sum(p)`` over ALL vertices, reached or not.
 
+    This is :func:`ppr_push_keyed` with the one seed and the ``seed``
+    column dropped.
+
     Scale shape per round: the state frame holds O(touched) skinny
     rows; one join of the pushing subset against the out-edge table on
     ``src`` + one sum-combinable aggregate on the receiver id. Work
@@ -68,79 +131,8 @@ def ppr_push(
     locality property is pytest-pinned (an untouched component never
     enters the state).
     """
-    if not 0 < alpha < 1:
-        raise ValueError("ppr_push: alpha must be in (0, 1)")
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    )
-    # materialized ONCE: every round joins the state against od and w,
-    # and an unpersisted frame rebuilds the O(E) degree agg per round
-    od = e.groupBy("src").agg(
-        F.count(F.lit(1)).alias("_od")
-    ).localCheckpoint(eager=True)
-    w = e.join(od, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("_od")).alias("share")
-    ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    st = spark.createDataFrame(
-        [(int(seed), 0.0, 1.0)], "id long, p double, r double"
-    )
-    converged = False
-    rounds = 0
-    for k in range(max_rounds):
-        st = st.join(od.withColumnRenamed("src", "id"), "id", "left")
-        st = st.select(
-            "id", "p", "r",
-            F.coalesce("_od", F.lit(0)).alias("deg"),
-        )
-        active = F.col("r") > F.when(
-            F.col("deg") > 0, F.lit(eps_push) * F.col("deg")
-        ).otherwise(F.lit(eps_push))
-        # checkpoint the flagged state so the convergence probe and the
-        # push/keep branches evaluate the od join + flag ONCE per round
-        st = st.withColumn("act", active).localCheckpoint(eager=True)
-        if st.where("act").limit(1).count() == 0:
-            converged = True
-            st = st.drop("deg", "act")
-            break
-        rounds += 1
-        pushing = st.where("act").select("id", "r", "deg")
-        inc = (
-            pushing.where(F.col("deg") > 0)
-            .join(w, pushing["id"] == w["src"])
-            .select(
-                F.col("dst").alias("id"),
-                ((1.0 - alpha) * F.col("r") * F.col("share")).alias("dr"),
-            )
-        )
-        dang = pushing.where(F.col("deg") == 0).select(
-            F.lit(int(seed)).cast("long").alias("id"),
-            ((1.0 - alpha) * F.col("r")).alias("dr"),
-        )
-        kept = st.select(
-            "id",
-            (F.col("p") + F.when(F.col("act"), alpha * F.col("r"))
-             .otherwise(F.lit(0.0))).alias("p"),
-            F.when(F.col("act"), F.lit(0.0)).otherwise(F.col("r")).alias("r"),
-        )
-        nxt = (
-            kept.unionByName(
-                inc.unionByName(dang).select(
-                    "id", F.lit(0.0).alias("p"), F.col("dr").alias("r")
-                )
-            )
-            .groupBy("id")
-            .agg(F.sum("p").alias("p"), F.sum("r").alias("r"))
-        )
-        st = (
-            nxt.localCheckpoint(eager=True)
-            if (k + 1) % checkpoint_every == 0
-            else nxt
-        )
-    else:
-        st = st.drop("deg", "act")
-    return PushResult(estimates=st, rounds=rounds, converged=converged)
+    res = ppr_push_keyed(edges, [seed], alpha, eps_push, max_rounds)
+    return PushResult(res.estimates.drop("seed"), res.rounds, res.converged)
 
 
 def ppr_push_keyed(
@@ -149,7 +141,6 @@ def ppr_push_keyed(
     alpha: float = 0.15,
     eps_push: float = 1e-6,
     max_rounds: int = 200,
-    checkpoint_every: int = 1,
 ) -> PushResult:
     """Batched forward push for MANY seeds in one run — every seed
     rides as a key column through the same per-round join + aggregate,
@@ -162,43 +153,35 @@ def ppr_push_keyed(
     Returns ``(seed, id, p, r)`` over touched pairs.
     """
     if not 0 < alpha < 1:
-        raise ValueError("ppr_push_keyed: alpha must be in (0, 1)")
+        raise ValueError("ppr_push: alpha must be in (0, 1)")
     if not seeds:
         raise ValueError("ppr_push_keyed: empty seed list")
     e = edges.select(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
     )
-    # materialized ONCE per run — see ppr_push
+    # materialized ONCE: every round joins the state against od and w,
+    # and an unpersisted frame rebuilds the O(E) degree agg per round
     od = e.groupBy("src").agg(
         F.count(F.lit(1)).alias("_od")
     ).localCheckpoint(eager=True)
     w = e.join(od, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("_od")).alias("share")
     ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    st = spark.createDataFrame(
-        [(int(s), int(s), 0.0, 1.0) for s in sorted(set(seeds))],
-        "seed long, id long, p double, r double",
-    )
-    converged = False
-    rounds = 0
-    for k in range(max_rounds):
-        st = st.join(od.withColumnRenamed("src", "id"), "id", "left")
-        st = st.select(
+
+    def _flag(st: DataFrame) -> DataFrame:
+        st = st.join(od.withColumnRenamed("src", "id"), "id", "left").select(
             "seed", "id", "p", "r",
             F.coalesce("_od", F.lit(0)).alias("deg"),
         )
-        active = F.col("r") > F.when(
-            F.col("deg") > 0, F.lit(eps_push) * F.col("deg")
-        ).otherwise(F.lit(eps_push))
-        # one evaluation of the od join + flag per round — see ppr_push
-        st = st.withColumn("act", active).localCheckpoint(eager=True)
-        if st.where("act").limit(1).count() == 0:
-            converged = True
-            st = st.drop("deg", "act")
-            break
-        rounds += 1
+        return st.withColumn(
+            "act",
+            F.col("r") > F.when(
+                F.col("deg") > 0, F.lit(eps_push) * F.col("deg")
+            ).otherwise(F.lit(eps_push)),
+        )
+
+    def _step(st: DataFrame, _round: int) -> DataFrame:
         pushing = st.where("act").select("seed", "id", "r", "deg")
         inc = (
             pushing.where(F.col("deg") > 0)
@@ -209,35 +192,19 @@ def ppr_push_keyed(
                 ((1.0 - alpha) * F.col("r") * F.col("share")).alias("dr"),
             )
         )
+        # dangling vertices route their pushed mass back to the seed
         dang = pushing.where(F.col("deg") == 0).select(
             "seed",
             F.col("seed").alias("id"),
             ((1.0 - alpha) * F.col("r")).alias("dr"),
         )
-        kept = st.select(
-            "seed", "id",
-            (F.col("p") + F.when(F.col("act"), alpha * F.col("r"))
-             .otherwise(F.lit(0.0))).alias("p"),
-            F.when(F.col("act"), F.lit(0.0)).otherwise(F.col("r")).alias("r"),
-        )
-        nxt = (
-            kept.unionByName(
-                inc.unionByName(dang).select(
-                    "seed", "id", F.lit(0.0).alias("p"),
-                    F.col("dr").alias("r"),
-                )
-            )
-            .groupBy("seed", "id")
-            .agg(F.sum("p").alias("p"), F.sum("r").alias("r"))
-        )
-        st = (
-            nxt.localCheckpoint(eager=True)
-            if (k + 1) % checkpoint_every == 0
-            else nxt
-        )
-    else:
-        st = st.drop("deg", "act")
-    return PushResult(estimates=st, rounds=rounds, converged=converged)
+        return _flag(_settle(st, inc.unionByName(dang), ["seed", "id"], alpha))
+
+    st = edges.sparkSession.createDataFrame(
+        [(int(s), int(s), 0.0, 1.0) for s in sorted(set(seeds))],
+        "seed long, id long, p double, r double",
+    )
+    return _push_rounds(_flag(st), _step, max_rounds)
 
 
 def ppr_contributions(
@@ -246,7 +213,6 @@ def ppr_contributions(
     alpha: float = 0.15,
     eps_push: float = 1e-6,
     max_rounds: int = 200,
-    checkpoint_every: int = 1,
 ) -> PushResult:
     """PageRank contributions to one target by batched REVERSE push.
 
@@ -289,20 +255,11 @@ def ppr_contributions(
         F.col("src").alias("to_u"),
         (F.lit(1.0) / F.col("_od")).alias("share"),
     ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    st = spark.createDataFrame(
-        [(int(target), 0.0, 1.0)], "id long, p double, r double"
-    )
-    converged = False
-    rounds = 0
-    for k in range(max_rounds):
-        active = F.col("r") > F.lit(eps_push)
-        st = st.withColumn("act", active)
-        if st.where("act").limit(1).count() == 0:
-            converged = True
-            st = st.drop("act")
-            break
-        rounds += 1
+
+    def _flag(st: DataFrame) -> DataFrame:
+        return st.withColumn("act", F.col("r") > F.lit(eps_push))
+
+    def _step(st: DataFrame, _round: int) -> DataFrame:
         pushing = st.where("act").select("id", "r")
         inc = (
             pushing.join(w, pushing["id"] == w["from_v"])
@@ -311,28 +268,12 @@ def ppr_contributions(
                 ((1.0 - alpha) * F.col("r") * F.col("share")).alias("dr"),
             )
         )
-        kept = st.select(
-            "id",
-            (F.col("p") + F.when(F.col("act"), alpha * F.col("r"))
-             .otherwise(F.lit(0.0))).alias("p"),
-            F.when(F.col("act"), F.lit(0.0)).otherwise(F.col("r")).alias("r"),
-        )
-        nxt = (
-            kept.unionByName(
-                inc.select("id", F.lit(0.0).alias("p"),
-                           F.col("dr").alias("r"))
-            )
-            .groupBy("id")
-            .agg(F.sum("p").alias("p"), F.sum("r").alias("r"))
-        )
-        st = (
-            nxt.localCheckpoint(eager=True)
-            if (k + 1) % checkpoint_every == 0
-            else nxt
-        )
-    else:
-        st = st.drop("act")
-    return PushResult(estimates=st, rounds=rounds, converged=converged)
+        return _flag(_settle(st, inc, ["id"], alpha))
+
+    st = edges.sparkSession.createDataFrame(
+        [(int(target), 0.0, 1.0)], "id long, p double, r double"
+    )
+    return _push_rounds(_flag(st), _step, max_rounds)
 
 
 def local_community(

@@ -13,8 +13,83 @@ closeness/betweenness and outbreak/influence analysis.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.iterate import iterate
+
+
+def _timed_edges(
+    tedges: DataFrame, duration_col: str | None = None
+) -> DataFrame:
+    """``(src, dst, t[, _dur])`` as longs, deduplicated and materialized.
+
+    Duplicate timestamped rows are exactly redundant under the min
+    fold (distinct is result-identical), and the surviving frame is
+    materialized ONCE — otherwise every relaxation round re-runs the
+    source scan + casts.
+    """
+    cols = [
+        F.col("src").cast("long"),
+        F.col("dst").cast("long"),
+        F.col("t").cast("long"),
+    ]
+    if duration_col is not None:
+        cols.append(F.col(duration_col).cast("long").alias("_dur"))
+    return tedges.select(*cols).distinct().localCheckpoint(eager=True)
+
+
+def _earliest_arrival(
+    te: DataFrame,
+    arr: DataFrame,
+    keys: list[str],
+    land: Column,
+    max_hops: int | None,
+) -> DataFrame:
+    """Min-arrival relaxation of the ``(*keys, id, arrival)`` frame
+    ``arr`` over the materialized ``(src, dst, t, …)`` edge frame
+    ``te`` until no arrival improves, or for ``max_hops`` rounds.
+
+    ``keys`` are carried through every round untouched — none for a
+    single seed set, ``["source"]`` for one run per source — and
+    ``land`` is the arrival an edge ``(u, v, t)`` gives ``v``.
+    """
+
+    def _relax(cur: DataFrame, _round: int) -> DataFrame:
+        relax = (
+            te.join(cur, te["src"] == cur["id"])
+            .where(F.col("t") >= F.col("arrival"))
+            .select(*keys, F.col("dst").alias("id"), land.alias("arrival"))
+        )
+        return (
+            cur.union(relax)
+            .groupBy(*keys, "id")
+            .agg(F.min("arrival").alias("arrival"))
+        )
+
+    def _fixpoint(old: DataFrame, new: DataFrame, _round: int) -> bool:
+        # any vertex whose arrival still improved? both sides are
+        # materialized, so this probe costs one cheap job
+        return (
+            new.join(
+                old.withColumnRenamed("arrival", "_old"),
+                [*keys, "id"],
+                "left",
+            )
+            .where(
+                F.col("_old").isNull() | (F.col("arrival") < F.col("_old"))
+            )
+            .isEmpty()
+        )
+
+    # max(1, ...): do-while — max_hops <= 0 still relaxes one round
+    out, _rounds, _done = iterate(
+        arr,
+        _relax,
+        _fixpoint,
+        max(1, max_hops) if max_hops is not None else (1 << 31),
+    )
+    return out
 
 
 def temporal_reachability(
@@ -56,60 +131,18 @@ def temporal_reachability(
     with early termination when a round changes nothing. Timestamps
     ride as longs; no per-row Python.
     """
-    spark = tedges.sparkSession
-    cols = [
-        F.col("src").cast("long"),
-        F.col("dst").cast("long"),
-        F.col("t").cast("long"),
-    ]
-    if duration_col is not None:
-        cols.append(F.col(duration_col).cast("long").alias("_dur"))
-    # duplicate timestamped rows are exactly redundant under the min
-    # fold (distinct is result-identical), and the surviving frame is
-    # materialized ONCE — otherwise every relaxation round re-runs the
-    # source scan + casts
-    te = tedges.select(*cols).distinct().localCheckpoint(eager=True)
     land = (
         (F.col("t") + F.col("_dur"))
         if duration_col is not None
         else F.col("t")
     )
-    arr = spark.createDataFrame(
+    arr = tedges.sparkSession.createDataFrame(
         [(int(s), int(start)) for s in sorted(set(sources))],
         "id long, arrival long",
     )
-    rounds = 0
-    while True:
-        relax = (
-            te.join(arr, te["src"] == arr["id"])
-            .where(F.col("t") >= F.col("arrival"))
-            .select(F.col("dst").alias("id"), land.alias("arrival"))
-        )
-        # materialize each round: the O(reached) frame is skinny, and
-        # without it both the fixpoint probe and the next round re-derive
-        # the whole relaxation chain from scratch (lineage doubles)
-        new = (
-            arr.union(relax)
-            .groupBy("id")
-            .agg(F.min("arrival").alias("arrival"))
-            .localCheckpoint(eager=True)
-        )
-        rounds += 1
-        if max_hops is not None and rounds >= max_hops:
-            return new
-        # fixpoint check: any vertex whose arrival still improved?
-        # (both sides materialized — this probe costs one cheap job)
-        changed = (
-            new.join(arr.withColumnRenamed("arrival", "_old"), "id", "left")
-            .where(
-                F.col("_old").isNull() | (F.col("arrival") < F.col("_old"))
-            )
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
-            return new
-        arr = new
+    return _earliest_arrival(
+        _timed_edges(tedges, duration_col), arr, [], land, max_hops
+    )
 
 
 def snapshot_pagerank(
@@ -176,49 +209,10 @@ def temporal_reachability_keyed(
     min-combinable aggregate keyed (source, dst); state is the keyed
     arrival frame, |sources| × O(reached) skinny rows.
     """
-    spark = tedges.sparkSession
-    # distinct + one materialization — see temporal_reachability
-    te = tedges.select(
-        F.col("src").cast("long"),
-        F.col("dst").cast("long"),
-        F.col("t").cast("long"),
-    ).distinct().localCheckpoint(eager=True)
-    arr = spark.createDataFrame(
+    arr = tedges.sparkSession.createDataFrame(
         [(int(s), int(s), int(start)) for s in sorted(set(sources))],
         "source long, id long, arrival long",
     )
-    rounds = 0
-    while True:
-        relax = (
-            te.join(arr, te["src"] == arr["id"])
-            .where(F.col("t") >= F.col("arrival"))
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                F.col("t").alias("arrival"),
-            )
-        )
-        new = (
-            arr.union(relax)
-            .groupBy("source", "id")
-            .agg(F.min("arrival").alias("arrival"))
-            .localCheckpoint(eager=True)
-        )
-        rounds += 1
-        if max_hops is not None and rounds >= max_hops:
-            return new
-        changed = (
-            new.join(
-                arr.withColumnRenamed("arrival", "_old"),
-                ["source", "id"],
-                "left",
-            )
-            .where(
-                F.col("_old").isNull() | (F.col("arrival") < F.col("_old"))
-            )
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
-            return new
-        arr = new
+    return _earliest_arrival(
+        _timed_edges(tedges), arr, ["source"], F.col("t"), max_hops
+    )

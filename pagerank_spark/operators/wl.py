@@ -50,13 +50,6 @@ def wl_colors(
         sym = sym.union(
             sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    # NOTE (r6): a multiplicity collapse (Σ m·hash, Σm — exact integer
-    # arithmetic, bit-identical) was A/B-measured and REVERTED for the
-    # same reason as label_propagation's: the aggregate's AQE-coalesced
-    # output caches with low parallelism and the rounds slow down. One
-    # multiplicity-1 row per instance keeps the round expressions
-    # unchanged.
-    sym = sym.select("src", "dst", F.lit(1).alias("_m"))
     sym = sym.repartition(P, "src").persist()
     vertices = (
         edges.select(F.col("src").alias("id"))
@@ -72,22 +65,17 @@ def wl_colors(
             colors.select(F.col("id").alias("src"), "color").hint(hint), "src"
         ).select(
             F.col("dst").alias("id"),
-            # decimal(28,0) per message, multiplied by the (≤10^9)
-            # multiplicity: product ≤ ~10^27 within the widened
-            # precision; Spark widens the SUM to decimal(38,0),
-            # honoring the documented exact-no-overflow guarantee up
-            # to ~10^10 same-sign messages per vertex (decimal(19,0)
-            # summed only to (29,0), which a massive hub could
-            # overflow to NULL -> silently corrupted color)
-            (
-                hash64(F.col("color").cast("string"), hash_fn)
-                .cast("decimal(28,0)")
-                * F.col("_m")
-            ).alias("_h"),
-            "_m",
+            # decimal(28,0) per message: Spark widens the SUM to
+            # decimal(38,0), honoring the documented exact-no-overflow
+            # guarantee up to ~10^10 same-sign messages per vertex
+            # (decimal(19,0) summed only to (29,0), which a massive hub
+            # could overflow to NULL -> silently corrupted color)
+            hash64(F.col("color").cast("string"), hash_fn)
+            .cast("decimal(28,0)")
+            .alias("_h"),
         )
         agg = msgs.groupBy("id").agg(
-            F.sum("_h").alias("_s"), F.sum("_m").alias("_c")
+            F.sum("_h").alias("_s"), F.count(F.lit(1)).alias("_c")
         )
         colors = (
             colors.join(agg.hint(hint), "id", "left")

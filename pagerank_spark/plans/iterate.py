@@ -1,7 +1,8 @@
-"""Generic BSP iterate-until-converged driver.
+"""Generic BSP iterate driver: until converged, or for a fixed horizon.
 
 The engine's iterative graph algorithms (connected components, label
-propagation, join-mode PageRank) share one loop skeleton: compute the
+propagation, join-mode PageRank, forward/reverse push, absorbing
+walks, temporal reachability) share one loop skeleton: compute the
 next state from the current one, truncate lineage with
 ``localCheckpoint`` so the physical plan stays O(1) across rounds, run
 one cheap convergence action, stop at ``max_iter`` otherwise. This is
@@ -10,14 +11,24 @@ DataFrame, a superstep is a handful of joins/aggregates Catalyst plans
 whole, and the only driver-side work per round is the convergence
 check.
 
-``iterate`` extracts that skeleton once — CC/LPA/join-PR are expressed
-on it, and users get the same extension point for new iterative
-algorithms (shortest paths, k-core peeling, …) without hand-rolling
-lineage truncation or stall warnings. The C reference hand-rolls the
-equivalent do-while in every variant (``Page_Rank_SERIAL.c:206-279``);
-here it exists exactly once.
-"""
+``iterate`` runs that skeleton in one of two modes:
 
+- **probing** (``converged`` given): the probe runs after every round
+  and the state is checkpointed every round, because the probe and the
+  next round both scan it;
+- **fixed horizon** (``converged=None``): exactly ``max_iter`` rounds,
+  no probe, and the state is checkpointed every
+  ``FIXED_HORIZON_CHECKPOINT_EVERY`` rounds — nothing scans the
+  intermediate states, so an eager checkpoint every round is a job
+  per round that buys nothing (``hitting_time`` at sf0.1 on
+  ``local[32]``: 12.8 s before this every-third-round rule, 5.26 s
+  with it).
+
+The C reference hand-rolls the equivalent do-while in every variant
+(``Page_Rank_SERIAL.c:206-279``). Here the operators that loop over
+Spark rounds are expressed on ``iterate``; a few older round loops
+still hand-roll their own.
+"""
 from __future__ import annotations
 
 import json
@@ -26,11 +37,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+# fixed-horizon checkpoint cadence (see the module docstring)
+FIXED_HORIZON_CHECKPOINT_EVERY = 3
+
 
 def iterate(
     state: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
-    converged: Callable[[DataFrame, DataFrame, int], bool],
+    converged: Callable[[DataFrame, DataFrame, int], bool] | None,
     max_iter: int,
     checkpoint: bool = True,
     warn: str | None = None,
@@ -41,12 +55,16 @@ def iterate(
     ``max_iter`` rounds; returns ``(state, rounds_run, converged)``.
 
     - ``step(state, round)`` (1-based round) returns the next state; it
-      must NOT checkpoint — the harness localCheckpoints every round so
+      must NOT checkpoint — the harness localCheckpoints the state so
       plans never grow with the round count.
     - ``converged(prev, new, round)`` runs AFTER the checkpoint, so any
       action it triggers (count, agg) scans materialized partitions; it
       may carry loop state in a closure (e.g. CC's count-first /
       lazy-hash detection) and record per-round metrics.
+    - ``converged=None`` is the fixed-horizon mode: exactly
+      ``max_iter`` rounds, no probe, a checkpoint every
+      ``FIXED_HORIZON_CHECKPOINT_EVERY`` rounds; the returned flag is
+      True once the horizon is reached.
     - do-while semantics: ``step`` always runs at least once when
       ``max_iter >= 1``.
     - ``warn``: message to emit as a RuntimeWarning when ``max_iter``
@@ -86,14 +104,21 @@ def iterate(
     start = rounds
     for rounds in range(start + 1, max_iter + 1):
         new = step(state, rounds)
-        if checkpoint:
+        if checkpoint and (
+            converged is not None
+            or rounds % FIXED_HORIZON_CHECKPOINT_EVERY == 0
+        ):
             # eager on purpose: several convergence callbacks probe with
             # partial-evaluation actions (isEmpty / limit-count), and a
             # LAZY localCheckpoint finalized by a partial job is the
             # classic missing-block hazard; the measured saving of
             # fusing materialize+probe was within box noise (r6)
             new = new.localCheckpoint()
-        fin = converged(state, new, rounds)
+        fin = (
+            converged(state, new, rounds)
+            if converged is not None
+            else rounds == max_iter
+        )
         if checkpoint_dir:
             new.write.mode("overwrite").parquet(
                 os.path.join(checkpoint_dir, f"round_{rounds:05d}")

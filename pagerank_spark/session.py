@@ -13,6 +13,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of the machine's RAM (``MemTotal`` in /proc/meminfo), in
+    whole GiB and at least 1g; 4g where /proc/meminfo is unreadable.
+
+    In local mode the driver JVM is the whole engine, so its heap must
+    fit the box it runs on — a fixed large default over-commits small
+    machines, where the OS kills the JVM instead of Spark spilling.
+    """
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, kib // (2 * 1024 * 1024))}g"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "pagerank-spark",
     master: str | None = None,
@@ -24,7 +43,8 @@ def get_spark(
     In production this is launched via ``spark-submit --py-files
     pagerank_spark.zip`` against a multi-executor cluster and ``master``
     is left to the submitter; locally it defaults to ``local[N]`` with
-    N from $SPARK_GRAFT_CPUS (default: all cores).
+    N from $SPARK_GRAFT_CPUS (default: all cores). The driver heap is
+    $SPARK_DRIVER_MEMORY, else half the machine's RAM.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and not os.environ.get("SPARK_MASTER"):
@@ -51,7 +71,9 @@ def get_spark(
         # (plans/metrics.py). SPARK_UI=false opts out for minimal runs.
         "spark.ui.enabled": os.environ.get("SPARK_UI", "true"),
         "spark.ui.showConsoleProgress": "false",
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
+        "spark.driver.memory": os.environ.get(
+            "SPARK_DRIVER_MEMORY", _default_driver_memory()
+        ),
     }
     if extra_conf:
         conf.update(extra_conf)

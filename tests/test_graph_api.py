@@ -6,8 +6,8 @@ from pagerank_spark import LinkGraph
 from pagerank_spark.testing import synth_corpus
 
 
-def test_linkgraph_from_snap(spark):
-    g = LinkGraph.from_snap(spark, "/root/reference/DEMO.txt", first_node=0)
+def test_linkgraph_from_snap(spark, demo_snap):
+    g = LinkGraph.from_snap(spark, demo_snap, first_node=0)
     assert g.n == 4
     res = g.pagerank(dangling="leak")
     assert res.iterations == 12

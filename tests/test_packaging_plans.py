@@ -226,8 +226,9 @@ def test_all_oracles_parse_in_duckdb():
 
 
 def test_iterate_harness_semantics(spark):
-    """Do-while, checkpointed rounds, convergence short-circuit, and the
-    max_iter warning of the generic BSP driver."""
+    """Do-while, checkpointed rounds, convergence short-circuit, the
+    max_iter warning and the fixed-horizon mode of the generic BSP
+    driver."""
     import warnings
 
     from pyspark.sql import functions as F
@@ -267,6 +268,19 @@ def test_iterate_harness_semantics(spark):
         max_iter=8,
     )
     assert len(_out2._jdf.queryExecution().optimizedPlan().toString()) < 2000
+
+    # fixed horizon (converged=None): exactly max_iter rounds, no probe,
+    # and the plan stays O(1) under the sparser checkpoint cadence
+    seen = []
+
+    def _count_step(s, r):
+        seen.append(r)
+        return s.select("id", (F.col("v") + 1).alias("v"))
+
+    out3, rounds, done = iterate(s0, _count_step, None, max_iter=8)
+    assert (rounds, done, seen) == (8, True, list(range(1, 9)))
+    assert tuple(out3.agg(F.min("v"), F.max("v")).first()) == (8, 8)
+    assert len(out3._jdf.queryExecution().optimizedPlan().toString()) < 2000
 
 
 def test_linkpred_and_cooccur_no_cartesian(spark):

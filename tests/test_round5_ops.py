@@ -409,6 +409,34 @@ def test_ppr_push_dangling_routes_to_seed(spark):
         assert math.isclose(got[v], rank, abs_tol=1e-6), (v, rank, got)
 
 
+def test_ppr_push_inactive_seed_runs_no_round(spark):
+    from pagerank_spark.operators.push import ppr_push
+
+    # eps_push >= 1: the seed's unit residual never exceeds its
+    # threshold, so no push round runs at all
+    res = ppr_push(_edf(spark, [(0, 1), (1, 0)]), seed=0, eps_push=1.0)
+    assert (res.rounds, res.converged) == (0, True)
+    assert [tuple(r) for r in res.estimates.collect()] == [(0, 0.0, 1.0)]
+
+
+def test_ppr_push_round_budget(spark):
+    from pagerank_spark.operators.push import ppr_push
+
+    # 2-cycle, alpha=0.5: the one active residual halves every round,
+    # so the frontier drains after a handful of rounds
+    e = _edf(spark, [(0, 1), (1, 0)])
+    full = ppr_push(e, seed=0, alpha=0.5, eps_push=0.1)
+    assert full.converged and full.rounds > 1
+    # the budget runs out with an active vertex left: not converged
+    cut = ppr_push(e, seed=0, alpha=0.5, eps_push=0.1,
+                   max_rounds=full.rounds - 1)
+    assert (cut.rounds, cut.converged) == (full.rounds - 1, False)
+    # the last allowed round drains the frontier: converged
+    exact = ppr_push(e, seed=0, alpha=0.5, eps_push=0.1,
+                     max_rounds=full.rounds)
+    assert (exact.rounds, exact.converged) == (full.rounds, True)
+
+
 def test_ppr_contributions_matches_exact_per_source(spark):
     from pagerank_spark.operators.push import ppr_contributions
     from pagerank_spark.operators.pagerank import pagerank

@@ -13,8 +13,8 @@ from pagerank_spark import (
 from pagerank_spark.testing import DEMO_EDGES, DEMO_GOLDEN, edges_df
 
 
-def test_read_snap_demo(spark):
-    edges, n, e = read_snap_edges(spark, "/root/reference/DEMO.txt", first_node=0)
+def test_read_snap_demo(spark, demo_snap):
+    edges, n, e = read_snap_edges(spark, demo_snap, first_node=0)
     assert (n, e) == (4, 8)
     got = sorted((r["src"], r["dst"]) for r in edges.collect())
     assert got == sorted(DEMO_EDGES)
@@ -28,16 +28,30 @@ def test_read_snap_one_indexed(spark, tmp_path):
     assert sorted((r["src"], r["dst"]) for r in edges.collect()) == [(0, 1), (1, 2)]
 
 
-def test_rete_loads_and_ranks(spark):
-    # F3: the reference's mid-size graph, 1-indexed (RETE.txt:3).
-    edges, n, e = read_snap_edges(spark, "/root/reference/RETE.txt", first_node=1)
-    assert (n, e) == (4039, 176468)
+def test_rete_loads_and_ranks(spark, tmp_path):
+    # stand-in for the reference's mid-size RETE.txt (ego-Facebook,
+    # 1-indexed, symmetric): a seeded symmetric graph written in the
+    # same 1-indexed SNAP layout — a ring (so no vertex dangles) plus
+    # random chords, every edge present in both directions
+    n = 500
+    rng = np.random.default_rng(3)
+    und = {(i, (i + 1) % n) for i in range(n)}
+    for u, v in rng.integers(0, n, size=(1500, 2)):
+        if u != v:
+            und.add((int(min(u, v)), int(max(u, v))))
+    pairs = sorted(und | {(v, u) for u, v in und})
+    p = tmp_path / "rete_standin.txt"
+    body = "\n".join(f"{u + 1} {v + 1}" for u, v in pairs)
+    p.write_text(f"# Nodes: {n} Edges: {len(pairs)}\n{body}")
+    edges, n_read, e = read_snap_edges(spark, str(p), first_node=1)
+    assert (n_read, e) == (n, len(pairs))
     assert edges.count() == e
+    assert sorted((r["src"], r["dst"]) for r in edges.collect()) == pairs
     res = pagerank(edges, n=n, dangling="leak")
     assert res.converged
     v = np.array([r["rank"] for r in res.ranks.collect()])
     assert len(v) == n and (v > 0).all()
-    # ego-Facebook is symmetric (no dangling): mass conserved even in leak mode
+    # symmetric (no dangling): mass conserved even in leak mode
     assert abs(v.sum() - 1.0) < 1e-6
 
 
