@@ -183,14 +183,13 @@ SCALE_ITERS = 6
 SCALE_PAIRS = [(2, 8), (1, 4), (8, 32)]  # primary (N, 4N), corroborating, saturation
 
 
-def _new_spark(cores: int, mem="48g"):
+def _new_spark(cores: int):
     from pagerank_spark.session import get_spark
 
     return get_spark(
         app_name=f"bench-{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=cores,
-        extra_conf={"spark.driver.memory": mem},
     )
 
 

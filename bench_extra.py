@@ -47,7 +47,6 @@ def main():
         app_name="bench-extra",
         master=f"local[{CPUS}]",
         shuffle_partitions=int(CPUS),
-        extra_conf={"spark.driver.memory": "48g"},
     )
     qs = entrymod.queries()
     out = {}

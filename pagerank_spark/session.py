@@ -4,13 +4,61 @@ Arrow on (every custom kernel is an Arrow/pandas UDF — zero per-row
 Python, per BASELINE.json input_hint), AQE on (runtime re-plan +
 skew-join splitting), shuffle partitions sized to the actual
 parallelism instead of the 200 default.
+
+Importing this module (``pagerank_spark/__init__.py`` imports it first)
+also guards ``zipimport.zipimporter.invalidate_caches`` so it re-reads
+an archive only when the archive changed on disk. Every Python task
+starts with ``importlib.invalidate_caches()``, and on CPython
+3.10-3.12 each zipimporter on ``sys.path`` then re-parses its whole
+archive directory; with ``pyspark.zip``, the py4j zip and the Spark
+core jar on a worker's path that is ~0.25 s per task. A kernel that
+references a module-level engine helper is pickled with that helper by
+reference, so a Python worker imports the package, and installs the
+guard, when it unpickles the first such kernel; kernels that close over
+NumPy/pyarrow only do not install it. CPython 3.13+ re-reads lazily,
+and the guard is inactive there.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _guard_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip an unchanged archive.
+
+    The guard keeps, per importer, the ``(st_mtime_ns, st_size)`` of
+    ``self.archive`` taken just before its last re-read, and calls the
+    original method only when that key changed or ``stat`` fails.
+    Idempotent; a no-op outside CPython 3.10-3.12.
+    """
+    if not (3, 10) <= sys.version_info < (3, 13):
+        return
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_guarded", False):
+        return
+
+    @functools.wraps(reread)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        if key is None or key != getattr(self, "_read_key", None):
+            reread(self)
+            self._read_key = key
+
+    invalidate_caches.stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_guard_zip_rereads()
 
 
 def _default_driver_memory() -> str:

@@ -3,6 +3,7 @@
 import numpy as np
 
 from pagerank_spark import (
+    connected_components,
     degrees,
     densify_ids,
     in_degrees,
@@ -53,6 +54,15 @@ def test_rete_loads_and_ranks(spark, tmp_path):
     assert len(v) == n and (v > 0).all()
     # symmetric (no dangling): mass conserved even in leak mode
     assert abs(v.sum() - 1.0) < 1e-6
+    # the ring makes it one component, labelled by its min id
+    comps = {r["component"] for r in connected_components(edges).collect()}
+    assert comps == {0}
+    # hubs on top: the top-ranked vertex is among the 5 highest-degree
+    # vertices (ties at the 5th degree count)
+    deg = np.bincount([u for u, _ in pairs], minlength=n)
+    ranked = {r["id"]: r["rank"] for r in res.ranks.collect()}
+    top = max(ranked, key=ranked.get)
+    assert deg[top] >= np.sort(deg)[-5]
 
 
 def test_degrees_duplicates_counted(spark):
