@@ -12,9 +12,8 @@ import pytest
 from pagerank_spark import session
 from pagerank_spark.operators.pagerank import _load_vec
 
-GUARD_ACTIVE = (3, 10) <= sys.version_info < (3, 13)
 needs_guard = pytest.mark.skipif(
-    not GUARD_ACTIVE,
+    not (3, 10) <= sys.version_info < (3, 13),
     reason="CPython 3.13+ re-reads zip archives lazily; the guard is inactive",
 )
 
