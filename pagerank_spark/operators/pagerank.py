@@ -21,7 +21,9 @@ Semantics replicated from the serial C reference (all citations into
   sum(ranks) == 1 (the production behavior mandated by
   BASELINE.json.north_star).
 
-Two physical strategies (chosen by ``mode``):
+Three physical strategies (chosen by ``mode``). Local and blocks share
+one driver power loop (``_power_loop``) and differ only in where the
+gather runs; join keeps ranks distributed on ``plans.iterate``:
 
 - **broadcast / blocks** (default when n fits a driver/executor
   vector): the rank vector lives as a NumPy fp64 array broadcast per
@@ -39,9 +41,9 @@ Two physical strategies (chosen by ``mode``):
   bridge); the driver collects O(n) partials, applies teleport +
   dangling mass, and computes the L1 residual in NumPy. This is the
   "salted, hash-partitioned CSR-style block partitions ... held in
-  Arrow buffers" design of the north_star. Measured on this box
-  (20M edges): ~0.8s/iter at 32 cores vs ~2.8s at 8 cores — scaling
-  efficiency ~0.9 from N to 4N cores.
+  Arrow buffers" design of the north_star. Measured in round 6 on a
+  32-core box (20M edges): ~0.8s/iter at 32 cores vs ~2.8s at 8 cores
+  — scaling efficiency ~0.9 from N to 4N cores.
 
 - **local** (tiny graphs): below ~2M edges per-iteration job
   scheduling dwarfs compute, so ``auto`` collects the edge list once
@@ -328,7 +330,7 @@ def pagerank(
 
 
 # --------------------------------------------------------------------------
-# driver-local strategy (tiny graphs: one collect, NumPy loop)
+# the driver power loop shared by the local and block strategies
 # --------------------------------------------------------------------------
 
 def _init_rank(n: int, personalize) -> np.ndarray:
@@ -348,11 +350,77 @@ def _base_vec(n, d, dm, personalize) -> np.ndarray:
     return base
 
 
+def _power_loop(
+    spark, n, d, eps, dangling, max_iter, checkpoint_dir, resume, personalize,
+    init_vec, dangling_mask, lineage, gather, assign=False,
+):
+    """The reference's do-while (``Page_Rank_SERIAL.c:206-279``) with the
+    rank vector on the driver: init or warm start, resume, dangling
+    mass, teleport base, combine, global L1 residual, metrics row,
+    checkpoint, stop test. Strategies differ only in where the gather
+    runs: ``gather(rank, iteration, base)`` returns ``(dst, values,
+    shuffle_bytes)``, and ``values`` are added onto the base vector — or
+    assigned when ``assign`` (block-Jacobi values, complete per dst).
+    """
+    rank = init_vec.copy() if init_vec is not None else _init_rank(n, personalize)
+    start_iter = 0
+    metrics: list[dict] = []
+    if resume and checkpoint_dir:
+        state = _load_checkpoint(checkpoint_dir)
+        if state is not None:
+            rank, start_iter, metrics = state
+    teleport = (1.0 - d) / n
+    it, residual, converged = start_iter, float("inf"), False
+    while True:
+        t0 = time.monotonic()
+        dm = float(rank[dangling_mask].sum()) if dangling == "redistribute" else 0.0
+        base = teleport + d * dm / n
+        dst, values, shuffle_bytes = gather(rank, it + 1, base)
+        if personalize is None:
+            new = np.full(n, base, dtype=np.float64)
+        else:
+            # gathers emit pure contribution partials, so the personalized
+            # teleport base is applied driver-side at O(|S|)
+            new = _base_vec(n, d, dm, personalize)
+        if len(dst):
+            if assign:
+                new[dst] = values
+            else:
+                np.add.at(new, dst, values)  # gather-sum (O10)
+        residual = float(np.abs(new - rank).sum())  # global L1
+        rank = new
+        it += 1
+        metrics.append(
+            # One metric schema for every strategy (a resumed checkpoint
+            # may interleave modes in one metrics list, so consumers can
+            # index a fixed schema).
+            {"iteration": it, "residual": residual,
+             "seconds": time.monotonic() - t0,
+             "edges_scanned": lineage["edge_count"], **shuffle_bytes,
+             "skew_ratio": lineage["skew_ratio"]}
+        )
+        if checkpoint_dir:
+            _save_checkpoint(checkpoint_dir, rank, it, metrics, lineage)
+        if residual <= eps:  # do-while: >=1 iteration always ran
+            converged = True
+            break
+        if max_iter is not None and it - start_iter >= max_iter:
+            break
+    ranks_df = spark.createDataFrame(
+        pa.table({"id": pa.array(np.arange(n, dtype=np.int64)),
+                  "rank": pa.array(rank)})
+    )
+    return PageRankResult(ranks_df, it, converged, residual, metrics, lineage)
+
+
+# --------------------------------------------------------------------------
+# driver-local strategy (tiny graphs: one collect, NumPy gather)
+# --------------------------------------------------------------------------
+
 def _pagerank_local(
     edges, n, d, eps, dangling, max_iter, checkpoint_dir, resume,
     weight_col=None, personalize=None, init_vec=None,
 ):
-    spark = edges.sparkSession
     cols = [F.col("src").cast("long"), F.col("dst").cast("long")]
     if weight_col:
         cols.append(F.col(weight_col).cast("double").alias("_w"))
@@ -369,58 +437,21 @@ def _pagerank_local(
         )
     ew = pdf["_w"].to_numpy() if weight_col else np.ones(len(src))
     strength = np.bincount(src, weights=ew, minlength=n)[:n].astype(np.float64)
-    dangling_mask = strength == 0.0
     with np.errstate(divide="ignore", invalid="ignore"):
         w_edge = d * ew / strength[src]  # defined: strength[src] > 0 per edge
-
-    rank = init_vec.copy() if init_vec is not None else _init_rank(n, personalize)
-    start_iter = 0
-    metrics: list[dict] = []
-    if resume and checkpoint_dir:
-        state = _load_checkpoint(checkpoint_dir)
-        if state is not None:
-            rank, start_iter, metrics = state
     lineage = {"num_partitions": 1, "edge_count": len(src), "mode": "local",
                "skew_ratio": 1.0}
-    teleport = (1.0 - d) / n
-    it, residual, converged = start_iter, float("inf"), False
-    while True:
-        t0 = time.monotonic()
-        dm = float(rank[dangling_mask].sum()) if dangling == "redistribute" else 0.0
-        if personalize is None:
-            new = np.full(n, teleport + d * dm / n, dtype=np.float64)
-        else:
-            new = _base_vec(n, d, dm, personalize)
-        np.add.at(new, dst, w_edge * rank[src])  # gather-sum (O10)
-        residual = float(np.abs(new - rank).sum())
-        rank = new
-        it += 1
-        metrics.append(
-            # Same metric keys as the distributed strategies (a resumed
-            # checkpoint may interleave modes in one metrics list, so
-            # consumers can index a fixed schema): local mode provably
-            # moves zero shuffle bytes — the loop runs on the driver.
-            {"iteration": it, "residual": residual,
-             "seconds": time.monotonic() - t0, "edges_scanned": len(src),
-             "shuffle_read_bytes": 0, "shuffle_write_bytes": 0,
-             "skew_ratio": 1.0}
-        )
-        if checkpoint_dir:
-            _save_checkpoint(checkpoint_dir, rank, it, metrics, lineage)
-        if residual <= eps:
-            converged = True
-            break
-        if max_iter is not None and it - start_iter >= max_iter:
-            break
-    ranks_df = spark.createDataFrame(
-        pa.table({"id": pa.array(np.arange(n, dtype=np.int64)),
-                  "rank": pa.array(rank)})
+    # the loop runs on the driver: provably zero shuffle bytes
+    no_shuffle = {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0}
+    return _power_loop(
+        edges.sparkSession, n, d, eps, dangling, max_iter, checkpoint_dir,
+        resume, personalize, init_vec, strength == 0.0, lineage,
+        lambda rank, _it, _base: (dst, w_edge * rank[src], no_shuffle),
     )
-    return PageRankResult(ranks_df, it, converged, residual, metrics, lineage)
 
 
 # --------------------------------------------------------------------------
-# broadcast-rank strategy
+# block-store strategy (broadcast rank vector, Arrow CSR blocks)
 # --------------------------------------------------------------------------
 
 def _block_build_kernel(block_dir: str, strength_path: str):
@@ -457,7 +488,7 @@ def _block_build_kernel(block_dir: str, strength_path: str):
         # Per-edge factor d*w/strength(src), loop-invariant
         # (Page_Rank_SERIAL.c:168-180): baked into the block so each
         # iteration needs only ONE random gather (rank[src]).
-        strength = _load_weights(strength_path)
+        strength = _load_vec(strength_path, None)
         wfac = ew * strength[src]  # strength file holds d/strength
         # pos: index of src within this block's own dst set (-1 if the
         # source vertex is external) — enables block-Jacobi local
@@ -527,38 +558,33 @@ def _load_vec(path: str, version) -> np.ndarray:
     return _VEC_CACHE["vec"]
 
 
-_WEIGHT_CACHE: dict = {}
-
-
-def _load_weights(path: str) -> np.ndarray:
-    if _WEIGHT_CACHE.get("key") != path:
-        _WEIGHT_CACHE["key"] = path
-        _WEIGHT_CACHE["vec"] = np.load(path)
-    return _WEIGHT_CACHE["vec"]
-
-
-def _block_jacobi_kernel(
-    block_dir: str, rank_path: str, iteration: int, k: int, base: float,
-    expected_pids: frozenset,
+def _block_kernel(
+    block_dir: str, rank_path: str, iteration: int, expected_pids: frozenset,
+    k: int = 1, base: float = 0.0,
 ):
-    """O18: k block-Jacobi sub-iterations per global sync
-    (``Page_Rank_improved.c:404-468``'s phase-2, generalized). Each
-    block updates the ranks of ITS OWN destinations k times, reading
-    locally-updated values for intra-block sources and the stale global
-    vector for cross-block sources — exactly the reference's
-    communication-free local phase. Yields VALUES (complete per dst:
-    requires unsalted blocks), not partials. An approximation knob:
-    the fixpoint is the same linear system, but the trajectory (and the
-    teleport/dangling base, frozen at ``base`` during sub-iterations)
-    differs from exact power iteration.
+    """Per-iteration gather over materialized blocks: memory-map the
+    Arrow file (zero-copy), gather wfac*rank[src] from the replicated
+    vector, one bincount per block — the NumPy analogue of the
+    reference's per-adjacency-list accumulate
+    (``Page_Rank_SERIAL.c:228-240``), at zero per-iteration edge
+    movement through the JVM<->Python bridge. With ``k == 1`` it yields
+    per-destination contribution PARTIALS.
 
-    When it helps: blocks that are internally clustered (community-
-    partitioned graphs) — intra-block relaxation then does real work
-    per sync. On hash-partitioned graphs most in-edges are cross-block
-    and stale, so extra inner iterations can even slow OUTER
-    convergence; this mirrors why the reference gates its local phase
-    behind a coarse global phase (``Page_Rank_improved.c:368`` eps 1e-3
-    first, local refinement after). Off (k=1) by default.
+    With ``k > 1`` (O18) it runs k block-Jacobi sub-iterations per
+    global sync (``Page_Rank_improved.c:404-468``'s phase 2,
+    generalized): each block updates the ranks of ITS OWN destinations
+    k times, reading locally-updated values for intra-block sources and
+    the stale global vector for cross-block sources — the reference's
+    communication-free local phase. It yields VALUES (complete per dst:
+    requires unsalted blocks), not partials. An approximation knob: the
+    fixpoint is the same linear system, but the trajectory (and the
+    teleport/dangling base, frozen at ``base`` during sub-iterations)
+    differs from exact power iteration. It helps on internally
+    clustered (community-partitioned) blocks; on hash-partitioned
+    graphs most in-edges are cross-block and stale, so extra inner
+    iterations can even slow OUTER convergence — why the reference
+    gates its local phase behind a coarse global phase
+    (``Page_Rank_improved.c:368`` eps 1e-3 first). Off (k=1) by default.
     """
 
     def kernel(batches):
@@ -581,70 +607,28 @@ def _block_jacobi_kernel(
                     src = tbl.column("src").to_numpy(zero_copy_only=False)
                     inv = tbl.column("inv").to_numpy(zero_copy_only=False)
                     wfac = tbl.column("wfac").to_numpy(zero_copy_only=False)
-                    pos = tbl.column("pos").to_numpy(zero_copy_only=False)
                     uniq = (
                         pa.ipc.open_file(mu)
                         .read_all()
                         .column("uniq")
                         .to_numpy(zero_copy_only=False)
                     )
-                    vals = r[src].astype(np.float64)
-                    local_mask = pos >= 0
-                    lpos = pos[local_mask]
-                    for _ in range(k):
-                        new_local = base + np.bincount(
-                            inv, weights=wfac * vals, minlength=len(uniq)
+                    if k == 1:
+                        out = np.bincount(
+                            inv, weights=wfac * r[src], minlength=len(uniq)
                         )
-                        vals[local_mask] = new_local[lpos]
-                    cur = new_local
+                    else:
+                        pos = tbl.column("pos").to_numpy(zero_copy_only=False)
+                        vals = r[src].astype(np.float64)
+                        local_mask = pos >= 0
+                        lpos = pos[local_mask]
+                        for _ in range(k):
+                            out = base + np.bincount(
+                                inv, weights=wfac * vals, minlength=len(uniq)
+                            )
+                            vals[local_mask] = out[lpos]
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(uniq), pa.array(cur)], ["dst", "s"]
-                )
-
-    return kernel
-
-
-def _block_spmv_kernel(
-    block_dir: str, rank_path: str, iteration: int, expected_pids: frozenset
-):
-    """Per-iteration SpMV over materialized blocks: memory-map the
-    Arrow file (zero-copy), gather w[src]*rank[src] from the replicated
-    vectors, one bincount per block. The NumPy analogue of the
-    reference's per-adjacency-list accumulate
-    (``Page_Rank_SERIAL.c:228-240``), at zero per-iteration edge
-    movement through the JVM<->Python bridge.
-    """
-
-    def kernel(batches):
-        r = _load_vec(rank_path, iteration)
-        for batch in batches:
-            for pid in batch.column("pid").to_pylist():
-                path = os.path.join(block_dir, f"block_{pid:05d}.arrow")
-                if not os.path.exists(path):
-                    if pid in expected_pids:
-                        raise FileNotFoundError(
-                            f"block store incomplete: {path} is listed in "
-                            "the manifest but missing on disk — rebuild "
-                            "(resume=False) or restore the block files"
-                        )
-                    continue  # empty partition produced no block
-                with pa.memory_map(path, "r") as mm, pa.memory_map(
-                    path.replace(".arrow", ".uniq.arrow"), "r"
-                ) as mu:
-                    tbl = pa.ipc.open_file(mm).read_all()
-                    src = tbl.column("src").to_numpy(zero_copy_only=False)
-                    inv = tbl.column("inv").to_numpy(zero_copy_only=False)
-                    wfac = tbl.column("wfac").to_numpy(zero_copy_only=False)
-                    uniq = (
-                        pa.ipc.open_file(mu)
-                        .read_all()
-                        .column("uniq")
-                        .to_numpy(zero_copy_only=False)
-                    )
-                    contrib = wfac * r[src]
-                    sums = np.bincount(inv, weights=contrib, minlength=len(uniq))
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(uniq), pa.array(sums)], ["dst", "s"]
+                    [pa.array(uniq), pa.array(out)], ["dst", "s"]
                 )
 
     return kernel
@@ -700,215 +684,168 @@ def _pagerank_broadcast(
 
     manifest_path = os.path.join(block_dir, "blocks_manifest.json")
     lineage = None
-    if resume and os.path.exists(manifest_path) and os.path.exists(mask_path):
-        with open(manifest_path) as f:
-            lineage = json.load(f)
-        if local_iters > 1 and lineage.get("salted_dsts", 0) > 0:
-            raise ValueError(
-                "cannot resume with local_iters > 1 from salted blocks"
-            )
-        # wfac is baked into the blocks and the dangling mask persisted:
-        # a resume touches the input edge table ZERO times.
-        dangling_mask = np.load(mask_path).astype(bool)
-    if lineage is None:
-        # Out-strength vector (duplicates counted; = out-degree when
-        # unweighted). One shuffle, n-bounded.
-        str_agg = (
-            F.sum(F.col(weight_col).cast("double"))
-            if weight_col
-            else F.count(F.lit(1))
-        )
-        deg_pdf = edges.groupBy("src").agg(str_agg.alias("c")).toPandas()
-        out_deg = np.zeros(n, dtype=np.float64)
-        out_deg[deg_pdf["src"].to_numpy()] = deg_pdf["c"].to_numpy()
-        dangling_mask = out_deg == 0.0
-        weights = np.zeros(n, dtype=np.float64)
-        nz = ~dangling_mask
-        weights[nz] = d / out_deg[nz]  # d/strength, once, before the loop
-        # Replicated d/strength vector (loop-invariant,
-        # Page_Rank_SERIAL.c:168-180); the block build bakes it into the
-        # per-edge wfac column. block_dir is executor-reachable by
-        # construction (local scratch here, shared FS on a cluster).
-        _atomic_np_save(strength_path, weights)
-        _atomic_np_save(mask_path, dangling_mask.astype(np.uint8))
-        # Building fresh: stale blocks from any earlier run sharing this
-        # dir would otherwise be silently summed in (their pids may not
-        # be overwritten when the new graph leaves partitions empty).
-        for fn in os.listdir(block_dir):
-            if fn.startswith("block_") and fn.endswith(".arrow"):
-                os.unlink(os.path.join(block_dir, fn))
-        # Skew-aware partition key: destinations with more in-edges than
-        # a whole average partition get salted across SALT sub-keys by
-        # src, bounding the largest block. Partial sums for a salted dst
-        # land in several blocks; the driver's np.add.at recombines them
-        # exactly (summation stays keyed by true dst).
-        if e_count is None:
-            e_count = edges.count()
-        thresh = salt_threshold if salt_threshold is not None else max(
-            e_count // max(P, 1), 1_000
-        )
-        if local_iters > 1:
-            # Block-Jacobi needs each dst's full in-adjacency in ONE
-            # block (it emits values, not partials) — salting off.
-            heavy = []
-        else:
-            heavy = [
-                int(r["dst"])
-                for r in edges.groupBy("dst")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .where(F.col("c") > thresh)
-                .collect()
-            ]
-        salt_fanout = min(P, 16)
-        if heavy:
-            pk = F.when(
-                F.col("dst").isin(heavy),
-                F.xxhash64("dst", F.pmod(F.col("src"), F.lit(salt_fanout))),
-            ).otherwise(F.xxhash64("dst"))
-        else:
-            pk = F.xxhash64("dst")
-        sel = [F.col("src").cast("long"), F.col("dst").cast("long")]
-        if weight_col:
-            sel.append(F.col(weight_col).cast("double").alias("_w"))
-        prepared = edges.select(*sel).repartition(P, pk)
-        man_rows = prepared.mapInArrow(
-            _block_build_kernel(block_dir, strength_path),
-            "pid int, n_edges long, n_uniq long, n_bytes long",
-        ).collect()
-        part_sizes = {int(r["pid"]): int(r["n_edges"]) for r in man_rows}
-        sizes = np.array(list(part_sizes.values()) or [0], dtype=np.float64)
-        skew_ratio = float(sizes.max() / sizes.mean()) if sizes.sum() else 1.0
-        lineage = {
-            "num_partitions": P,
-            "partition_edge_counts": part_sizes,
-            "partition_uniq_counts": {
-                int(r["pid"]): int(r["n_uniq"]) for r in man_rows
-            },
-            "partition_block_bytes": {
-                int(r["pid"]): int(r["n_bytes"]) for r in man_rows
-            },
-            "salted_dsts": len(heavy),
-            "salt_fanout": salt_fanout if heavy else 1,
-            "skew_ratio": skew_ratio,
-            "edge_count": e_count,
-            "block_dir": block_dir,
-            "n": n,
-            "d": d,
-        }
-        with open(manifest_path, "w") as f:
-            json.dump(lineage, f)
-    if lineage.get("n") not in (None, n) or lineage.get("d") not in (None, d):
-        raise ValueError(
-            f"block store was built for n={lineage.get('n')}, "
-            f"d={lineage.get('d')} — cannot resume with n={n}, d={d} "
-            "(wfac is baked into the blocks); rebuild with resume=False"
-        )
-    edge_count = lineage["edge_count"]
-    skew_ratio = lineage["skew_ratio"]
-    # pids that actually own a block; iteration kernels FAIL FAST if one
-    # of these is missing on disk instead of silently dropping its edges.
-    expected_pids = frozenset(
-        int(p) for p in lineage["partition_edge_counts"]
-    )
-
-    # Tiny driver frame: exactly one partition per block id (range with
-    # numPartitions=P places id i in partition i — a hash repartition
-    # would leave ~1/e of tasks empty and pile blocks onto others).
-    pids = (
-        spark.range(0, lineage["num_partitions"], 1, lineage["num_partitions"])
-        .select(F.col("id").cast("int").alias("pid"))
-        .persist()
-    )
-    pids.count()
-
-    rank = init_vec.copy() if init_vec is not None else _init_rank(n, personalize)
-    start_iter = 0
-    metrics: list[dict] = []
-    if resume and checkpoint_dir:
-        state = _load_checkpoint(checkpoint_dir)
-        if state is not None:
-            rank, start_iter, metrics = state
-
-    teleport = (1.0 - d) / n
-    it = start_iter
-    residual = float("inf")
-    converged = False
-    # settled: the status store is fed asynchronously — an unsettled
-    # baseline could attribute late-posted PREPARE stages to iteration 1
-    # and break the measured zero-shuffle-per-iteration claim
-    shuffle_before = _shuffle_totals_settled(spark)
-    while True:
-        t0 = time.monotonic()
-        _atomic_np_save(rank_path, rank)
-        dm = float(rank[dangling_mask].sum()) if dangling == "redistribute" else 0.0
-        base = teleport + d * dm / n
-        if local_iters > 1:
-            kern = _block_jacobi_kernel(
-                block_dir, rank_path, it + 1, local_iters, base, expected_pids
-            )
-        else:
-            kern = _block_spmv_kernel(
-                block_dir, rank_path, it + 1, expected_pids
-            )
-        parts = pids.mapInArrow(kern, "dst long, s double").toPandas()
-        if personalize is None:
-            new = np.full(n, base, dtype=np.float64)
-        else:
-            # SpMV kernels emit pure contribution partials, so the
-            # personalized teleport base is applied driver-side at O(|S|)
-            new = _base_vec(n, d, dm, personalize)
-        if len(parts):
-            if local_iters > 1:
-                # values, complete per dst (unsalted) — plain assignment
-                new[parts["dst"].to_numpy()] = parts["s"].to_numpy()
-            else:
-                np.add.at(
-                    new, parts["dst"].to_numpy(), parts["s"].to_numpy()
+    pids = None
+    try:
+        if resume and os.path.exists(manifest_path) and os.path.exists(mask_path):
+            with open(manifest_path) as f:
+                lineage = json.load(f)
+            if local_iters > 1 and lineage.get("salted_dsts", 0) > 0:
+                raise ValueError(
+                    "cannot resume with local_iters > 1 from salted blocks"
                 )
-        residual = float(np.abs(new - rank).sum())  # global L1
-        rank = new
-        it += 1
-        shuffle_after = _shuffle_totals(spark)
-        metrics.append(
-            {
-                "iteration": it,
-                "residual": residual,
-                "seconds": time.monotonic() - t0,
-                "edges_scanned": edge_count,
-                # zero-shuffle iterations by design (blocks are mmapped
-                # executor-local Arrow files); the MEASURED bytes from
-                # the monitoring API prove it rather than assert it.
-                **_shuffle_delta(shuffle_before, shuffle_after),
+            # wfac is baked into the blocks and the dangling mask persisted:
+            # a resume touches the input edge table ZERO times.
+            dangling_mask = np.load(mask_path).astype(bool)
+        if lineage is None:
+            # Out-strength vector (duplicates counted; = out-degree when
+            # unweighted). One shuffle, n-bounded.
+            str_agg = (
+                F.sum(F.col(weight_col).cast("double"))
+                if weight_col
+                else F.count(F.lit(1))
+            )
+            deg_pdf = edges.groupBy("src").agg(str_agg.alias("c")).toPandas()
+            out_deg = np.zeros(n, dtype=np.float64)
+            out_deg[deg_pdf["src"].to_numpy()] = deg_pdf["c"].to_numpy()
+            dangling_mask = out_deg == 0.0
+            weights = np.zeros(n, dtype=np.float64)
+            nz = ~dangling_mask
+            weights[nz] = d / out_deg[nz]  # d/strength, once, before the loop
+            # Replicated d/strength vector (loop-invariant,
+            # Page_Rank_SERIAL.c:168-180); the block build bakes it into the
+            # per-edge wfac column. block_dir is executor-reachable by
+            # construction (local scratch here, shared FS on a cluster).
+            _atomic_np_save(strength_path, weights)
+            _atomic_np_save(mask_path, dangling_mask.astype(np.uint8))
+            # Building fresh: stale blocks from any earlier run sharing this
+            # dir would otherwise be silently summed in (their pids may not
+            # be overwritten when the new graph leaves partitions empty).
+            for fn in os.listdir(block_dir):
+                if fn.startswith("block_") and fn.endswith(".arrow"):
+                    os.unlink(os.path.join(block_dir, fn))
+            # Skew-aware partition key: destinations with more in-edges than
+            # a whole average partition get salted across SALT sub-keys by
+            # src, bounding the largest block. Partial sums for a salted dst
+            # land in several blocks; the driver's np.add.at recombines them
+            # exactly (summation stays keyed by true dst).
+            if e_count is None:
+                e_count = edges.count()
+            thresh = salt_threshold if salt_threshold is not None else max(
+                e_count // max(P, 1), 1_000
+            )
+            if local_iters > 1:
+                # Block-Jacobi needs each dst's full in-adjacency in ONE
+                # block (it emits values, not partials) — salting off.
+                heavy = []
+            else:
+                heavy = [
+                    int(r["dst"])
+                    for r in edges.groupBy("dst")
+                    .agg(F.count(F.lit(1)).alias("c"))
+                    .where(F.col("c") > thresh)
+                    .collect()
+                ]
+            salt_fanout = min(P, 16)
+            if heavy:
+                pk = F.when(
+                    F.col("dst").isin(heavy),
+                    F.xxhash64("dst", F.pmod(F.col("src"), F.lit(salt_fanout))),
+                ).otherwise(F.xxhash64("dst"))
+            else:
+                pk = F.xxhash64("dst")
+            sel = [F.col("src").cast("long"), F.col("dst").cast("long")]
+            if weight_col:
+                sel.append(F.col(weight_col).cast("double").alias("_w"))
+            prepared = edges.select(*sel).repartition(P, pk)
+            man_rows = prepared.mapInArrow(
+                _block_build_kernel(block_dir, strength_path),
+                "pid int, n_edges long, n_uniq long, n_bytes long",
+            ).collect()
+            part_sizes = {int(r["pid"]): int(r["n_edges"]) for r in man_rows}
+            sizes = np.array(list(part_sizes.values()) or [0], dtype=np.float64)
+            skew_ratio = float(sizes.max() / sizes.mean()) if sizes.sum() else 1.0
+            lineage = {
+                "num_partitions": P,
+                "partition_edge_counts": part_sizes,
+                "partition_uniq_counts": {
+                    int(r["pid"]): int(r["n_uniq"]) for r in man_rows
+                },
+                "partition_block_bytes": {
+                    int(r["pid"]): int(r["n_bytes"]) for r in man_rows
+                },
+                "salted_dsts": len(heavy),
+                "salt_fanout": salt_fanout if heavy else 1,
                 "skew_ratio": skew_ratio,
+                "edge_count": e_count,
+                "block_dir": block_dir,
+                "n": n,
+                "d": d,
             }
+            with open(manifest_path, "w") as f:
+                json.dump(lineage, f)
+        if lineage.get("n") not in (None, n) or lineage.get("d") not in (None, d):
+            raise ValueError(
+                f"block store was built for n={lineage.get('n')}, "
+                f"d={lineage.get('d')} — cannot resume with n={n}, d={d} "
+                "(wfac is baked into the blocks); rebuild with resume=False"
+            )
+        # pids that actually own a block; the iteration kernel FAILS FAST if
+        # one of these is missing on disk instead of silently dropping its edges.
+        expected_pids = frozenset(
+            int(p) for p in lineage["partition_edge_counts"]
         )
-        shuffle_before = shuffle_after
-        if checkpoint_dir:
-            _save_checkpoint(checkpoint_dir, rank, it, metrics, lineage)
-        if residual <= eps:  # do-while: >=1 iteration always ran
-            converged = True
-            break
-        if max_iter is not None and it - start_iter >= max_iter:
-            break
 
-    pids.unpersist()
-    if owns_block_dir:
-        import shutil
+        # Tiny driver frame: exactly one partition per block id (range with
+        # numPartitions=P places id i in partition i — a hash repartition
+        # would leave ~1/e of tasks empty and pile blocks onto others).
+        pids = (
+            spark.range(0, lineage["num_partitions"], 1, lineage["num_partitions"])
+            .select(F.col("id").cast("int").alias("pid"))
+            .persist()
+        )
+        pids.count()
+        # settled: the status store is fed asynchronously — an unsettled
+        # baseline could attribute late-posted PREPARE stages to iteration 1
+        # and break the measured zero-shuffle-per-iteration claim
+        shuffle_before = _shuffle_totals_settled(spark)
 
-        shutil.rmtree(block_dir, ignore_errors=True)
-    else:
-        # shared/caller-owned dir: clean up THIS run's vector files so
-        # repeated runs don't accumulate ~16MB .npy files per run
-        for p in (strength_path, rank_path):
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-    ranks_df = spark.createDataFrame(
-        pa.table({"id": pa.array(np.arange(n, dtype=np.int64)),
-                  "rank": pa.array(rank)})
-    )
-    return PageRankResult(ranks_df, it, converged, residual, metrics, lineage)
+        def gather(rank, iteration, base):
+            nonlocal shuffle_before
+            _atomic_np_save(rank_path, rank)
+            kern = _block_kernel(
+                block_dir, rank_path, iteration, expected_pids, local_iters, base
+            )
+            parts = pids.mapInArrow(kern, "dst long, s double").toPandas()
+            # zero-shuffle iterations by design (blocks are mmapped
+            # executor-local Arrow files); the MEASURED bytes from
+            # the monitoring API prove it rather than assert it.
+            shuffle_after = _shuffle_totals(spark)
+            delta = _shuffle_delta(shuffle_before, shuffle_after)
+            shuffle_before = shuffle_after
+            return parts["dst"].to_numpy(), parts["s"].to_numpy(), delta
+
+        return _power_loop(
+            spark, n, d, eps, dangling, max_iter, checkpoint_dir, resume,
+            personalize, init_vec, dangling_mask, lineage, gather,
+            assign=local_iters > 1,
+        )
+    finally:
+        # on success AND on failure: a raised iteration must not leak
+        # the cached pid frame or this run's scratch
+        if pids is not None:
+            pids.unpersist()
+        if owns_block_dir:
+            import shutil
+
+            shutil.rmtree(block_dir, ignore_errors=True)
+        else:
+            # shared/caller-owned dir: clean up THIS run's vector files so
+            # repeated runs don't accumulate ~16MB .npy files per run
+            for p in (strength_path, rank_path):
+                try:
+                    os.unlink(p)
+                except OSError:
+                    pass
 
 
 # --------------------------------------------------------------------------

@@ -386,3 +386,75 @@ def test_warm_start_matches_cold_run_all_modes(spark):
     bad = spark.createDataFrame([(9999, 1.0)], "id long, rank double")
     with pytest.raises(ValueError):
         pagerank(e, n=499, mode="broadcast", init_ranks=bad)
+
+
+def test_failed_block_run_removes_its_scratch(spark, monkeypatch):
+    """A block run that raises mid-iteration still removes the block dir
+    it created."""
+    import glob
+    import importlib
+    import os
+    import tempfile
+
+    pr_mod = importlib.import_module("pagerank_spark.operators.pagerank")
+
+    def boom(_spark):
+        raise RuntimeError("injected iteration failure")
+
+    pattern = os.path.join(tempfile.gettempdir(), "pagerank_blocks_*")
+    before = set(glob.glob(pattern))
+    e = synth_edges(spark, n=300, e=3000, seed=9)
+    monkeypatch.setattr(pr_mod, "_shuffle_totals", boom)
+    with pytest.raises(RuntimeError, match="injected iteration failure"):
+        pagerank(e, n=300, mode="blocks")
+    assert set(glob.glob(pattern)) <= before
+
+
+@pytest.mark.parametrize("local_iters", [1, 4])
+def test_resume_with_missing_block_fails_fast(spark, tmp_path, local_iters):
+    """Both kernel paths (partials and block-Jacobi values) refuse to
+    drop the edges of a block the manifest lists but the disk lacks."""
+    import json
+    import os
+
+    e = synth_edges(spark, n=300, e=3000, seed=9)
+    ck = str(tmp_path / "ck")
+    pagerank(
+        e, n=300, mode="blocks", local_iters=local_iters, max_iter=1,
+        checkpoint_dir=ck,
+    )
+    bd = os.path.join(ck, "blocks")
+    with open(os.path.join(bd, "blocks_manifest.json")) as f:
+        pid = int(next(iter(json.load(f)["partition_edge_counts"])))
+    os.unlink(os.path.join(bd, f"block_{pid:05d}.arrow"))
+    with pytest.raises(Exception, match="block store incomplete"):
+        pagerank(
+            e, n=300, mode="blocks", local_iters=local_iters,
+            checkpoint_dir=ck, resume=True,
+        )
+
+
+def test_cross_strategy_resume_and_one_metric_schema(spark, tmp_path):
+    """A local checkpoint resumes under the block strategy on the same
+    trajectory, the resumed metrics list runs 1..k without a gap, and
+    local, blocks and join emit one metric schema."""
+    e = synth_edges(spark, n=300, e=3000, seed=9).cache()
+    full = pagerank(e, n=300, mode="local")
+    ck = str(tmp_path / "ck")
+    part = pagerank(e, n=300, mode="local", max_iter=3, checkpoint_dir=ck)
+    assert not part.converged and part.iterations == 3
+    resumed = pagerank(e, n=300, mode="blocks", checkpoint_dir=ck, resume=True)
+    assert resumed.converged
+    assert resumed.iterations == full.iterations == 8
+    np.testing.assert_allclose(
+        ranks_vec(resumed, 300), ranks_vec(full, 300), rtol=0, atol=1e-12
+    )
+    assert [m["iteration"] for m in resumed.metrics] == list(
+        range(1, resumed.iterations + 1)
+    )
+    join = pagerank(e, n=300, mode="join", max_iter=2)
+    schemas = {
+        frozenset(m) for r in (full, resumed, join) for m in r.metrics
+    }
+    assert len(schemas) == 1
+    e.unpersist()
