@@ -49,12 +49,42 @@ class LinkGraph:
     def from_corpus(cls, corpus: DataFrame) -> "LinkGraph":
         """Corpus table (repo, path, commit, lang, content) -> weighted
         dense repo graph, keeping the id mapping for result joins."""
+        return cls._densified(derive_edges(corpus))
+
+    @classmethod
+    def from_cooccurrence(
+        cls,
+        df: DataFrame,
+        key_col: str,
+        item_col: str,
+        min_count: int = 1,
+        max_items_per_key: int = 1000,
+        weighting: str = "count",
+    ) -> "LinkGraph":
+        """Any ``(key, item)`` relation → weighted dense item graph
+        (market-basket, co-change, shared-contributor …) ready for the
+        whole algorithm surface, with the original-id mapping kept for
+        ``with_original_ids``. Same plumbing as ``from_corpus``."""
+        from pagerank_spark.operators.cooccur import cooccurrence_graph
+
+        return cls._densified(
+            cooccurrence_graph(
+                df, key_col, item_col, min_count, max_items_per_key,
+                weighting=weighting,
+            )
+        )
+
+    @classmethod
+    def _densified(cls, weighted: DataFrame) -> "LinkGraph":
+        """``(src, dst, weight)`` over arbitrary ids -> dense weighted
+        graph with the ``orig_id <-> id`` mapping kept."""
         from pyspark.sql import functions as F
 
-        weighted = derive_edges(corpus).persist()
+        weighted = weighted.persist()
         _dense, mapping = densify_ids(weighted.select("src", "dst"))
-        # mapping's lineage includes the full corpus regex scan — cache it
-        # so the two resolution joins and the count scan it exactly once
+        # mapping's lineage includes the whole edge derivation (e.g. the
+        # corpus regex scan) — cache it so the two resolution joins and
+        # the count scan it exactly once
         mapping = mapping.persist()
         m_src = mapping.withColumnRenamed("orig_id", "src").withColumnRenamed(
             "id", "src_id"
@@ -78,53 +108,6 @@ class LinkGraph:
         n = mapping.count()
         weighted.unpersist()
         return cls(edges=wdense, n=n, weight_col="weight", mapping=mapping)
-
-    @classmethod
-    def from_cooccurrence(
-        cls,
-        df: DataFrame,
-        key_col: str,
-        item_col: str,
-        min_count: int = 1,
-        max_items_per_key: int = 1000,
-        weighting: str = "count",
-    ) -> "LinkGraph":
-        """Any ``(key, item)`` relation → weighted dense item graph
-        (market-basket, co-change, shared-contributor …) ready for the
-        whole algorithm surface, with the original-id mapping kept for
-        ``with_original_ids``. Same plumbing as ``from_corpus``."""
-        from pyspark.sql import functions as F
-
-        from pagerank_spark.operators.cooccur import cooccurrence_graph
-
-        w = cooccurrence_graph(
-            df, key_col, item_col, min_count, max_items_per_key,
-            weighting=weighting,
-        ).persist()
-        _dense, mapping = densify_ids(w.select("src", "dst"))
-        mapping = mapping.persist()
-        m_src = mapping.withColumnRenamed("orig_id", "src").withColumnRenamed(
-            "id", "src_id"
-        )
-        m_dst = mapping.withColumnRenamed("orig_id", "dst").withColumnRenamed(
-            "id", "dst_id"
-        )
-        wdense = (
-            w.join(m_src, "src")
-            .join(m_dst, "dst")
-            .select(
-                F.col("src_id").alias("src"),
-                F.col("dst_id").alias("dst"),
-                "weight",
-            )
-            .localCheckpoint()
-        )
-        n = mapping.count()
-        w.unpersist()
-        return cls(edges=wdense, n=n, weight_col="weight", mapping=mapping)
-
-    def _n(self) -> int | None:
-        return self.n
 
     def pagerank(self, **kwargs) -> PageRankResult:
         kwargs.setdefault("n", self.n)

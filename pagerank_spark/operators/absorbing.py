@@ -29,6 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.gather import gather_sum
 from pagerank_spark.plans.iterate import iterate
 
 
@@ -82,12 +83,7 @@ def _absorbing_walk(
     """
 
     def _level(h: DataFrame, _level_no: int) -> DataFrame:
-        g = (
-            w.join(h.withColumnRenamed("id", "_d"), w["dst"] == F.col("_d"))
-            .groupBy("src")
-            .agg(F.sum(F.col("p") * F.col("h")).alias("_g"))
-            .withColumnRenamed("src", "id")
-        )
+        g = gather_sum(w, h, "h", "_g", on="dst", weight="p")
         return h.join(g, "id", "left").select(
             "id",
             boundary_expr(F.coalesce(F.col("_g"), F.col("h"))).alias("h"),

@@ -7,11 +7,11 @@ centralities a link-graph engine's users reach for, expressed on the
 same loop-invariant execution shapes the engine already proves out:
 
 - **Katz / eigenvector** are gather-sum power iterations — the exact
-  motion of the HITS half-step (``hits.py``): the O(E) edge table is
-  hash-partitioned and persisted ONCE per join key, each round moves
-  only the O(V) score side (broadcast below 100k vertices,
-  shuffle-hash above), and the remaining per-round O(E) motion is the
-  partial-aggregated message shuffle.
+  motion of the HITS half-step (``hits.py``) on ``plans.gather``: the
+  O(E) edge table is persisted ONCE, each round moves only the O(V)
+  score side (the shared broadcast / shuffle-hash policy), and the
+  remaining per-round O(E) motion is the partial-aggregated message
+  shuffle.
 - **Betweenness** is Brandes' algorithm (Brandes 2001, "A faster
   algorithm for betweenness centrality") with the pivot-sampling
   estimator (Brandes & Pich 2007): run the forward BFS-with-path-
@@ -33,20 +33,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.gather import (
+    gather_sum,
+    l1_converged,
+    never_converged,
+    score_side,
+)
 from pagerank_spark.plans.iterate import iterate
-
-# Below this many vertices the O(V) score side broadcasts (same
-# measured threshold as hits.py / labelprop.py: re-broadcasting tiny
-# vectors beats shuffling them; above it only the score side exchanges
-# against the pre-partitioned cached edge table).
-_BROADCAST_V = 100_000
 
 
 def _gather_ready(edges: DataFrame, weight_col: str | None):
-    """(edge table keyed for the src-side gather, vertices, n, hint).
-
-    One persisted copy partitioned by ``src``: every round's join
-    against the score side is exchange-free on the fat side.
+    """(src-keyed edge table, vertices, hint) for the src-side gather.
 
     ``_mw`` is the per-row gather multiplier: the raw weight when
     ``weight_col`` is given, 1.0 otherwise. A multiplicity pre-fold of
@@ -56,25 +53,10 @@ def _gather_ready(edges: DataFrame, weight_col: str | None):
     score side broadcast — and folding genuine float weights flipped a
     7-dp rounding boundary (katz_weighted, sf0.1); both stay reverted.
     """
-    spark = edges.sparkSession
-    P = spark.sparkContext.defaultParallelism
-    if weight_col:
-        e = edges.select(
-            "src", "dst", F.col(weight_col).cast("double").alias("_mw")
-        )
-    else:
-        e = edges.select("src", "dst", F.lit(1.0).alias("_mw"))
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = vertices.count()
-    hint = "broadcast" if n <= _BROADCAST_V else "shuffle_hash"
-    e = e.persist() if hint == "broadcast" else e.repartition(P, "src").persist()
-    e.count()
-    return e, vertices, n, hint
+    mw = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+    e = edges.select("src", "dst", mw.alias("_mw"))
+    (e,), vertices, hint = score_side(e, ["src"])
+    return e, vertices, hint
 
 
 def katz_centrality(
@@ -95,39 +77,26 @@ def katz_centrality(
     must be below 1/λ_max for the series to converge — the caller's
     contract, as with NetworkX.
     """
-    e, vertices, _n, hint = _gather_ready(edges, weight_col)
-    wexpr = (F.col("_mw") * F.col("katz")).alias("_m")
+    e, vertices, hint = _gather_ready(edges, weight_col)
+    try:
+        e.count()
 
-    def _step(state: DataFrame, _round: int) -> DataFrame:
-        msgs = (
-            e.join(state.select(F.col("id").alias("src"), "katz").hint(hint), "src")
-            .select(F.col("dst").alias("id"), wexpr)
-            .groupBy("id")
-            .agg(F.sum("_m").alias("_s"))
-        )
-        return vertices.join(msgs, "id", "left").select(
-            "id",
-            (
-                F.lit(float(beta))
-                + F.lit(float(alpha)) * F.coalesce("_s", F.lit(0.0))
-            ).alias("katz"),
-        )
-
-    if tol is None:
-        _converged = lambda _p, _n_, _r: False  # noqa: E731 — fixed rounds
-    else:
-
-        def _converged(prev: DataFrame, new: DataFrame, _round: int) -> bool:
-            d = (
-                new.join(prev.select("id", F.col("katz").alias("_pk")), "id")
-                .agg(F.sum(F.abs(F.col("katz") - F.col("_pk"))).alias("d"))
-                .collect()[0]["d"]
+        def _step(state: DataFrame, _round: int) -> DataFrame:
+            msgs = gather_sum(e, state, "katz", "_s", weight="_mw", hint=hint)
+            return vertices.join(msgs, "id", "left").select(
+                "id",
+                (
+                    F.lit(float(beta))
+                    + F.lit(float(alpha)) * F.coalesce("_s", F.lit(0.0))
+                ).alias("katz"),
             )
-            return d is not None and d < tol
 
-    init = vertices.select("id", F.lit(float(beta)).alias("katz"))
-    state, _rounds, _done = iterate(init, _step, _converged, max_iter)
-    e.unpersist()
+        init = vertices.select("id", F.lit(float(beta)).alias("katz"))
+        state, _rounds, _done = iterate(
+            init, _step, l1_converged(["katz"], tol), max_iter
+        )
+    finally:
+        e.unpersist()
     return state.select("id", "katz")
 
 
@@ -144,46 +113,32 @@ def eigenvector_centrality(
     Exactly the authority half-step of HITS iterated alone (same
     normalize-via-broadcast-scalar trick, see
     ``hits._l2_normalized``). Vertices with no in-path from the
-    dominant component converge to 0.
+    dominant component converge to 0. ``tol`` stops early at L1
+    delta < tol, as in :func:`katz_centrality`.
     """
     from pagerank_spark.operators.hits import _l2_normalized
 
-    e, vertices, _n, hint = _gather_ready(edges, weight_col)
-    wexpr = (F.col("_mw") * F.col("eigenvector")).alias("_m")
+    e, vertices, hint = _gather_ready(edges, weight_col)
+    try:
+        e.count()
 
-    def _step(state: DataFrame, _round: int) -> DataFrame:
-        msgs = (
-            e.join(
-                state.select(F.col("id").alias("src"), "eigenvector").hint(hint),
-                "src",
+        def _step(state: DataFrame, _round: int) -> DataFrame:
+            msgs = gather_sum(
+                e, state, "eigenvector", "_s", weight="_mw", hint=hint
             )
-            .select(F.col("dst").alias("id"), wexpr)
-            .groupBy("id")
-            .agg(F.sum("_m").alias("_s"))
-        )
-        raw = vertices.join(msgs, "id", "left").select(
-            "id", F.coalesce("_s", F.lit(0.0)).alias("eigenvector")
-        )
-        return _l2_normalized(raw, "eigenvector")
-
-    if tol is None:
-        _converged = lambda _p, _n_, _r: False  # noqa: E731 — fixed rounds
-    else:
-
-        def _converged(prev: DataFrame, new: DataFrame, _round: int) -> bool:
-            d = (
-                new.join(prev.select("id", F.col("eigenvector").alias("_pe")), "id")
-                .agg(F.sum(F.abs(F.col("eigenvector") - F.col("_pe"))).alias("d"))
-                .collect()[0]["d"]
+            raw = vertices.join(msgs, "id", "left").select(
+                "id", F.coalesce("_s", F.lit(0.0)).alias("eigenvector")
             )
-            return d is not None and d < tol
+            return _l2_normalized(raw, "eigenvector")
 
-    init = vertices.select("id", F.lit(1.0).alias("eigenvector"))
-    # checkpoint=False: _l2_normalized already materializes each round
-    state, _rounds, _done = iterate(
-        init, _step, _converged, max_iter, checkpoint=False
-    )
-    e.unpersist()
+        init = vertices.select("id", F.lit(1.0).alias("eigenvector"))
+        # checkpoint=False: _l2_normalized already materializes each round
+        state, _rounds, _done = iterate(
+            init, _step, l1_converged(["eigenvector"], tol), max_iter,
+            checkpoint=False,
+        )
+    finally:
+        e.unpersist()
     return state.select("id", "eigenvector")
 
 
@@ -449,7 +404,6 @@ def personalized_pagerank_keyed(
     seeds: list[int],
     d: float = 0.85,
     iters: int = 10,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Personalized PageRank for MANY seeds in one keyed pass:
     ``DataFrame[seed: long, id: long, rank: double]`` after exactly
@@ -464,14 +418,16 @@ def personalized_pagerank_keyed(
     mass. Only REACHED (nonzero-rank) vertices appear — state is
     O(Σ reached), bounded by the seed count.
 
-    Per iteration: one join moving the O(state) rank side against the
-    once-partitioned edge table, a map-side-combined (seed, dst)
-    aggregate, and one tiny per-seed dangling aggregate.
+    Per iteration (an ``iterate`` round, checkpointed every round —
+    the gather and the dangling aggregate both scan the state): one
+    join moving the O(state) rank side against the once-partitioned
+    edge table, a map-side-combined (seed, dst) aggregate, and one tiny
+    per-seed dangling aggregate.
     """
     if not seeds:
         raise ValueError("seeds must be non-empty")
     spark = edges.sparkSession
-    P = num_partitions or spark.sparkContext.defaultParallelism
+    P = spark.sparkContext.defaultParallelism
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_od"))
     # parallel edges collapse to one row carrying m·d/od: duplicate
     # (src, dst) instances contribute identical per-edge shares, so the
@@ -492,46 +448,39 @@ def personalized_pagerank_keyed(
         .repartition(P, "src")
         .persist()
     )
-    ew.count()
-    # dangling = any vertex that can hold rank but has no out-edges:
-    # dst-only ids PLUS off-graph seeds (a seed absent from the edge
-    # list is dangling too — without this, d of its mass would vanish
-    # every iteration and per-seed ranks would stop summing to 1)
-    seed_ids = spark.createDataFrame(
-        [(int(s),) for s in set(seeds)], "id long"
-    )
-    dangling = (
-        edges.select(F.col("dst").alias("id"))
-        .union(seed_ids)
-        .distinct()
-        .join(
-            edges.select(F.col("src").alias("id")).distinct(),
-            "id",
-            "left_anti",
+    try:
+        ew.count()
+        # dangling = any vertex that can hold rank but has no out-edges:
+        # dst-only ids PLUS off-graph seeds (a seed absent from the edge
+        # list is dangling too — without this, d of its mass would
+        # vanish every iteration and per-seed ranks would stop summing
+        # to 1)
+        seed_ids = spark.createDataFrame(
+            [(int(s),) for s in set(seeds)], "id long"
         )
-        .localCheckpoint()
-    )
-    state = spark.createDataFrame(
-        [(int(s), int(s), 1.0) for s in set(seeds)],
-        "seed long, id long, rank double",
-    )
-    for _ in range(iters):
-        gathered = (
-            ew.join(state.withColumnRenamed("id", "src"), "src")
-            .groupBy("seed", F.col("dst").alias("id"))
-            .agg(F.sum(F.col("_w") * F.col("rank")).alias("rank"))
-        )
-        dm = (
-            state.join(dangling, "id", "left_semi")
-            .groupBy("seed")
-            .agg(F.sum("rank").alias("_dm"))
-        )
-        seed_rows = (
-            spark.createDataFrame(
-                [(int(s),) for s in set(seeds)], "seed long"
+        dangling = (
+            edges.select(F.col("dst").alias("id"))
+            .union(seed_ids)
+            .distinct()
+            .join(
+                edges.select(F.col("src").alias("id")).distinct(),
+                "id",
+                "left_anti",
             )
-            .join(dm, "seed", "left")
-            .select(
+            .localCheckpoint()
+        )
+        seed_keys = seed_ids.withColumnRenamed("id", "seed")
+
+        def _step(state: DataFrame, _round: int) -> DataFrame:
+            gathered = gather_sum(
+                ew, state, "rank", "rank", weight="_w", keys=["seed"]
+            )
+            dm = (
+                state.join(dangling, "id", "left_semi")
+                .groupBy("seed")
+                .agg(F.sum("rank").alias("_dm"))
+            )
+            seed_rows = seed_keys.join(dm, "seed", "left").select(
                 "seed",
                 F.col("seed").alias("id"),
                 (
@@ -539,14 +488,19 @@ def personalized_pagerank_keyed(
                     + F.lit(float(d)) * F.coalesce("_dm", F.lit(0.0))
                 ).alias("rank"),
             )
+            return (
+                gathered.unionByName(seed_rows)
+                .groupBy("seed", "id")
+                .agg(F.sum("rank").alias("rank"))
+            )
+
+        init = spark.createDataFrame(
+            [(int(s), int(s), 1.0) for s in set(seeds)],
+            "seed long, id long, rank double",
         )
-        state = (
-            gathered.unionByName(seed_rows)
-            .groupBy("seed", "id")
-            .agg(F.sum("rank").alias("rank"))
-            .localCheckpoint()
-        )
-    ew.unpersist()
+        state, _rounds, _done = iterate(init, _step, never_converged, iters)
+    finally:
+        ew.unpersist()
     return state
 
 

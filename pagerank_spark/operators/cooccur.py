@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.gather import score_join_hint
+
 
 def cooccurrence_graph(
     df: DataFrame,
@@ -117,7 +119,7 @@ def contract_graph(
     # whole SCC/LPA run in their lineage, and without materialization
     # that run would execute once for the count and again per join
     lab = labels.select("id", F.col(label_col).alias("_lab")).localCheckpoint()
-    hint = "broadcast" if lab.count() <= 100_000 else "shuffle_hash"
+    hint = score_join_hint(lab.count())
     w = (
         F.sum(F.col(weight_col)).alias("weight")
         if weight_col

@@ -17,18 +17,20 @@ the engine's degree semantics (``degrees.py``).
 Execution model (same loop-invariant motion as LPA / shortest paths):
 the edge table is hash-partitioned and persisted ONCE per join key —
 ``src`` for the authority gather, ``dst`` for the hub gather — so
-each round's two joins move only the O(V) score side (broadcast for
-small vertex sets, shuffle-hash above; the cached O(E) sides never
-re-exchange for the join). The remaining per-round O(E) motion is the
-gather's partial-aggregated message shuffle (groupBy the opposite
-endpoint) — the same inherent delivery cost LPA documents; PageRank
-avoids it only via its specialized CSR block store, which is the
-flagship path, not replicated here (measured ~10s per half-step at
-E=10M on local[32]). Each half-step is materialized once and its L2 norm applied
-as an in-plan broadcast scalar over the checkpointed rows — one job
-per half-step, two per round (see ``_l2_normalized`` for why the
-checkpoint is what prevents a 4x gather re-evaluation). Lineage stays
-O(1) because every round's leaves are the half-step checkpoints.
+each round's two joins move only the O(V) score side (the
+``plans.gather`` policy: broadcast for small vertex sets, with one
+unpartitioned cache serving both keys, shuffle-hash above; the cached
+O(E) sides never re-exchange for the join). The remaining per-round
+O(E) motion is the gather's partial-aggregated message shuffle
+(groupBy the opposite endpoint) — the same inherent delivery cost LPA
+documents; PageRank avoids it only via its specialized CSR block
+store, which is the flagship path, not replicated here (measured ~10s
+per half-step at E=10M on local[32]). Each half-step is materialized
+once and its L2 norm applied as an in-plan broadcast scalar over the
+checkpointed rows — one job per half-step, two per round (see
+``_l2_normalized`` for why the checkpoint is what prevents a 4x
+gather re-evaluation). Lineage stays O(1) because every round's
+leaves are the half-step checkpoints.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.gather import gather_sum, l1_converged, score_side
 from pagerank_spark.plans.iterate import iterate
 
 
@@ -69,7 +72,6 @@ def hits(
     max_iter: int = 20,
     tol: float | None = None,
     weight_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``DataFrame[id: long, hub: double, authority: double]``.
 
@@ -78,10 +80,9 @@ def hits(
     set, stops early once the L1 delta of both score vectors drops
     below it (one extra comparison join per round). ``weight_col``
     scales both gathers by the edge weight (weighted HITS — the
-    natural form on contracted/co-occurrence graphs).
+    natural form on contracted/co-occurrence graphs). Shuffle-hash
+    edge copies use the session's default parallelism.
     """
-    spark = edges.sparkSession
-    P = num_partitions or spark.sparkContext.defaultParallelism
     # NOTE: a multiplicity pre-fold of parallel edges (bit-exact for
     # the gather sums at every driver SF) was A/B-measured in r6 and
     # REGRESSED ~20% here: with the score side broadcast, each gather
@@ -93,97 +94,43 @@ def hits(
     e = edges.select(*cols)
     if weight_col:
         e = e.withColumn(weight_col, F.col(weight_col).cast("double"))
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = vertices.count()
-    # broadcast only for genuinely small score vectors: each round
-    # re-broadcasts the O(V) scores FOUR times (two gathers + two
-    # norms), i.e. a driver collect + torrent per use — measured 34
-    # s/round at V=500k/E=10M vs ~8s with shuffle-hash against the
-    # pre-partitioned caches, which moves only one O(V) exchange per
-    # gather and never touches the fat side
-    join_hint = "broadcast" if n <= 100_000 else "shuffle_hash"
-    if join_hint == "broadcast":
-        # score side replicates; a broadcast-hash join needs no fat-side
-        # partitioning, so ONE cached edge copy serves both gathers
-        e_src = e_dst = e.persist()
-    else:
-        # one persisted copy per join key: each shuffle-hash gather's
-        # fat side is exchange-free every round (persist keeps the
-        # partitioning visible to the planner; localCheckpoint would
-        # drop it)
-        e_src = e.repartition(P, "src").persist()
-        e_dst = e.repartition(P, "dst").persist()
+    # the authority gather joins on src, the hub gather on dst; each
+    # round re-broadcasts the O(V) scores FOUR times (two gathers + two
+    # norms), which is what the shared cutoff is measured against
+    (e_src, e_dst), vertices, hint = score_side(e, ["src", "dst"])
+    try:
 
-    wmul = (lambda c: F.col(weight_col) * c) if weight_col else (lambda c: c)
-
-    def _step(state: DataFrame, _round: int) -> DataFrame:
-        a_raw = (
-            e_src.join(
-                state.select(F.col("id").alias("src"), "hub").hint(join_hint),
-                "src",
+        def _half_step(
+            edges_on: DataFrame, scores: DataFrame, value: str, on: str,
+            out: str,
+        ) -> DataFrame:
+            raw = gather_sum(
+                edges_on, scores, value, out, on=on, weight=weight_col,
+                hint=hint,
             )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(wmul(F.col("hub"))).alias("authority"))
-        )
-        a_full = vertices.join(a_raw, "id", "left").select(
-            "id", F.coalesce("authority", F.lit(0.0)).alias("authority")
-        )
-        auth = _l2_normalized(a_full, "authority")
-        h_raw = (
-            e_dst.join(
-                auth.select(F.col("id").alias("dst"), "authority").hint(
-                    join_hint
-                ),
-                "dst",
+            full = vertices.join(raw, "id", "left").select(
+                "id", F.coalesce(out, F.lit(0.0)).alias(out)
             )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum(wmul(F.col("authority"))).alias("hub"))
+            return _l2_normalized(full, out)
+
+        def _step(state: DataFrame, _round: int) -> DataFrame:
+            auth = _half_step(e_src, state, "hub", "src", "authority")
+            hub = _half_step(e_dst, auth, "authority", "dst", "hub")
+            return hub.join(auth, "id")
+
+        init = vertices.select(
+            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
         )
-        h_full = vertices.join(h_raw, "id", "left").select(
-            "id", F.coalesce("hub", F.lit(0.0)).alias("hub")
+        # checkpoint=False: both half-steps are already materialized
+        # inside _l2_normalized; the returned hub⋈auth join is a cheap
+        # plan over those checkpoints, and a third materialization per
+        # round would only add a job (round floors dominate at small
+        # scale)
+        state, _rounds, _done = iterate(
+            init, _step, l1_converged(["hub", "authority"], tol), max_iter,
+            checkpoint=False,
         )
-        hub = _l2_normalized(h_full, "hub")
-        return hub.join(auth, "id")
-
-    if tol is None:
-        _converged = lambda _p, _n, _r: False  # noqa: E731 — run all rounds
-    else:
-
-        def _converged(prev: DataFrame, new: DataFrame, _round: int) -> bool:
-            delta = (
-                new.join(
-                    prev.select(
-                        "id",
-                        F.col("hub").alias("_ph"),
-                        F.col("authority").alias("_pa"),
-                    ),
-                    "id",
-                )
-                .agg(
-                    F.sum(
-                        F.abs(F.col("hub") - F.col("_ph"))
-                        + F.abs(F.col("authority") - F.col("_pa"))
-                    ).alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            return delta is not None and delta < tol
-
-    init = vertices.select(
-        "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
-    )
-    # checkpoint=False: both half-steps are already materialized inside
-    # _l2_normalized; the returned hub⋈auth join is a cheap plan over
-    # those checkpoints, and a third materialization per round would
-    # only add a job (round floors dominate at small scale)
-    state, _rounds, _done = iterate(
-        init, _step, _converged, max_iter, checkpoint=False
-    )
-    e_src.unpersist()
-    e_dst.unpersist()
+    finally:
+        e_src.unpersist()
+        e_dst.unpersist()
     return state.select("id", "hub", "authority")

@@ -74,6 +74,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.gather import gather_sum, l1_delta
+from pagerank_spark.plans.iterate import iterate
 from pagerank_spark.plans.metrics import (
     shuffle_delta as _shuffle_delta,
     shuffle_totals as _shuffle_totals,
@@ -874,128 +876,116 @@ def _pagerank_join(
         .repartition(P, "src")
         .persist()
     )
-    edge_count = edges_w.count()
-
     vertices = spark.range(n).select(F.col("id").cast("long"))
     dangling_ids = vertices.join(
         out_deg.select(F.col("src").alias("id")), "id", "left_anti"
     ).persist()
+    try:
+        edge_count = edges_w.count()
 
-    if personalize is None:
-        init_rank = F.lit(1.0 / n)
-    else:
-        init_rank = F.when(
-            F.col("id").isin(personalize), F.lit(1.0 / len(personalize))
-        ).otherwise(F.lit(0.0))
-    if init_ranks is not None:
-        ranks = (
-            vertices.join(
-                init_ranks.select(
-                    F.col("id").cast("long"),
-                    F.col("rank").cast("double").alias("_ir"),
-                ),
-                "id",
-                "left",
-            )
-            .select("id", F.coalesce("_ir", F.lit(0.0)).alias("rank"))
-            .localCheckpoint()
-        )
-    else:
-        ranks = vertices.select("id", init_rank.alias("rank")).localCheckpoint()
-    it, residual, converged = 0, float("inf"), False
-    metrics: list[dict] = []
-    if resume and checkpoint_dir:
-        mpath = os.path.join(checkpoint_dir, "manifest.json")
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                manifest = json.load(f)
-            ranks = spark.read.parquet(manifest["rank_path"]).localCheckpoint()
-            it = manifest["iteration"]
-            metrics = manifest.get("metrics", [])
-    start_iter = it
-    lineage = {"num_partitions": P, "edge_count": edge_count, "mode": "join"}
-    from pagerank_spark.plans.iterate import iterate
-
-    # settled baseline (see broadcast path); per-iteration deltas may
-    # still attribute a stage to the following iteration under listener
-    # lag — totals across the run remain exact
-    loop = {
-        "t0": time.monotonic(),
-        "residual": float("inf"),
-        "shuffle_before": _shuffle_totals_settled(spark),
-    }
-
-    def _step(prev: DataFrame, _round: int) -> DataFrame:
-        loop["t0"] = time.monotonic()
-        if dangling == "redistribute":
-            dm_row = prev.join(dangling_ids, "id", "left_semi").agg(
-                F.sum("rank").alias("dm")
-            ).collect()[0]
-            dm = float(dm_row["dm"] or 0.0)
-        else:
-            dm = 0.0
         if personalize is None:
-            base_col = F.lit(teleport + d * dm / n)
+            init_rank = F.lit(1.0 / n)
         else:
-            s_cnt = len(personalize)
-            base_col = F.when(
-                F.col("id").isin(personalize),
-                F.lit((1.0 - d) / s_cnt + d * dm / s_cnt),
+            init_rank = F.when(
+                F.col("id").isin(personalize), F.lit(1.0 / len(personalize))
             ).otherwise(F.lit(0.0))
-        contrib = (
-            edges_w.join(prev.withColumnRenamed("id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("w") * F.col("rank")).alias("s"))
-        )
-        # Right-outer completion: vertices with no in-edges get base only
-        # (Page_Rank_SERIAL.c:228-244; SURVEY.md §1.3.4).
-        return vertices.join(
-            contrib.withColumnRenamed("dst", "id"), "id", "left"
-        ).select(
-            "id",
-            (F.coalesce(F.col("s"), F.lit(0.0)) + base_col).alias("rank"),
-        )
-
-    def _converged(prev: DataFrame, new: DataFrame, rounds: int) -> bool:
-        residual = float(
-            new.withColumnRenamed("rank", "nr")
-            .join(prev, "id")
-            .agg(F.sum(F.abs(F.col("nr") - F.col("rank"))).alias("res"))
-            .collect()[0]["res"]
-        )
-        loop["residual"] = residual
-        shuffle_after = _shuffle_totals(spark)
-        metrics.append(
-            {
-                "iteration": start_iter + rounds,
-                "residual": residual,
-                "seconds": time.monotonic() - loop["t0"],
-                "edges_scanned": edge_count,
-                # measured per-iteration shuffle bytes (monitoring API):
-                # the rank-side shuffle is O(n) rows because edges_w is
-                # pre-partitioned by src — the numbers prove it.
-                **_shuffle_delta(loop["shuffle_before"], shuffle_after),
-                "skew_ratio": None,
-            }
-        )
-        loop["shuffle_before"] = shuffle_after
-        if checkpoint_dir:
-            _save_checkpoint_df(
-                checkpoint_dir, new, start_iter + rounds, metrics, lineage
+        if init_ranks is not None:
+            ranks = (
+                vertices.join(
+                    init_ranks.select(
+                        F.col("id").cast("long"),
+                        F.col("rank").cast("double").alias("_ir"),
+                    ),
+                    "id",
+                    "left",
+                )
+                .select("id", F.coalesce("_ir", F.lit(0.0)).alias("rank"))
+                .localCheckpoint()
             )
-        return residual <= eps
+        else:
+            ranks = vertices.select("id", init_rank.alias("rank")).localCheckpoint()
+        it, residual, converged = 0, float("inf"), False
+        metrics: list[dict] = []
+        if resume and checkpoint_dir:
+            mpath = os.path.join(checkpoint_dir, "manifest.json")
+            if os.path.exists(mpath):
+                with open(mpath) as f:
+                    manifest = json.load(f)
+                ranks = spark.read.parquet(manifest["rank_path"]).localCheckpoint()
+                it = manifest["iteration"]
+                metrics = manifest.get("metrics", [])
+        start_iter = it
+        lineage = {"num_partitions": P, "edge_count": edge_count, "mode": "join"}
+        # settled baseline (see broadcast path); per-iteration deltas may
+        # still attribute a stage to the following iteration under listener
+        # lag — totals across the run remain exact
+        loop = {
+            "t0": time.monotonic(),
+            "residual": float("inf"),
+            "shuffle_before": _shuffle_totals_settled(spark),
+        }
 
-    # max(1, ...): do-while semantics — the reference ALWAYS runs at
-    # least one iteration (Page_Rank_SERIAL.c:206-279), and the
-    # local/broadcast strategies do too; without the clamp max_iter=0
-    # would make the three strategies disagree on identical arguments
-    ranks, rounds, converged = iterate(
-        ranks, _step, _converged,
-        max(1, max_iter) if max_iter is not None else (1 << 31),
-    )
-    it = start_iter + rounds
-    edges_w.unpersist()
-    dangling_ids.unpersist()
+        def _step(prev: DataFrame, _round: int) -> DataFrame:
+            loop["t0"] = time.monotonic()
+            if dangling == "redistribute":
+                dm_row = prev.join(dangling_ids, "id", "left_semi").agg(
+                    F.sum("rank").alias("dm")
+                ).collect()[0]
+                dm = float(dm_row["dm"] or 0.0)
+            else:
+                dm = 0.0
+            if personalize is None:
+                base_col = F.lit(teleport + d * dm / n)
+            else:
+                s_cnt = len(personalize)
+                base_col = F.when(
+                    F.col("id").isin(personalize),
+                    F.lit((1.0 - d) / s_cnt + d * dm / s_cnt),
+                ).otherwise(F.lit(0.0))
+            contrib = gather_sum(edges_w, prev, "rank", "s", weight="w")
+            # Right-outer completion: vertices with no in-edges get base only
+            # (Page_Rank_SERIAL.c:228-244; SURVEY.md §1.3.4).
+            return vertices.join(contrib, "id", "left").select(
+                "id",
+                (F.coalesce(F.col("s"), F.lit(0.0)) + base_col).alias("rank"),
+            )
+
+        def _converged(prev: DataFrame, new: DataFrame, rounds: int) -> bool:
+            residual = float(l1_delta(prev, new, ["rank"]))
+            loop["residual"] = residual
+            shuffle_after = _shuffle_totals(spark)
+            metrics.append(
+                {
+                    "iteration": start_iter + rounds,
+                    "residual": residual,
+                    "seconds": time.monotonic() - loop["t0"],
+                    "edges_scanned": edge_count,
+                    # measured per-iteration shuffle bytes (monitoring API):
+                    # the rank-side shuffle is O(n) rows because edges_w is
+                    # pre-partitioned by src — the numbers prove it.
+                    **_shuffle_delta(loop["shuffle_before"], shuffle_after),
+                    "skew_ratio": None,
+                }
+            )
+            loop["shuffle_before"] = shuffle_after
+            if checkpoint_dir:
+                _save_checkpoint_df(
+                    checkpoint_dir, new, start_iter + rounds, metrics, lineage
+                )
+            return residual <= eps
+
+        # max(1, ...): do-while semantics — the reference ALWAYS runs at
+        # least one iteration (Page_Rank_SERIAL.c:206-279), and the
+        # local/broadcast strategies do too; without the clamp max_iter=0
+        # would make the three strategies disagree on identical arguments
+        ranks, rounds, converged = iterate(
+            ranks, _step, _converged,
+            max(1, max_iter) if max_iter is not None else (1 << 31),
+        )
+        it = start_iter + rounds
+    finally:
+        edges_w.unpersist()
+        dangling_ids.unpersist()
     return PageRankResult(
         ranks, it, converged, loop["residual"], metrics, lineage
     )

@@ -30,7 +30,8 @@ hybrids exist for that shape but are not warranted here.
 
 Both inner fixpoints run on ``plans.iterate``; the per-outer-round
 edge table is checkpointed once and the O(V) color/flag side moves
-per inner round (broadcast below 2M vertices, shuffle-hash above).
+per inner round (the ``plans.gather`` policy: broadcast below 100k
+vertices, shuffle-hash above).
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.components import _count
+from pagerank_spark.plans.gather import edge_sides, score_join_hint
 from pagerank_spark.plans.iterate import iterate
 
 
@@ -175,33 +177,18 @@ def strongly_connected_components(
     ):
         return _scc_local(spark, remaining, e)
     n = remaining.count()
-    # same threshold rationale as hits.py: per-round driver broadcasts
-    # of the O(V) color/flag side dominate past ~100k vertices, while
-    # shuffle-hash against the per-round partitioned caches moves only
-    # one O(V) exchange per join
-    hint = "broadcast" if n <= 100_000 else "shuffle_hash"
-    P = spark.sparkContext.defaultParallelism
+    # per-round driver broadcasts of the O(V) color/flag side dominate
+    # past the shared cutoff, while shuffle-hash against the per-round
+    # partitioned caches moves only one O(V) exchange per join
+    hint = score_join_hint(n)
     done: list[DataFrame] = []
-
-    def _fat_sides(ecur: DataFrame):
-        """Loop-invariant (per outer round) edge copies per join key —
-        under shuffle-hash a bare checkpoint would re-exchange the full
-        O(E) side on EVERY inner round (the color join keys on src, the
-        ownership join on dst); persist keeps the partitioning visible
-        so only the O(V) score/flag side moves (same motion as
-        hits/LPA). Broadcast mode replicates the small side, so one
-        unpartitioned cache serves both."""
-        if hint == "broadcast":
-            c = ecur.persist()
-            return c, c, [c]
-        es = ecur.repartition(P, "src").persist()
-        ed = ecur.repartition(P, "dst").persist()
-        return es, ed, [es, ed]
 
     for _outer in range(max_outer):
         if remaining.isEmpty():
             break
-        e_src, e_dst, caches = _fat_sides(e)
+        # loop-invariant (per outer round) edge copies: the color join
+        # keys on src, the ownership join on dst
+        e_src, e_dst = edge_sides(e, hint, ["src", "dst"])
 
         # 1) color fixpoint (forward min-label propagation)
         def _color_step(colors: DataFrame, _r: int) -> DataFrame:
@@ -265,8 +252,8 @@ def strongly_connected_components(
             .select("src", "dst")
             .localCheckpoint()
         )
-        for c in caches:
-            c.unpersist()
+        e_src.unpersist()
+        e_dst.unpersist()
     else:
         if not remaining.isEmpty():
             warnings.warn(

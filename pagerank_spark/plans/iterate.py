@@ -1,8 +1,9 @@
 """Generic BSP iterate driver: until converged, or for a fixed horizon.
 
 The engine's iterative graph algorithms (connected components, label
-propagation, join-mode PageRank, forward/reverse push, absorbing
-walks, temporal reachability) share one loop skeleton: compute the
+propagation, join-mode PageRank, keyed personalized PageRank, Katz,
+eigenvector, HITS, forward/reverse push, absorbing walks, temporal
+reachability) share one loop skeleton: compute the
 next state from the current one, truncate lineage with
 ``localCheckpoint`` so the physical plan stays O(1) across rounds, run
 one cheap convergence action, stop at ``max_iter`` otherwise. This is

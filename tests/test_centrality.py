@@ -20,6 +20,13 @@ def _random_pairs(seed: int, n: int, e: int):
     return [(int(a), int(b)) for a, b in rng.randint(0, n, size=(e, 2))]
 
 
+def _near_complete_pairs():
+    """K_10 (self-loops included) 50 times over plus ten random pairs:
+    power iteration and HITS reach an L1 delta of 1e-12 in 4 rounds."""
+    full = [(s, d) for s in range(10) for d in range(10)]
+    return full * 50 + _random_pairs(0, 10, 10)
+
+
 def _dense(pairs):
     ids = sorted({x for p in pairs for x in p})
     idx = {v: i for i, v in enumerate(ids)}
@@ -66,21 +73,86 @@ def test_katz_weighted_and_tol(spark):
 
 
 def test_eigenvector_matches_numpy(spark):
-    pairs = _random_pairs(11, 25, 120)
+    """Fixed rounds, and ``tol`` run to the power-iteration fixpoint."""
     from pagerank_spark.operators.centrality import eigenvector_centrality
 
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        r["id"]: r["eigenvector"]
-        for r in eigenvector_centrality(e, max_iter=8).collect()
-    }
-    ids, idx, A = _dense(pairs)
-    x = np.ones(len(ids))
-    for _ in range(8):
-        x = A.T @ x
-        n = np.sqrt((x * x).sum())
-        x = x / n if n > 0 else x
-    assert all(abs(got[v] - x[idx[v]]) < 1e-9 for v in ids)
+    for pairs, max_iter, tol, rounds in (
+        (_random_pairs(11, 25, 120), 8, None, 8),
+        (_near_complete_pairs(), 200, 1e-12, 500),
+    ):
+        e = spark.createDataFrame(pairs, "src long, dst long")
+        got = {
+            r["id"]: r["eigenvector"]
+            for r in eigenvector_centrality(
+                e, max_iter=max_iter, tol=tol
+            ).collect()
+        }
+        ids, idx, A = _dense(pairs)
+        x = np.ones(len(ids))
+        for _ in range(rounds):
+            x = A.T @ x
+            n = np.sqrt((x * x).sum())
+            x = x / n if n > 0 else x
+        assert all(abs(got[v] - x[idx[v]]) < 1e-9 for v in ids)
+
+
+@pytest.mark.parametrize(
+    "cutoff, join", [(30, "BroadcastHashJoin"), (29, "ShuffledHashJoin")]
+)
+def test_katz_gather_join_follows_score_side_cutoff(
+    spark, monkeypatch, cutoff, join
+):
+    """A 30-vertex score side broadcasts at a cutoff of 30 and
+    shuffle-hashes against the partitioned edge copy at 29."""
+    from pagerank_spark.operators import centrality
+    from pagerank_spark.plans import gather, plan_has
+
+    seen = []
+    real = centrality.gather_sum
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(gather, "BROADCAST_MAX_V", cutoff)
+    monkeypatch.setattr(centrality, "gather_sum", spy)
+    e = spark.createDataFrame(
+        [(i, (i + 1) % 30) for i in range(30)], "src long, dst long"
+    )
+    centrality.katz_centrality(e, max_iter=1)
+    other = {"BroadcastHashJoin", "ShuffledHashJoin"} - {join}
+    assert plan_has(seen[0], join)
+    assert not plan_has(seen[0], other.pop())
+
+
+@pytest.mark.parametrize(
+    "module, call",
+    [
+        ("centrality", lambda m, e: m.katz_centrality(e, max_iter=3)),
+        ("centrality", lambda m, e: m.eigenvector_centrality(e, max_iter=3)),
+        ("centrality",
+         lambda m, e: m.personalized_pagerank_keyed(e, [0, 3], iters=3)),
+        ("hits", lambda m, e: m.hits(e, max_iter=3)),
+        ("pagerank", lambda m, e: m.pagerank(e, mode="join", max_iter=3)),
+    ],
+    ids=["katz", "eigenvector", "ppr_keyed", "hits", "pagerank_join"],
+)
+def test_failed_gather_leaves_no_cached_edges(spark, monkeypatch, module, call):
+    """A failure inside the loop still unpersists the operator's edge
+    caches (and join-PageRank's dangling set)."""
+    import importlib
+
+    mod = importlib.import_module(f"pagerank_spark.operators.{module}")
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected gather failure")
+
+    monkeypatch.setattr(mod, "gather_sum", boom)
+    e = spark.createDataFrame(_random_pairs(5, 12, 40), "src long, dst long")
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="injected gather failure"):
+        call(mod, e)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _bfs_dists(adj, s):

@@ -262,33 +262,46 @@ def test_cc_local_and_stars_paths_agree(spark):
 
 
 def test_hits_matches_numpy_oracle(spark):
-    """Random multigraph (duplicate edges kept) vs a dense NumPy HITS."""
-    rng = np.random.RandomState(17)
-    pairs = [(int(a), int(b)) for a, b in rng.randint(0, 40, size=(200, 2))]
+    """Random multigraph (duplicate edges kept) vs a dense NumPy HITS:
+    fixed rounds, and ``tol`` run to the fixpoint."""
     from pagerank_spark.operators.hits import hits
 
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        r["id"]: (r["hub"], r["authority"])
-        for r in hits(e, max_iter=6).collect()
-    }
-    ids = sorted({x for p in pairs for x in p})
-    idx = {v: i for i, v in enumerate(ids)}
-    A = np.zeros((len(ids), len(ids)))
-    for s, d in pairs:
-        A[idx[s], idx[d]] += 1
-    h = np.ones(len(ids))
-    for _ in range(6):
-        a = A.T @ h
-        na = np.sqrt((a * a).sum())
-        a = a / na if na > 0 else a
-        h = A @ a
-        nh = np.sqrt((h * h).sum())
-        h = h / nh if nh > 0 else h
-    assert all(
-        abs(got[v][0] - h[idx[v]]) < 1e-9 and abs(got[v][1] - a[idx[v]]) < 1e-9
-        for v in ids
-    )
+    rng = np.random.RandomState(17)
+    random_pairs = [
+        (int(a), int(b)) for a, b in rng.randint(0, 40, size=(200, 2))
+    ]
+    # K_10 50 times over plus ten random pairs: L1 delta 1e-12 in 4 rounds
+    near_complete = [(s, d) for s in range(10) for d in range(10)] * 50 + [
+        (int(a), int(b))
+        for a, b in np.random.RandomState(0).randint(0, 10, size=(10, 2))
+    ]
+    for pairs, max_iter, tol, rounds in (
+        (random_pairs, 6, None, 6),
+        (near_complete, 200, 1e-12, 500),
+    ):
+        e = spark.createDataFrame(pairs, "src long, dst long")
+        got = {
+            r["id"]: (r["hub"], r["authority"])
+            for r in hits(e, max_iter=max_iter, tol=tol).collect()
+        }
+        ids = sorted({x for p in pairs for x in p})
+        idx = {v: i for i, v in enumerate(ids)}
+        A = np.zeros((len(ids), len(ids)))
+        for s, d in pairs:
+            A[idx[s], idx[d]] += 1
+        h = np.ones(len(ids))
+        for _ in range(rounds):
+            a = A.T @ h
+            na = np.sqrt((a * a).sum())
+            a = a / na if na > 0 else a
+            h = A @ a
+            nh = np.sqrt((h * h).sum())
+            h = h / nh if nh > 0 else h
+        assert all(
+            abs(got[v][0] - h[idx[v]]) < 1e-9
+            and abs(got[v][1] - a[idx[v]]) < 1e-9
+            for v in ids
+        )
 
 
 def test_clustering_coefficient_vs_combinatorial_oracle(spark):
