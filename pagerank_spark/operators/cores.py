@@ -10,11 +10,11 @@ Peeling is a textbook fixpoint on the ``plans.iterate`` harness: each
 round computes induced degrees (one map-side-combinable aggregate),
 drops vertices below k (two left-semi joins against the surviving
 vertex set), and stops when the edge count is stable — degrees only
-ever decrease, so a stable count IS the fixpoint, one cheap action per
-round. Lineage is truncated per round by the harness. At 100 TB each
-round is bounded shuffles over a monotonically SHRINKING edge set;
-rounds-to-fixpoint is small in practice (degenerate long-chain peels
-are bounded by ``max_iter``).
+ever decrease, so a stable count IS the fixpoint, observed on the
+harness's per-round checkpoint job (no probe job). Lineage is truncated
+per round by the harness. At 100 TB each round is bounded shuffles
+over a monotonically SHRINKING edge set; rounds-to-fixpoint is small
+in practice (degenerate long-chain peels are bounded by ``max_iter``).
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from pagerank_spark.operators.triangles import (
     _simple_degrees,
     _simple_undirected,
 )
-from pagerank_spark.plans.iterate import iterate
+from pagerank_spark.plans.iterate import Probe, iterate
 
 
 def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
@@ -43,7 +43,8 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             .union(edges.select(F.col("dst").alias("id")))
             .distinct()
         )
-    state = _simple_undirected(edges).localCheckpoint()
+    probe = Probe(c=F.count(F.lit(1)))
+    state = probe.checkpoint(_simple_undirected(edges))
 
     def _step(e: DataFrame, _round: int) -> DataFrame:
         keep = _simple_degrees(e).where(F.col("deg") >= k).select("id")
@@ -53,24 +54,17 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             .select("a", "b")
         )
 
-    ctx = {"count": state.count()}
-
-    def _converged(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        c = new.count()
-        stable = c == ctx["count"]
-        ctx["count"] = c
-        return stable
-
     final, _rounds, done = iterate(
         state,
         _step,
-        _converged,
+        probe.unchanged(),
         max_iter,
         warn=(
             f"k_core: peeling did not reach a fixpoint within "
             f"max_iter={max_iter} rounds; result may contain vertices "
             f"below the core degree"
         ),
+        probe=probe,
     )
     return (
         final.select(F.col("a").alias("id"))
@@ -194,8 +188,8 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     the surviving triangles (one scan — a 3-branch union would re-run
     the filter per edge position), (c) drops edges below support, and
     stops when the edge count is stable (support only ever decreases
-    as edges leave, so a stable count is the fixpoint — one cheap
-    action per round, the same monotone argument as :func:`k_core`).
+    as edges leave, so a stable count is the fixpoint — observed on the
+    checkpoint job, the same monotone argument as :func:`k_core`).
     ``k <= 2`` degenerates to the whole simple edge set (every edge
     trivially closes ≥ 0 triangles).
 
@@ -209,7 +203,8 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """
     from pagerank_spark.operators.triangles import _orient, _triangles
 
-    state = _simple_undirected(edges).localCheckpoint()
+    probe = Probe(c=F.count(F.lit(1)))
+    state = probe.checkpoint(_simple_undirected(edges))
     if k <= 2:
         return state
     o = _orient(state, _simple_degrees(state)).localCheckpoint()
@@ -277,24 +272,17 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
         )
         return e.join(support, ["a", "b"], "left_semi")
 
-    ctx = {"count": state.count()}
-
-    def _converged(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        c = new.count()
-        stable = c == ctx["count"]
-        ctx["count"] = c
-        return stable
-
     final, _rounds, _done = iterate(
         state,
         _step,
-        _converged,
+        probe.unchanged(),
         max_iter,
         warn=(
             f"k_truss: peeling did not reach a fixpoint within "
             f"max_iter={max_iter} rounds; result may contain edges "
             f"below the truss support"
         ),
+        probe=probe,
     )
     return final.select("a", "b")
 

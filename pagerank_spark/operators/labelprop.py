@@ -15,7 +15,8 @@ O(E)-row movement per round is the message delivery itself
 (groupBy(dst, label) with map-side partial counts), and the argmax is
 a single ``max(struct(count, -label))`` aggregate — no window
 function, no per-row Python. Lineage truncated per round with
-``localCheckpoint``.
+``localCheckpoint``; the changed-label count that stops the loop is
+observed on that checkpoint job (``plans.iterate.Probe``).
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ def label_propagation(
     max_iter: int = 10,
     directed: bool = False,
     seeds: DataFrame | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``DataFrame[id: long, label: long]`` after synchronous LPA.
 
@@ -47,10 +47,9 @@ def label_propagation(
     a small set of audited quality/spam labels through the link
     graph.
     """
-    P = (
-        num_partitions
-        or edges.sparkSession.sparkContext.defaultParallelism
-    )
+    from pagerank_spark.plans.iterate import Probe, iterate
+
+    P = edges.sparkSession.sparkContext.defaultParallelism
     # project first: a weighted edge table (LinkGraph.from_corpus /
     # from_cooccurrence) would otherwise break the symmetrizing union
     # on column count
@@ -65,20 +64,19 @@ def label_propagation(
     # partitioning and would re-shuffle all E rows every round. sym is
     # loop-invariant, so lineage truncation isn't needed here.
     sym = sym.repartition(P, "src").persist()
-    vertices = (
+    counted = Probe(n=F.count(F.lit(1)))
+    vertices = counted.checkpoint(
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
     # Label-side join strategy by measured n: broadcast while the label
     # table replicates cheaply (no exchange at all per round), else
     # shuffle-hash — which still moves only the O(n) label side and
     # never sorts the cached fat side. Either way the edge table's one
     # prepare-time shuffle is the only O(E) movement besides messages.
-    n = vertices.count()
+    n = counted.of(vertices)["n"]
     join_hint = "broadcast" if n <= 2_000_000 else "shuffle_hash"
-    from pagerank_spark.plans.iterate import iterate
 
     if seeds is not None:
         # one seed per vertex: duplicate ids would fan the vertex into
@@ -130,12 +128,14 @@ def label_propagation(
             "_pin",
         )
 
+    probe = Probe(changed=F.count_if(F.col("_chg")))
     labels, _rounds, _done = iterate(
         init,
         _step,
-        lambda _prev, new, _r: new.where(F.col("_chg")).count() == 0,
+        lambda _prev, new, _r: probe.of(new)["changed"] == 0,
         max_iter,
         # no warn: max_iter is the contract (fixed-round LPA is a thing)
+        probe=probe,
     )
     sym.unpersist()  # labels is checkpointed — safe to drop the cache
     return labels.select("id", "label")
@@ -357,7 +357,7 @@ def greedy_modularity_moves(
     # repartition unconditionally: an AQE-coalesced cache would run
     # every sweep round at low parallelism (measured on LPA/WL in r6)
     sym = sym.repartition(P, "src").persist()
-    from pagerank_spark.plans.iterate import iterate
+    from pagerank_spark.plans.iterate import Probe, iterate
 
     def _step(lab: DataFrame, _round: int) -> DataFrame:
         sc = (
@@ -417,19 +417,12 @@ def greedy_modularity_moves(
             "id", (-F.col("top._neg")).alias("label"),
         )
 
-    ctx = {"sig": None}
-
-    def _converged(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        row = new.agg(
-            F.bit_xor(F.xxhash64("id", "label")).alias("h")
-        ).collect()[0]
-        sig = int(row["h"] or 0)
-        if sig == ctx["sig"]:
-            return True  # no vertex moved: local optimum of the sweep
-        ctx["sig"] = sig
-        return False
-
-    out, _rounds, _done = iterate(lab0, _step, _converged, max_iter)
+    # an unchanged (id, label) xor: no vertex moved, a local optimum of
+    # the sweep; round 1 is compared to nothing
+    sig = Probe(h=F.bit_xor(F.xxhash64("id", "label")))
+    out, _rounds, _done = iterate(
+        lab0, _step, sig.unchanged(after=1), max_iter, probe=sig
+    )
     sym.unpersist()
     return out.select("id", "label")
 

@@ -15,8 +15,10 @@ result into an O(V) one; left-join against the vertex table to
 densify if needed.
 
 Convergence is exact and cheap by monotonicity: distances only ever
-decrease and the reached set only grows, so one (count, sum(dist))
-action per round proves a fixpoint — no row-wise comparison join.
+decrease and the reached set only grows, so an unchanged (count, xor)
+signature of consecutive rounds proves a fixpoint — no row-wise
+comparison join. The signature is a ``plans.iterate.Probe``, observed on
+the harness's per-round checkpoint job, so it runs no job of its own.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.plans.iterate import iterate
+from pagerank_spark.plans.iterate import Probe, iterate
 
 
 def shortest_paths(
@@ -85,31 +87,21 @@ def shortest_paths(
             .agg(F.min("dist").alias("dist"))
         )
 
-    ctx = {"sig": None}
-
-    def _converged(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        # count + order-insensitive xor checksum, NOT sum(dist): a
-        # float sum can absorb a real improvement (1e16 + 3.0 ==
-        # 1e16 + 2.0 in IEEE) declaring a false fixpoint, or differ by
-        # an ulp across partition orders at a true one. The checksum
-        # hashes each (id, dist) pair, so any change flips it (modulo
-        # 2^-64 collisions — same soundness class as CC's detector).
-        row = new.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("id", "dist")).alias("h"),
-        ).collect()[0]
-        sig = (int(row["c"]), int(row["h"] or 0))
-        if sig == ctx["sig"]:
-            return True  # monotone lattice: unchanged state == fixpoint
-        ctx["sig"] = sig
-        return False
-
+    # count + order-insensitive xor checksum, NOT sum(dist): a float
+    # sum can absorb a real improvement (1e16 + 3.0 == 1e16 + 2.0 in
+    # IEEE) declaring a false fixpoint, or differ by an ulp across
+    # partition orders at a true one. The checksum hashes each (id,
+    # dist) pair, so any change flips it (modulo 2^-64 collisions —
+    # same soundness class as CC's detector). Monotone lattice: an
+    # unchanged state is the fixpoint; round 1 is compared to nothing
+    sig = Probe(c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("id", "dist")))
     out, _rounds, _done = iterate(
-        state, _step, _converged, max_iter,
+        state, _step, sig.unchanged(after=1), max_iter,
         warn=(
             f"shortest_paths: distances did not stabilize within "
             f"max_iter={max_iter} rounds; reported distances are upper bounds"
         ),
+        probe=sig,
     )
     e.unpersist()
     return out
@@ -201,28 +193,18 @@ def multi_source_bfs(
             .agg(F.min("dist").alias("dist"))
         )
 
-    ctx = {"sig": None}
-
-    def _converged(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        # count + order-insensitive xor checksum (not sum(dist): float
-        # sums can absorb a real improvement — same rationale as
-        # shortest_paths)
-        row = new.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("source", "id", "dist")).alias("h"),
-        ).collect()[0]
-        sig = (int(row["c"]), int(row["h"] or 0))
-        if sig == ctx["sig"]:
-            return True  # monotone lattice fixpoint (same as shortest_paths)
-        ctx["sig"] = sig
-        return False
-
+    # count + order-insensitive xor checksum, not sum(dist): the
+    # monotone-lattice fixpoint test of shortest_paths
+    sig = Probe(
+        c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("source", "id", "dist"))
+    )
     out, _r, _done = iterate(
-        state, _step, _converged, max_iter,
+        state, _step, sig.unchanged(after=1), max_iter,
         warn=(
             f"multi_source_bfs: distances did not stabilize within "
             f"max_iter={max_iter} rounds; distances are upper bounds"
         ),
+        probe=sig,
     )
     e.unpersist()
     return out
@@ -384,20 +366,10 @@ def topological_levels(edges: DataFrame, max_iter: int = 100) -> DataFrame:
             "id", F.coalesce("_m", F.lit(0)).cast("long").alias("level")
         )
 
-    ctx = {"sig": None}
-
-    def _converged(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        row = new.agg(
-            F.bit_xor(F.xxhash64("id", "level")).alias("h")
-        ).collect()[0]
-        sig = int(row["h"] or 0)
-        if sig == ctx["sig"]:
-            return True
-        ctx["sig"] = sig
-        return False
-
+    # one row per vertex every round, so the xor alone is the signature
+    sig = Probe(h=F.bit_xor(F.xxhash64("id", "level")))
     out, _rounds, _done = iterate(
-        state, _step, _converged, max_iter,
+        state, _step, sig.unchanged(after=1), max_iter,
         warn=(
             "topological_levels: no fixpoint within "
             f"max_iter={max_iter} rounds — the graph contains a cycle "
@@ -405,6 +377,7 @@ def topological_levels(edges: DataFrame, max_iter: int = 100) -> DataFrame:
             "distinguish (levels on and below cycles grow every round, "
             "deep-DAG levels stabilize)"
         ),
+        probe=sig,
     )
     e.unpersist()
     return out
@@ -500,25 +473,16 @@ def widest_paths(
             .agg(F.max("width").alias("width"))
         )
 
-    ctx = {"sig": None}
-
-    def _converged(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        row = new.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("source", "id", "width")).alias("h"),
-        ).collect()[0]
-        sig = (int(row["c"]), int(row["h"] or 0))
-        if sig == ctx["sig"]:
-            return True
-        ctx["sig"] = sig
-        return False
-
+    sig = Probe(
+        c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("source", "id", "width"))
+    )
     out, _r, _done = iterate(
-        state, _step, _converged, max_iter,
+        state, _step, sig.unchanged(after=1), max_iter,
         warn=(
             f"widest_paths: widths did not stabilize within "
             f"max_iter={max_iter} rounds; widths are lower bounds"
         ),
+        probe=sig,
     )
     e.unpersist()
     return out

@@ -10,13 +10,14 @@ repeat until no vertices remain —
 
 1. **Color fixpoint**: ``color(v) = min({v} ∪ {color(u) : (u,v) ∈ E})``
    propagated to fixpoint — v's color is the smallest vertex that can
-   reach v. Colors only decrease, so one ``(count, sum)`` action per
-   round proves the fixpoint (same monotone-lattice trick as shortest
-   paths). Vertices with ``color(v) = v`` are roots.
+   reach v. Colors only decrease, so an unchanged ``(count, xor)``
+   signature of consecutive rounds proves the fixpoint (same
+   monotone-lattice trick as shortest paths). Vertices with
+   ``color(v) = v`` are roots.
 2. **Ownership fixpoint**: the SCC of root r is exactly the vertices
    of color r that can reach r. The membership flag propagates
    BACKWARD (v joins when some out-neighbor u with the same color is
-   already a member); the flag set only grows, so a count action
+   already a member); the flag set only grows, so an unchanged count
    detects the fixpoint.
 3. Members take ``component = color`` (the minimum id in the SCC —
    deterministic, partitioning-independent), are removed, and the
@@ -28,10 +29,11 @@ The adversarial worst case (a long directed path) degrades to O(path)
 outer rounds, which ``max_outer`` bounds with a warning; FW-BW-trim
 hybrids exist for that shape but are not warranted here.
 
-Both inner fixpoints run on ``plans.iterate``; the per-outer-round
-edge table is checkpointed once and the O(V) color/flag side moves
-per inner round (the ``plans.gather`` policy: broadcast below 100k
-vertices, shuffle-hash above).
+Both inner fixpoints run on ``plans.iterate``, and both signatures are
+observed on the harness's per-round checkpoint job (no probe job); the
+per-outer-round edge table is checkpointed once and the O(V)
+color/flag side moves per inner round (the ``plans.gather`` policy:
+broadcast below 100k vertices, shuffle-hash above).
 """
 
 from __future__ import annotations
@@ -41,43 +43,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.components import _count
 from pagerank_spark.plans.gather import edge_sides, score_join_hint
-from pagerank_spark.plans.iterate import iterate
-
-
-def _xor_sig_converged(cols: tuple[str, str]):
-    """Order-insensitive xor-checksum equality detector — one cheap
-    action per round, no ANSI overflow (a sum of id-sized longs over
-    billions of vertices would overflow; CC's convergence uses the
-    same trick). Sound here because colors change monotonically, so
-    consecutive-round equality can only be a 2^-64 hash collision."""
-    ctx = {"sig": None}
-
-    def check(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        row = new.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64(*cols)).alias("h"),
-        ).collect()[0]
-        sig = (int(row["c"]), int(row["h"] or 0))
-        stable = sig == ctx["sig"]
-        ctx["sig"] = sig
-        return stable
-
-    return check
-
-
-def _count_converged():
-    """Exact fixpoint detector for a strictly-growing distinct set."""
-    ctx = {"n": None}
-
-    def check(_prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        c = new.count()
-        stable = c == ctx["n"]
-        ctx["n"] = c
-        return stable
-
-    return check
+from pagerank_spark.plans.iterate import Probe, iterate
 
 
 # same adaptive policy as connected_components.LOCAL_CC_MAX_E: below
@@ -160,23 +127,20 @@ def strongly_connected_components(
     if mode not in ("auto", "local", "coloring"):
         raise ValueError("mode must be 'auto', 'local' or 'coloring'")
     spark = edges.sparkSession
-    e = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint()
+    counted = Probe(c=F.count(F.lit(1)))
+    e = counted.checkpoint(
+        edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     )
-    remaining = (
+    remaining = counted.checkpoint(
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
     if mode == "local" or (
-        mode == "auto" and _count(e) <= LOCAL_SCC_MAX_E
+        mode == "auto" and counted.of(e)["c"] <= LOCAL_SCC_MAX_E
     ):
         return _scc_local(spark, remaining, e)
-    n = remaining.count()
+    n = counted.of(remaining)["c"]
     # per-round driver broadcasts of the O(V) color/flag side dominate
     # past the shared cutoff, while shuffle-hash against the per-round
     # partitioned caches moves only one O(V) exchange per join
@@ -184,67 +148,82 @@ def strongly_connected_components(
     done: list[DataFrame] = []
 
     for _outer in range(max_outer):
-        if remaining.isEmpty():
+        if counted.of(remaining)["c"] == 0:
             break
         # loop-invariant (per outer round) edge copies: the color join
-        # keys on src, the ownership join on dst
+        # keys on src, the ownership join on dst; released on success
+        # and on failure
         e_src, e_dst = edge_sides(e, hint, ["src", "dst"])
-
-        # 1) color fixpoint (forward min-label propagation)
-        def _color_step(colors: DataFrame, _r: int) -> DataFrame:
-            prop = e_src.join(
-                colors.withColumnRenamed("id", "src").hint(hint), "src"
-            ).select(F.col("dst").alias("id"), "color")
-            return (
-                colors.unionByName(prop)
-                .groupBy("id")
-                .agg(F.min("color").alias("color"))
-            )
-
-        colors, _r, _ok = iterate(
-            remaining.select("id", F.col("id").alias("color")),
-            _color_step,
-            _xor_sig_converged(("id", "color")),
-            max_iter,
-            warn="scc: color propagation hit max_iter before fixpoint; "
-            "components may be split (raise max_iter)",
-        )
-
-        # 2) ownership fixpoint: members of color class c that reach
-        # the root c, propagated backward along edges
-        roots = colors.where(F.col("id") == F.col("color")).select(
-            "id", "color"
-        )
-
-        def _member_step(members: DataFrame, _r: int) -> DataFrame:
-            # v joins when an out-neighbor u is a member of v's class
-            reach = (
-                e_dst.join(
-                    members.withColumnRenamed("id", "dst")
-                    .withColumnRenamed("color", "mcolor")
-                    .hint(hint),
-                    "dst",
+        try:
+            # 1) color fixpoint (forward min-label propagation)
+            def _color_step(colors: DataFrame, _r: int) -> DataFrame:
+                prop = e_src.join(
+                    colors.withColumnRenamed("id", "src").hint(hint), "src"
+                ).select(F.col("dst").alias("id"), "color")
+                return (
+                    colors.unionByName(prop)
+                    .groupBy("id")
+                    .agg(F.min("color").alias("color"))
                 )
-                .select(F.col("src").alias("id"), F.col("mcolor"))
-                .join(colors.hint(hint), "id")
-                .where(F.col("color") == F.col("mcolor"))
-                .select("id", "color")
+
+            # colors only decrease, so an unchanged (count, xor)
+            # signature of consecutive rounds is the fixpoint (up to a
+            # 2^-64 collision); round 1 is compared to nothing
+            sig = Probe(
+                c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("id", "color"))
             )
-            return members.unionByName(reach).distinct()
+            colors, _r, _ok = iterate(
+                remaining.select("id", F.col("id").alias("color")),
+                _color_step,
+                sig.unchanged(after=1),
+                max_iter,
+                warn="scc: color propagation hit max_iter before fixpoint; "
+                "components may be split (raise max_iter)",
+                probe=sig,
+            )
 
-        members, _r2, _ok2 = iterate(
-            roots,
-            _member_step,
-            _count_converged(),
-            max_iter,
-            warn="scc: membership propagation hit max_iter before "
-            "fixpoint; components may be incomplete (raise max_iter)",
-        )
+            # 2) ownership fixpoint: members of color class c that reach
+            # the root c, propagated backward along edges
+            roots = colors.where(F.col("id") == F.col("color")).select(
+                "id", "color"
+            )
 
+            def _member_step(members: DataFrame, _r: int) -> DataFrame:
+                # v joins when an out-neighbor u is a member of v's class
+                reach = (
+                    e_dst.join(
+                        members.withColumnRenamed("id", "dst")
+                        .withColumnRenamed("color", "mcolor")
+                        .hint(hint),
+                        "dst",
+                    )
+                    .select(F.col("src").alias("id"), F.col("mcolor"))
+                    .join(colors.hint(hint), "id")
+                    .where(F.col("color") == F.col("mcolor"))
+                    .select("id", "color")
+                )
+                return members.unionByName(reach).distinct()
+
+            # the member set only grows: an unchanged count is the fixpoint
+            grown = Probe(c=F.count(F.lit(1)))
+            members, _r2, _ok2 = iterate(
+                roots,
+                _member_step,
+                grown.unchanged(after=1),
+                max_iter,
+                warn="scc: membership propagation hit max_iter before "
+                "fixpoint; components may be incomplete (raise max_iter)",
+                probe=grown,
+            )
+        finally:
+            e_src.unpersist()
+            e_dst.unpersist()
         done.append(
             members.select("id", F.col("color").alias("component"))
         )
-        remaining = remaining.join(members, "id", "left_anti").localCheckpoint()
+        remaining = counted.checkpoint(
+            remaining.join(members, "id", "left_anti")
+        )
         kept = remaining.withColumnRenamed("id", "_k")
         e = (
             e.join(kept.withColumnRenamed("_k", "src"), "src", "left_semi")
@@ -252,10 +231,8 @@ def strongly_connected_components(
             .select("src", "dst")
             .localCheckpoint()
         )
-        e_src.unpersist()
-        e_dst.unpersist()
     else:
-        if not remaining.isEmpty():
+        if counted.of(remaining)["c"]:
             warnings.warn(
                 f"scc: {max_outer} outer rounds exhausted with vertices "
                 "remaining (long SCC-condensation chain); unresolved "

@@ -25,6 +25,29 @@ check.
   ``local[32]``: 12.8 s before this every-third-round rule, 5.26 s
   with it).
 
+**Observed probes.** A probing loop whose stop test reads exact integer
+aggregates (``count``, ``count_if``, ``bit_xor(xxhash64(...))``) names
+them in a :class:`Probe`. The harness attaches a fresh
+``pyspark.sql.Observation`` to every new state before its eager
+``localCheckpoint``, so the checkpoint job fills the row and the stop
+test runs no job of its own (jobs per round: LPA 8 → 6, k_core 5 → 3).
+The contract:
+
+- integer aggregates only. An observed float sum merges task partials
+  in completion order, so it is not reproducible run to run; the float
+  L1 probes (``gather.l1_converged``) stay on ``collect``;
+- the eager checkpoint fills the row, so a probe needs
+  ``checkpoint=True``: ``Observation.get`` blocks until an action fills
+  it, and without the checkpoint nothing would (the harness raises
+  instead of hanging);
+- a task retried after a fetch failure can add its partition twice to
+  the observed row. A doubled partition changes the count, so the
+  stop test can only see a spurious change — at most one extra round,
+  never an early stop;
+- a state the harness did not checkpoint (the first state after
+  ``resume``) has no observed row; ``Probe.of`` then runs the same
+  aggregates once as an explicit job.
+
 The C reference hand-rolls the equivalent do-while in every variant
 (``Page_Rank_SERIAL.c:206-279``). Here the operators that loop over
 Spark rounds are expressed on ``iterate``; a few older round loops
@@ -36,10 +59,50 @@ import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 # fixed-horizon checkpoint cadence (see the module docstring)
 FIXED_HORIZON_CHECKPOINT_EVERY = 3
+
+
+class Probe:
+    """Named exact integer aggregates, observed on eager checkpoints.
+
+    ``Probe(c=F.count(F.lit(1)))``; ``probe.checkpoint(df)`` is an eager
+    ``localCheckpoint`` whose job also computes the aggregates, and
+    ``probe.of(df)`` returns them as a dict for a frame this probe
+    checkpointed (no job), or runs them once for any other frame.
+    """
+
+    def __init__(self, **aggs: Column):
+        self._aggs = [c.alias(k) for k, c in aggs.items()]
+        # (frame, row) of the most recent checkpoints: a stop test reads
+        # the previous and the new state, never older ones
+        self._rows: list[tuple[DataFrame, dict]] = []
+
+    def _remember(self, df: DataFrame, row: dict) -> None:
+        self._rows = self._rows[-1:] + [(df, row)]
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        obs = Observation()
+        out = df.observe(obs, *self._aggs).localCheckpoint()
+        self._remember(out, obs.get)
+        return out
+
+    def of(self, df: DataFrame) -> dict:
+        for seen, row in self._rows:
+            if seen is df:
+                return row
+        row = df.agg(*self._aggs).collect()[0].asDict()
+        self._remember(df, row)
+        return row
+
+    def unchanged(self, after: int = 0):
+        """Stop test: the new state's row equals the previous state's.
+        Rounds up to ``after`` never stop (and never read ``prev``)."""
+        return lambda prev, new, r: (
+            r > after and self.of(new) == self.of(prev)
+        )
 
 
 def iterate(
@@ -51,6 +114,7 @@ def iterate(
     warn: str | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = False,
+    probe: Probe | None = None,
 ) -> tuple[DataFrame, int, bool]:
     """Run ``state = step(state, round)`` until ``converged`` or
     ``max_iter`` rounds; returns ``(state, rounds_run, converged)``.
@@ -60,8 +124,14 @@ def iterate(
       plans never grow with the round count.
     - ``converged(prev, new, round)`` runs AFTER the checkpoint, so any
       action it triggers (count, agg) scans materialized partitions; it
-      may carry loop state in a closure (e.g. CC's count-first /
-      lazy-hash detection) and record per-round metrics.
+      may carry loop state in a closure and record per-round metrics.
+    - ``probe``: the stop test's integer aggregates; every round's state
+      is checkpointed through it, so ``converged`` reads
+      ``probe.of(new)`` (and ``probe.of(prev)``) without a job. Needs a
+      probing loop with ``checkpoint=True`` (see the module docstring).
+      It is an argument of its own, not found on ``converged``, because
+      a caller that wraps ``converged`` (a round tracer) would hide it:
+      the stop test would then run its aggregates as jobs again.
     - ``converged=None`` is the fixed-horizon mode: exactly
       ``max_iter`` rounds, no probe, a checkpoint every
       ``FIXED_HORIZON_CHECKPOINT_EVERY`` rounds; the returned flag is
@@ -83,6 +153,11 @@ def iterate(
       parquet, so a crash between the two resumes one round back —
       never forward into missing data.
     """
+    if probe is not None and (converged is None or not checkpoint):
+        raise ValueError(
+            "an observed probe is filled by the per-round eager "
+            "checkpoint: it needs converged and checkpoint=True"
+        )
     rounds = 0
     done = False
     manifest = (
@@ -112,9 +187,12 @@ def iterate(
             # eager on purpose: several convergence callbacks probe with
             # partial-evaluation actions (isEmpty / limit-count), and a
             # LAZY localCheckpoint finalized by a partial job is the
-            # classic missing-block hazard; the measured saving of
-            # fusing materialize+probe was within box noise (r6)
-            new = new.localCheckpoint()
+            # classic missing-block hazard. An observed probe rides on
+            # this job, so its stop test runs none of its own
+            new = (
+                probe.checkpoint(new) if probe is not None
+                else new.localCheckpoint()
+            )
         fin = (
             converged(state, new, rounds)
             if converged is not None

@@ -181,6 +181,48 @@ def test_cc_warns_when_max_iter_exhausted(spark):
     assert any("did not stabilize" in str(x.message) for x in w)
 
 
+def _jobs(spark, tag, fn):
+    """Spark jobs one call (collected) runs, counted by statusTracker."""
+    import warnings
+
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")  # max_iter exhaustion
+            fn().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_jobs_per_round_cc_stars_and_lpa(spark):
+    """Upper bounds on Spark jobs per round: CC by stars is one exchange
+    per star operation plus small-star's distinct, and the checkpoint
+    job (its signature probe is observed on that job); LPA's round plan
+    plus its checkpoint, whose changed-label count is observed too.
+    Two rounds are the difference between max_iter=3 and max_iter=1 on
+    graphs that do not settle within three rounds."""
+    path = edges_df(spark, [(i, i + 1) for i in range(63)]).localCheckpoint()
+    ring = edges_df(
+        spark,
+        [(i, (i + 1) % 40) for i in range(40)]
+        + [(i, (i + 7) % 40) for i in range(0, 40, 5)],
+    ).localCheckpoint()
+    per_round = {}
+    for name, call in (
+        ("cc", lambda k: connected_components(path, max_iter=k, mode="stars")),
+        ("lpa", lambda k: label_propagation(ring, max_iter=k)),
+    ):
+        one = _jobs(spark, f"{name}-1", lambda: call(1))
+        three = _jobs(spark, f"{name}-3", lambda: call(3))
+        per_round[name] = (three - one) / 2
+    # the signature/count probe and AQE's job per exchange made these
+    # 14 (CC) and 8 (LPA)
+    assert 0 < per_round["cc"] <= 6, per_round
+    assert 0 < per_round["lpa"] <= 7, per_round
+
+
 def test_cc_count_first_detection_same_labels(spark):
     """The cheaper convergence detection must not change labels."""
     e = synth_edges(spark, 200, 600, seed=7)
@@ -888,6 +930,28 @@ def test_scc_max_outer_fallback_warns_and_labels_singletons(spark):
         }
     assert any("outer rounds exhausted" in str(x.message) for x in w)
     assert got == {i: i for i in range(7)}
+
+
+def test_failed_scc_round_leaves_no_cached_edges(spark, monkeypatch):
+    """A failure inside an outer coloring round still unpersists that
+    round's edge copies."""
+    import importlib
+
+    import pytest as _pytest
+
+    mod = importlib.import_module("pagerank_spark.operators.scc")
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected fixpoint failure")
+
+    monkeypatch.setattr(mod, "iterate", boom)
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long"
+    )
+    spark.catalog.clearCache()
+    with _pytest.raises(RuntimeError, match="injected fixpoint failure"):
+        mod.strongly_connected_components(e, mode="coloring")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_new_operators_handle_empty_graph(spark):

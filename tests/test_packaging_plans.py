@@ -283,6 +283,43 @@ def test_iterate_harness_semantics(spark):
     assert len(out3._jdf.queryExecution().optimizedPlan().toString()) < 2000
 
 
+def test_observed_probe_rides_on_the_checkpoint(spark):
+    """A probe's observed row equals the explicit aggregate over the
+    checkpointed state, costs no job of its own, and a probe without
+    the eager checkpoint that fills it raises instead of hanging."""
+    from pagerank_spark.plans.iterate import Probe, iterate
+
+    s0 = spark.range(40).select(F.col("id"), (F.col("id") % 7).alias("v"))
+    probe = Probe(
+        c=F.count(F.lit(1)),
+        big=F.count_if(F.col("v") >= 3),
+        h=F.bit_xor(F.xxhash64("id", "v")),
+    )
+
+    def step(s, _r):
+        return s.select("id", F.least(F.col("v") + 1, F.lit(4)).alias("v"))
+
+    out, rounds, done = iterate(s0, step, probe.unchanged(), 10, probe=probe)
+    assert (rounds, done) == (5, True)
+    want = out.agg(
+        F.count(F.lit(1)).alias("c"),
+        F.count_if(F.col("v") >= 3).alias("big"),
+        F.bit_xor(F.xxhash64("id", "v")).alias("h"),
+    ).collect()[0].asDict()
+    sc = spark.sparkContext
+    sc.setJobGroup("observed-probe", "observed-probe")
+    try:
+        assert probe.of(out) == want
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("observed-probe") == []
+    counted = Probe(c=F.count(F.lit(1)))
+    with pytest.raises(ValueError, match="checkpoint"):
+        iterate(s0, step, counted.unchanged(), 3, checkpoint=False, probe=counted)
+    with pytest.raises(ValueError, match="checkpoint"):
+        iterate(s0, step, None, 3, probe=counted)
+
+
 def test_linkpred_and_cooccur_no_cartesian(spark):
     """The wedge joins must stay equi-joins — a fallback to
     CartesianProduct would be the 100 TB scale-killer."""
