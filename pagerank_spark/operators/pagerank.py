@@ -30,16 +30,19 @@ gather runs; join keeps ranks distributed on ``plans.iterate``:
   iteration — the Spark analogue of the reference's replicated
   ``complete_page_ranks[n]`` (``Page_Rank_Basic.c:170,353-355``), but
   with O(1) driver messages per iteration instead of O(P*n) floats.
-  Edges are hash-partitioned by ``dst`` (heavy destinations salted by
-  ``src``) in ONE shuffle, and each partition is materialized ONCE as
-  a CSR-style block (src array + destination-group index + sorted
-  distinct dst ids) in an Arrow IPC file on executor scratch. Each
-  iteration is then ONE zero-shuffle job over a tiny partition-id
-  frame: tasks memory-map their block (zero-copy) and compute
-  per-destination partial sums with one ``np.bincount`` (zero per-row
-  Python, zero per-iteration edge movement through the JVM<->Python
-  bridge); the driver collects O(n) partials, applies teleport +
-  dangling mass, and computes the L1 residual in NumPy. This is the
+  ONE degree pass over both endpoints gives the out-strengths, the
+  dangling mask and the heavy destinations; edges are hash-partitioned
+  by ``dst`` (heavy destinations salted by ``src``) in ONE shuffle, and
+  each partition is materialized ONCE as a CSR-style block (src array +
+  destination-group index + sorted distinct dst ids) in an Arrow IPC
+  file on executor scratch. Each iteration then re-runs ONE frame over
+  a tiny partition-id range, built once per call with its kernel and
+  proven zero-shuffle from its plan: tasks memory-map their block
+  (zero-copy) and compute per-destination partial sums with one
+  ``np.bincount`` (zero per-row Python, zero per-iteration edge
+  movement through the JVM<->Python bridge); the driver collects O(n)
+  partials, applies teleport + dangling mass, and computes the L1
+  residual in NumPy. This is the
   "salted, hash-partitioned CSR-style block partitions ... held in
   Arrow buffers" design of the north_star. Measured in round 6 on a
   32-core box (20M edges): ~0.8s/iter at 32 cores vs ~2.8s at 8 cores
@@ -63,9 +66,13 @@ scanned, residual, seconds, skew ratio), per north_rule.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
+import tempfile
 import time
+import uuid
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -75,6 +82,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pagerank_spark.plans.gather import gather_sum, l1_delta
+from pagerank_spark.plans.inspect import plan_has
 from pagerank_spark.plans.iterate import iterate
 from pagerank_spark.plans.metrics import (
     shuffle_delta as _shuffle_delta,
@@ -98,6 +106,9 @@ BROADCAST_MAX_N = 1 << 26
 # and are what `auto` picks beyond these thresholds.
 LOCAL_MAX_E = 2_000_000
 LOCAL_MAX_N = 1_000_000
+
+# Metric fields of an iteration whose plan moves no shuffle data.
+_NO_SHUFFLE = {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0}
 
 
 @dataclass
@@ -132,8 +143,6 @@ def pagerank_two_phase(
     share one block store and one checkpoint lineage, so phase 2 starts
     from phase 1's rank vector without rebuilding anything.
     """
-    import tempfile
-
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="pagerank_two_phase_")
     owns = checkpoint_dir is None
     try:
@@ -156,8 +165,6 @@ def pagerank_two_phase(
         )
     finally:
         if owns:
-            import shutil
-
             shutil.rmtree(ckpt, ignore_errors=True)
     return p2
 
@@ -444,11 +451,10 @@ def _pagerank_local(
     lineage = {"num_partitions": 1, "edge_count": len(src), "mode": "local",
                "skew_ratio": 1.0}
     # the loop runs on the driver: provably zero shuffle bytes
-    no_shuffle = {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0}
     return _power_loop(
         edges.sparkSession, n, d, eps, dangling, max_iter, checkpoint_dir,
         resume, personalize, init_vec, strength == 0.0, lineage,
-        lambda rank, _it, _base: (dst, w_edge * rank[src], no_shuffle),
+        lambda rank, _it, _base: (dst, w_edge * rank[src], _NO_SHUFFLE),
     )
 
 
@@ -550,6 +556,9 @@ def _block_build_kernel(block_dir: str, strength_path: str):
 # of the reference's persistent per-process `complete_page_ranks`
 # buffer (Page_Rank_Basic.c:170).
 _VEC_CACHE: dict = {}
+# Task-local properties carrying one iteration's inputs to the kernel.
+_ITER_PROP = "pagerank.iteration"
+_BASE_PROP = "pagerank.base"
 
 
 def _load_vec(path: str, version) -> np.ndarray:
@@ -561,16 +570,18 @@ def _load_vec(path: str, version) -> np.ndarray:
 
 
 def _block_kernel(
-    block_dir: str, rank_path: str, iteration: int, expected_pids: frozenset,
-    k: int = 1, base: float = 0.0,
+    block_dir: str, rank_path: str, expected_pids: frozenset, k: int = 1,
 ):
-    """Per-iteration gather over materialized blocks: memory-map the
-    Arrow file (zero-copy), gather wfac*rank[src] from the replicated
-    vector, one bincount per block — the NumPy analogue of the
-    reference's per-adjacency-list accumulate
+    """Gather over materialized blocks, built once per call and re-run
+    each iteration: memory-map the Arrow file (zero-copy), gather
+    wfac*rank[src] from the replicated vector, one bincount per block —
+    the NumPy analogue of the reference's per-adjacency-list accumulate
     (``Page_Rank_SERIAL.c:228-240``), at zero per-iteration edge
     movement through the JVM<->Python bridge. With ``k == 1`` it yields
-    per-destination contribution PARTIALS.
+    per-destination contribution PARTIALS. The iteration number (the
+    vector's cache key) and the teleport base come from task-local
+    properties the driver sets around each action; without them a task
+    raises rather than serve a cached vector.
 
     With ``k > 1`` (O18) it runs k block-Jacobi sub-iterations per
     global sync (``Page_Rank_improved.c:404-468``'s phase 2,
@@ -590,7 +601,16 @@ def _block_kernel(
     """
 
     def kernel(batches):
-        r = _load_vec(rank_path, iteration)
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        iteration = ctx.getLocalProperty(_ITER_PROP)
+        if iteration is None:
+            raise RuntimeError(
+                f"block kernel ran without the {_ITER_PROP} task property"
+            )
+        r = _load_vec(rank_path, int(iteration))
+        base = float.fromhex(ctx.getLocalProperty(_BASE_PROP))
         for batch in batches:
             for pid in batch.column("pid").to_pylist():
                 path = os.path.join(block_dir, f"block_{pid:05d}.arrow")
@@ -609,12 +629,8 @@ def _block_kernel(
                     src = tbl.column("src").to_numpy(zero_copy_only=False)
                     inv = tbl.column("inv").to_numpy(zero_copy_only=False)
                     wfac = tbl.column("wfac").to_numpy(zero_copy_only=False)
-                    uniq = (
-                        pa.ipc.open_file(mu)
-                        .read_all()
-                        .column("uniq")
-                        .to_numpy(zero_copy_only=False)
-                    )
+                    uniq = pa.ipc.open_file(mu).read_all().column("uniq")
+                    uniq = uniq.to_numpy(zero_copy_only=False)
                     if k == 1:
                         out = np.bincount(
                             inv, weights=wfac * r[src], minlength=len(uniq)
@@ -643,7 +659,10 @@ def _pagerank_broadcast(
 ):
     """Block-partitioned broadcast-rank strategy (the scale path).
 
-    Prepare (once): ONE shuffle hash-partitioning edges by ``dst``
+    Prepare (once): ONE degree pass over both endpoints of every edge
+    (out-strength and in-count per vertex, collected as O(n) rows)
+    yields the dangling mask, the d/strength vector and the heavy
+    destinations; then ONE shuffle hash-partitions edges by ``dst``
     (heavy destinations salted across sub-partitions by ``src`` so no
     single partition collapses under skew), then each partition is
     materialized as a CSR-style block — src ids + destination-group
@@ -659,7 +678,10 @@ def _pagerank_broadcast(
     partials, adds teleport + dangling mass, and evaluates the L1
     residual — the Spark analogue of the reference's replicated
     rank vector + master combine (``Page_Rank_Basic.c:170,313-355``)
-    with O(1) control messages.
+    with O(1) control messages. The iteration frame and its kernel are
+    built once per call and re-run each iteration; its physical plan
+    is checked once to hold no ``Exchange``, so the metric rows record
+    zero shuffle bytes from the plan, as the local strategy does.
     """
     spark = edges.sparkSession
     sc = spark.sparkContext
@@ -670,15 +692,11 @@ def _pagerank_broadcast(
         if checkpoint_dir is not None:
             block_dir = os.path.join(checkpoint_dir, "blocks")
         else:
-            import tempfile
-
             block_dir = tempfile.mkdtemp(prefix="pagerank_blocks_")
     os.makedirs(block_dir, exist_ok=True)
     # Per-run token: vector filenames are unique per run, so reused
     # Python worker processes can never serve a stale cached vector
     # from an earlier run that shared this block_dir path.
-    import uuid
-
     run_token = uuid.uuid4().hex[:12]
     strength_path = os.path.join(block_dir, f"strength_vec_{run_token}.npy")
     rank_path = os.path.join(block_dir, f"rank_vec_{run_token}.npy")
@@ -686,7 +704,6 @@ def _pagerank_broadcast(
 
     manifest_path = os.path.join(block_dir, "blocks_manifest.json")
     lineage = None
-    pids = None
     try:
         if resume and os.path.exists(manifest_path) and os.path.exists(mask_path):
             with open(manifest_path) as f:
@@ -699,16 +716,17 @@ def _pagerank_broadcast(
             # a resume touches the input edge table ZERO times.
             dangling_mask = np.load(mask_path).astype(bool)
         if lineage is None:
-            # Out-strength vector (duplicates counted; = out-degree when
-            # unweighted). One shuffle, n-bounded.
-            str_agg = (
-                F.sum(F.col(weight_col).cast("double"))
-                if weight_col
-                else F.count(F.lit(1))
-            )
-            deg_pdf = edges.groupBy("src").agg(str_agg.alias("c")).toPandas()
+            # One degree pass over both endpoints: out-strength s (duplicates
+            # counted; = out-degree when unweighted) and in-count c per
+            # vertex. One shuffle, n-bounded.
+            w = F.col(weight_col).cast("double") if weight_col else F.lit(1)
+            zero = F.lit(0.0 if weight_col else 0)
+            deg = edges.select(F.inline(F.array(
+                F.struct(F.col("src").alias("v"), w.alias("s"), F.lit(0).alias("c")),
+                F.struct(F.col("dst").alias("v"), zero.alias("s"), F.lit(1).alias("c")),
+            ))).groupBy("v").agg(*(F.sum(c).alias(c) for c in "sc")).toPandas()
             out_deg = np.zeros(n, dtype=np.float64)
-            out_deg[deg_pdf["src"].to_numpy()] = deg_pdf["c"].to_numpy()
+            out_deg[deg["v"].to_numpy()] = deg["s"].to_numpy()
             dangling_mask = out_deg == 0.0
             weights = np.zeros(n, dtype=np.float64)
             nz = ~dangling_mask
@@ -730,23 +748,14 @@ def _pagerank_broadcast(
             # src, bounding the largest block. Partial sums for a salted dst
             # land in several blocks; the driver's np.add.at recombines them
             # exactly (summation stays keyed by true dst).
-            if e_count is None:
-                e_count = edges.count()
             thresh = salt_threshold if salt_threshold is not None else max(
                 e_count // max(P, 1), 1_000
             )
-            if local_iters > 1:
-                # Block-Jacobi needs each dst's full in-adjacency in ONE
-                # block (it emits values, not partials) — salting off.
-                heavy = []
-            else:
-                heavy = [
-                    int(r["dst"])
-                    for r in edges.groupBy("dst")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .where(F.col("c") > thresh)
-                    .collect()
-                ]
+            # Block-Jacobi needs each dst's full in-adjacency in ONE block
+            # (it emits values, not partials) — salting off.
+            heavy = [] if local_iters > 1 else (
+                deg["v"][deg["c"] > max(thresh, 0)].astype(int).tolist()
+            )
             salt_fanout = min(P, 16)
             if heavy:
                 pk = F.when(
@@ -800,31 +809,28 @@ def _pagerank_broadcast(
         # Tiny driver frame: exactly one partition per block id (range with
         # numPartitions=P places id i in partition i — a hash repartition
         # would leave ~1/e of tasks empty and pile blocks onto others).
-        pids = (
-            spark.range(0, lineage["num_partitions"], 1, lineage["num_partitions"])
-            .select(F.col("id").cast("int").alias("pid"))
-            .persist()
+        # Built once with its kernel; each iteration re-runs it.
+        frame = spark.range(
+            0, lineage["num_partitions"], 1, lineage["num_partitions"]
+        ).select(F.col("id").cast("int").alias("pid")).mapInArrow(
+            _block_kernel(block_dir, rank_path, expected_pids, local_iters),
+            "dst long, s double",
         )
-        pids.count()
-        # settled: the status store is fed asynchronously — an unsettled
-        # baseline could attribute late-posted PREPARE stages to iteration 1
-        # and break the measured zero-shuffle-per-iteration claim
-        shuffle_before = _shuffle_totals_settled(spark)
+        # zero-shuffle iterations by design (blocks are mmapped
+        # executor-local Arrow files): proven once from the plan
+        if plan_has(frame, "Exchange"):
+            raise RuntimeError("block iteration plan contains an Exchange")
 
         def gather(rank, iteration, base):
-            nonlocal shuffle_before
             _atomic_np_save(rank_path, rank)
-            kern = _block_kernel(
-                block_dir, rank_path, iteration, expected_pids, local_iters, base
-            )
-            parts = pids.mapInArrow(kern, "dst long, s double").toPandas()
-            # zero-shuffle iterations by design (blocks are mmapped
-            # executor-local Arrow files); the MEASURED bytes from
-            # the monitoring API prove it rather than assert it.
-            shuffle_after = _shuffle_totals(spark)
-            delta = _shuffle_delta(shuffle_before, shuffle_after)
-            shuffle_before = shuffle_after
-            return parts["dst"].to_numpy(), parts["s"].to_numpy(), delta
+            sc.setLocalProperty(_ITER_PROP, str(iteration))
+            sc.setLocalProperty(_BASE_PROP, float(base).hex())  # exact
+            try:
+                parts = frame.toPandas()
+            finally:
+                sc.setLocalProperty(_ITER_PROP, None)
+                sc.setLocalProperty(_BASE_PROP, None)
+            return parts["dst"].to_numpy(), parts["s"].to_numpy(), _NO_SHUFFLE
 
         return _power_loop(
             spark, n, d, eps, dangling, max_iter, checkpoint_dir, resume,
@@ -833,12 +839,8 @@ def _pagerank_broadcast(
         )
     finally:
         # on success AND on failure: a raised iteration must not leak
-        # the cached pid frame or this run's scratch
-        if pids is not None:
-            pids.unpersist()
+        # this run's scratch
         if owns_block_dir:
-            import shutil
-
             shutil.rmtree(block_dir, ignore_errors=True)
         else:
             # shared/caller-owned dir: clean up THIS run's vector files so
@@ -1018,12 +1020,9 @@ def _save_checkpoint_df(ckpt_dir, ranks_df, iteration, metrics, lineage):
     # O(1) checkpoint storage (mirrors the single-file overwrite the
     # broadcast/local strategies use). A crash mid-delete is harmless:
     # the manifest is already durable and names only the new path.
-    import glob as _glob
-    import shutil as _shutil
-
-    for old in _glob.glob(os.path.join(ckpt_dir, "rank_iter_*.parquet")):
+    for old in glob.glob(os.path.join(ckpt_dir, "rank_iter_*.parquet")):
         if os.path.abspath(old) != os.path.abspath(path):
-            _shutil.rmtree(old, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
 
 
 def _write_manifest(ckpt_dir, iteration, metrics, lineage, rank_path):

@@ -4,10 +4,13 @@ The reference instruments its kernel with PAPI hardware counters and
 wall-clock timers (``Page_Rank_MPI_2.c:70-87,403-412``); the Spark
 analogue for "how much data moved" is the per-stage shuffle read/write
 byte counters exposed by the public monitoring API
-(``/api/v1/applications/<id>/stages``). ``pagerank`` snapshots these
-around every iteration so the checkpoint manifest records MEASURED
-shuffle bytes per iteration (north_rule "per-partition lineage +
-metrics") instead of a static estimate.
+(``/api/v1/applications/<id>/stages``). Only join-strategy
+``pagerank`` snapshots these, around every iteration, so its checkpoint
+manifest records MEASURED shuffle bytes per iteration (north_rule
+"per-partition lineage + metrics") instead of a static estimate. The
+local and block strategies move no shuffle data by construction (the
+block iteration's plan is checked to hold no ``Exchange``) and record
+zero without reading the store.
 
 Requires the UI server (``spark.ui.enabled=true`` — Spark's stock
 default, and the engine session's default). When the UI is disabled

@@ -115,8 +115,9 @@ def get_spark(
         # and dedup kernels.
         "spark.sql.execution.arrow.maxRecordsPerBatch": "1000000",
         # Spark's stock default; the monitoring REST API it serves is
-        # how pagerank records MEASURED shuffle bytes per iteration
-        # (plans/metrics.py). SPARK_UI=false opts out for minimal runs.
+        # how join-strategy pagerank records MEASURED shuffle bytes per
+        # iteration (plans/metrics.py). SPARK_UI=false opts out for
+        # minimal runs.
         "spark.ui.enabled": os.environ.get("SPARK_UI", "true"),
         "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": os.environ.get(
