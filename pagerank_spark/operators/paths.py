@@ -1,10 +1,11 @@
-"""Shortest paths (BFS levels / Bellman-Ford) on the iterate harness.
+"""Shortest paths (BFS levels / Bellman-Ford) and the rest of the path
+family, each one ``plans.gather.relax`` call.
 
-Not in the C reference (it computes only PageRank); this is the first
-consumer of the generic ``plans.iterate`` extension point beyond the
-original three algorithms — per-round relaxation is a join + min
-aggregate, lineage truncation and convergence handling come from the
-harness.
+Not in the C reference (it computes only PageRank). A relaxation round
+is a join + fold aggregate; the fixpoint loop, its convergence probe
+and lineage truncation come from ``relax`` on the ``plans.iterate``
+harness. The semiring picks the fold: (min, +) for distances, (max,
+min) for widths, (max, +) for topological levels.
 
 Semantics: distance from the NEAREST source over DIRECTED edges
 (symmetrize upstream for undirected). Unweighted = hop count (BFS
@@ -17,8 +18,7 @@ densify if needed.
 Convergence is exact and cheap by monotonicity: distances only ever
 decrease and the reached set only grows, so an unchanged (count, xor)
 signature of consecutive rounds proves a fixpoint — no row-wise
-comparison join. The signature is a ``plans.iterate.Probe``, observed on
-the harness's per-round checkpoint job, so it runs no job of its own.
+comparison join (see ``relax``).
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.plans.iterate import Probe, iterate
+from pagerank_spark.plans.gather import relax, relax_edges
 
 
 def shortest_paths(
@@ -44,67 +44,23 @@ def shortest_paths(
     """
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = edges.sparkSession
-    # min-plus semiring: parallel edges are EXACTLY redundant — only
-    # the minimum-weight instance of a (src, dst) pair can ever win a
-    # relaxation — so the multigraph collapses to its distinct edge
-    # set (min weight per pair) with bit-identical distances, and
-    # every round's relax join moves duplication-factor fewer rows
-    if weight_col:
-        e = (
-            edges.select(
-                "src", "dst", F.col(weight_col).cast("double").alias("_w")
-            )
-            .groupBy("src", "dst")
-            .agg(F.min("_w").alias("_w"))
-        )
-        zero = F.lit(0.0)
-    else:
-        e = (
-            edges.select("src", "dst")
-            .distinct()
-            .select("src", "dst", F.lit(1).cast("long").alias("_w"))
-        )
-        zero = F.lit(0).cast("long")
-    # loop-invariant: pre-partition by src once so each round's join
-    # moves only the O(frontier) distance side (same motion as LPA)
-    P = spark.sparkContext.defaultParallelism
-    e = e.repartition(P, "src").persist()
-    e.count()
-
-    state = spark.createDataFrame(
+    zero = F.lit(0.0) if weight_col else F.lit(0).cast("long")
+    state = edges.sparkSession.createDataFrame(
         [(int(s),) for s in set(sources)], "id long"
     ).select("id", zero.alias("dist"))
-
-    def _step(dists: DataFrame, _round: int) -> DataFrame:
-        relaxed = (
-            e.join(dists.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("_w")).alias("dist"))
+    e = relax_edges(edges, F.min, weight_col)
+    try:
+        return relax(
+            e, state, (), "dist", F.col("dist") + F.col("_w"), F.min,
+            max_iter,
+            warn=(
+                f"shortest_paths: distances did not stabilize within "
+                f"max_iter={max_iter} rounds; reported distances are "
+                "upper bounds"
+            ),
         )
-        return (
-            dists.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-
-    # count + order-insensitive xor checksum, NOT sum(dist): a float
-    # sum can absorb a real improvement (1e16 + 3.0 == 1e16 + 2.0 in
-    # IEEE) declaring a false fixpoint, or differ by an ulp across
-    # partition orders at a true one. The checksum hashes each (id,
-    # dist) pair, so any change flips it (modulo 2^-64 collisions —
-    # same soundness class as CC's detector). Monotone lattice: an
-    # unchanged state is the fixpoint; round 1 is compared to nothing
-    sig = Probe(c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("id", "dist")))
-    out, _rounds, _done = iterate(
-        state, _step, sig.unchanged(after=1), max_iter,
-        warn=(
-            f"shortest_paths: distances did not stabilize within "
-            f"max_iter={max_iter} rounds; reported distances are upper bounds"
-        ),
-        probe=sig,
-    )
-    e.unpersist()
-    return out
+    finally:
+        e.unpersist()
 
 
 def double_sweep(edges: DataFrame, start: int = 0) -> DataFrame:
@@ -156,58 +112,23 @@ def multi_source_bfs(
     """
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = edges.sparkSession
-    P = spark.sparkContext.defaultParallelism
-    # parallel edges collapse exactly under min-plus — see
-    # shortest_paths
-    if weight_col:
-        e = (
-            edges.select(
-                "src", "dst", F.col(weight_col).cast("double").alias("_w")
-            )
-            .groupBy("src", "dst")
-            .agg(F.min("_w").alias("_w"))
-        )
-        seed = [(int(s), int(s), 0.0) for s in set(sources)]
-        schema = "source long, id long, dist double"
-    else:
-        e = (
-            edges.select("src", "dst")
-            .distinct()
-            .select("src", "dst", F.lit(1).cast("long").alias("_w"))
-        )
-        seed = [(int(s), int(s), 0) for s in set(sources)]
-        schema = "source long, id long, dist long"
-    e = e.repartition(P, "src").persist()
-    e.count()
-    state = spark.createDataFrame(seed, schema)
-
-    def _step(d: DataFrame, _round: int) -> DataFrame:
-        relaxed = e.join(d.withColumnRenamed("id", "src"), "src").select(
-            "source", F.col("dst").alias("id"),
-            (F.col("dist") + F.col("_w")).alias("dist"),
-        )
-        return (
-            d.unionByName(relaxed)
-            .groupBy("source", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-
-    # count + order-insensitive xor checksum, not sum(dist): the
-    # monotone-lattice fixpoint test of shortest_paths
-    sig = Probe(
-        c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("source", "id", "dist"))
+    zero, kind = (0.0, "double") if weight_col else (0, "long")
+    state = edges.sparkSession.createDataFrame(
+        [(int(s), int(s), zero) for s in set(sources)],
+        f"source long, id long, dist {kind}",
     )
-    out, _r, _done = iterate(
-        state, _step, sig.unchanged(after=1), max_iter,
-        warn=(
-            f"multi_source_bfs: distances did not stabilize within "
-            f"max_iter={max_iter} rounds; distances are upper bounds"
-        ),
-        probe=sig,
-    )
-    e.unpersist()
-    return out
+    e = relax_edges(edges, F.min, weight_col)
+    try:
+        return relax(
+            e, state, ["source"], "dist", F.col("dist") + F.col("_w"),
+            F.min, max_iter,
+            warn=(
+                f"multi_source_bfs: distances did not stabilize within "
+                f"max_iter={max_iter} rounds; distances are upper bounds"
+            ),
+        )
+    finally:
+        e.unpersist()
 
 
 def harmonic_centrality(
@@ -337,50 +258,31 @@ def topological_levels(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     above the plausible depth to use non-convergence as a cycle
     detector).
     """
-    spark = edges.sparkSession
-    P = spark.sparkContext.defaultParallelism
-    # max-semiring levels: duplicate (src, dst) rows are exactly
-    # redundant under the max fold — distinct is result-identical
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(P, "src")
-        .persist()
-    )
-    e.count()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    state = vertices.select("id", F.lit(0).cast("long").alias("level"))
-
-    def _step(levels: DataFrame, _round: int) -> DataFrame:
-        msgs = (
-            e.join(levels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.max("level") + 1).alias("_m"))
+    # (max, +) levels over distinct unit-weight edges, every vertex
+    # starting at 0. Levels never decrease from round to round, so
+    # max(held, offered) equals 1 + max over the in-edges (0 at a
+    # source) in every round
+    e = relax_edges(edges, F.max)
+    try:
+        state = (
+            e.select(F.col("src").alias("id"))
+            .union(e.select(F.col("dst").alias("id")))
+            .distinct()
+            .select("id", F.lit(0).cast("long").alias("level"))
         )
-        return vertices.join(msgs, "id", "left").select(
-            "id", F.coalesce("_m", F.lit(0)).cast("long").alias("level")
+        return relax(
+            e, state, (), "level", F.col("level") + F.col("_w"), F.max,
+            max_iter,
+            warn=(
+                "topological_levels: no fixpoint within "
+                f"max_iter={max_iter} rounds — the graph contains a cycle "
+                "OR its longest path exceeds max_iter; raise max_iter to "
+                "distinguish (levels on and below cycles grow every round, "
+                "deep-DAG levels stabilize)"
+            ),
         )
-
-    # one row per vertex every round, so the xor alone is the signature
-    sig = Probe(h=F.bit_xor(F.xxhash64("id", "level")))
-    out, _rounds, _done = iterate(
-        state, _step, sig.unchanged(after=1), max_iter,
-        warn=(
-            "topological_levels: no fixpoint within "
-            f"max_iter={max_iter} rounds — the graph contains a cycle "
-            "OR its longest path exceeds max_iter; raise max_iter to "
-            "distinguish (levels on and below cycles grow every round, "
-            "deep-DAG levels stabilize)"
-        ),
-        probe=sig,
-    )
-    e.unpersist()
-    return out
+    finally:
+        e.unpersist()
 
 
 def global_efficiency(
@@ -443,46 +345,19 @@ def widest_paths(
     """
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = edges.sparkSession
-    P = spark.sparkContext.defaultParallelism
-    # (max, min) semiring: only the MAX-capacity instance of a parallel
-    # (src, dst) pair can ever win a relaxation — collapse is exact
-    e = (
-        edges.select(
-            "src", "dst", F.col(weight_col).cast("double").alias("_w")
-        )
-        .groupBy("src", "dst")
-        .agg(F.max("_w").alias("_w"))
-    )
-    e = e.repartition(P, "src").persist()
-    e.count()
-    state = spark.createDataFrame(
+    state = edges.sparkSession.createDataFrame(
         [(int(s), int(s), float("inf")) for s in set(sources)],
         "source long, id long, width double",
     )
-
-    def _step(d: DataFrame, _round: int) -> DataFrame:
-        relaxed = e.join(d.withColumnRenamed("id", "src"), "src").select(
-            "source",
-            F.col("dst").alias("id"),
-            F.least("width", "_w").alias("width"),
+    e = relax_edges(edges, F.max, weight_col)
+    try:
+        return relax(
+            e, state, ["source"], "width", F.least("width", "_w"), F.max,
+            max_iter,
+            warn=(
+                f"widest_paths: widths did not stabilize within "
+                f"max_iter={max_iter} rounds; widths are lower bounds"
+            ),
         )
-        return (
-            d.unionByName(relaxed)
-            .groupBy("source", "id")
-            .agg(F.max("width").alias("width"))
-        )
-
-    sig = Probe(
-        c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("source", "id", "width"))
-    )
-    out, _r, _done = iterate(
-        state, _step, sig.unchanged(after=1), max_iter,
-        warn=(
-            f"widest_paths: widths did not stabilize within "
-            f"max_iter={max_iter} rounds; widths are lower bounds"
-        ),
-        probe=sig,
-    )
-    e.unpersist()
-    return out
+    finally:
+        e.unpersist()

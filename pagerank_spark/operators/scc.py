@@ -29,7 +29,8 @@ The adversarial worst case (a long directed path) degrades to O(path)
 outer rounds, which ``max_outer`` bounds with a warning; FW-BW-trim
 hybrids exist for that shape but are not warranted here.
 
-Both inner fixpoints run on ``plans.iterate``, and both signatures are
+The color fixpoint is a min ``plans.gather.relax``; the ownership
+fixpoint runs on ``plans.iterate`` directly. Both signatures are
 observed on the harness's per-round checkpoint job (no probe job); the
 per-outer-round edge table is checkpointed once and the O(V)
 color/flag side moves per inner round (the ``plans.gather`` policy:
@@ -43,7 +44,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.plans.gather import edge_sides, score_join_hint
+from pagerank_spark.plans.gather import edge_sides, relax, score_join_hint
 from pagerank_spark.plans.iterate import Probe, iterate
 
 
@@ -155,31 +156,14 @@ def strongly_connected_components(
         # and on failure
         e_src, e_dst = edge_sides(e, hint, ["src", "dst"])
         try:
-            # 1) color fixpoint (forward min-label propagation)
-            def _color_step(colors: DataFrame, _r: int) -> DataFrame:
-                prop = e_src.join(
-                    colors.withColumnRenamed("id", "src").hint(hint), "src"
-                ).select(F.col("dst").alias("id"), "color")
-                return (
-                    colors.unionByName(prop)
-                    .groupBy("id")
-                    .agg(F.min("color").alias("color"))
-                )
-
-            # colors only decrease, so an unchanged (count, xor)
-            # signature of consecutive rounds is the fixpoint (up to a
-            # 2^-64 collision); round 1 is compared to nothing
-            sig = Probe(
-                c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("id", "color"))
-            )
-            colors, _r, _ok = iterate(
+            # 1) color fixpoint: forward min-label propagation
+            colors = relax(
+                e_src,
                 remaining.select("id", F.col("id").alias("color")),
-                _color_step,
-                sig.unchanged(after=1),
-                max_iter,
+                (), "color", F.col("color"), F.min, max_iter,
                 warn="scc: color propagation hit max_iter before fixpoint; "
                 "components may be split (raise max_iter)",
-                probe=sig,
+                hint=hint,
             )
 
             # 2) ownership fixpoint: members of color class c that reach

@@ -13,83 +13,47 @@ closeness/betweenness and outbreak/influence analysis.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.plans.iterate import iterate
+from pagerank_spark.plans.gather import relax
 
 
-def _timed_edges(
-    tedges: DataFrame, duration_col: str | None = None
+def _earliest_arrival(
+    tedges: DataFrame,
+    arr: DataFrame,
+    keys: list[str],
+    max_hops: int | None,
+    duration_col: str | None = None,
 ) -> DataFrame:
-    """``(src, dst, t[, _dur])`` as longs, deduplicated and materialized.
+    """Min-arrival relaxation of the ``(*keys, id, arrival)`` frame
+    ``arr`` over ``tedges`` until no arrival improves, or for
+    ``max_hops`` rounds. ``keys`` ride along untouched — none for a
+    single seed set, ``["source"]`` for one run per source. An edge
+    ``(u, v, t)`` is usable once ``t >= arrival(u)`` and lands at ``t``
+    (``t + duration`` with ``duration_col``).
 
     Duplicate timestamped rows are exactly redundant under the min
-    fold (distinct is result-identical), and the surviving frame is
-    materialized ONCE — otherwise every relaxation round re-runs the
-    source scan + casts.
+    fold, so the edge frame is deduplicated and materialized ONCE —
+    otherwise every round re-runs the source scan + casts.
     """
     cols = [
         F.col("src").cast("long"),
         F.col("dst").cast("long"),
         F.col("t").cast("long"),
     ]
+    land = F.col("t")
     if duration_col is not None:
         cols.append(F.col(duration_col).cast("long").alias("_dur"))
-    return tedges.select(*cols).distinct().localCheckpoint(eager=True)
-
-
-def _earliest_arrival(
-    te: DataFrame,
-    arr: DataFrame,
-    keys: list[str],
-    land: Column,
-    max_hops: int | None,
-) -> DataFrame:
-    """Min-arrival relaxation of the ``(*keys, id, arrival)`` frame
-    ``arr`` over the materialized ``(src, dst, t, …)`` edge frame
-    ``te`` until no arrival improves, or for ``max_hops`` rounds.
-
-    ``keys`` are carried through every round untouched — none for a
-    single seed set, ``["source"]`` for one run per source — and
-    ``land`` is the arrival an edge ``(u, v, t)`` gives ``v``.
-    """
-
-    def _relax(cur: DataFrame, _round: int) -> DataFrame:
-        relax = (
-            te.join(cur, te["src"] == cur["id"])
-            .where(F.col("t") >= F.col("arrival"))
-            .select(*keys, F.col("dst").alias("id"), land.alias("arrival"))
-        )
-        return (
-            cur.union(relax)
-            .groupBy(*keys, "id")
-            .agg(F.min("arrival").alias("arrival"))
-        )
-
-    def _fixpoint(old: DataFrame, new: DataFrame, _round: int) -> bool:
-        # any vertex whose arrival still improved? both sides are
-        # materialized, so this probe costs one cheap job
-        return (
-            new.join(
-                old.withColumnRenamed("arrival", "_old"),
-                [*keys, "id"],
-                "left",
-            )
-            .where(
-                F.col("_old").isNull() | (F.col("arrival") < F.col("_old"))
-            )
-            .isEmpty()
-        )
-
+        land = land + F.col("_dur")
+    te = tedges.select(*cols).distinct().localCheckpoint(eager=True)
     # max(1, ...): do-while — max_hops <= 0 still relaxes one round
-    out, _rounds, _done = iterate(
-        arr,
-        _relax,
-        _fixpoint,
+    return relax(
+        te, arr, keys, "arrival",
+        F.when(F.col("t") >= F.col("arrival"), land), F.min,
         max(1, max_hops) if max_hops is not None else (1 << 31),
+        warn=None,
     )
-    return out
 
 
 def temporal_reachability(
@@ -131,18 +95,11 @@ def temporal_reachability(
     with early termination when a round changes nothing. Timestamps
     ride as longs; no per-row Python.
     """
-    land = (
-        (F.col("t") + F.col("_dur"))
-        if duration_col is not None
-        else F.col("t")
-    )
     arr = tedges.sparkSession.createDataFrame(
         [(int(s), int(start)) for s in sorted(set(sources))],
         "id long, arrival long",
     )
-    return _earliest_arrival(
-        _timed_edges(tedges, duration_col), arr, [], land, max_hops
-    )
+    return _earliest_arrival(tedges, arr, [], max_hops, duration_col)
 
 
 def snapshot_pagerank(
@@ -213,6 +170,4 @@ def temporal_reachability_keyed(
         [(int(s), int(s), int(start)) for s in sorted(set(sources))],
         "source long, id long, arrival long",
     )
-    return _earliest_arrival(
-        _timed_edges(tedges), arr, ["source"], F.col("t"), max_hops
-    )
+    return _earliest_arrival(tedges, arr, ["source"], max_hops)

@@ -1,11 +1,15 @@
-"""The relational gather of the join-shaped SpMV family.
+"""The relational gather of the join-shaped SpMV family, and its
+semiring twin, the monotone relaxation of the path family.
 
 The C reference has one kernel, a gather-sum power iteration
 (``Page_Rank_SERIAL.c:206-279``). Its relational form — join the score
 vector onto one endpoint of the edge table, group by the other
 endpoint, sum weight·score — drives join-mode PageRank, keyed PPR,
-Katz, eigenvector, both HITS half-steps and the absorbing walks. This
-module owns the three decisions those loops share:
+Katz, eigenvector, both HITS half-steps and the absorbing walks. Swap
+the (+, ·) fold for (min, +) or (max, min) and the same join is one
+round of shortest paths, keyed BFS, widest paths, topological levels,
+earliest-arrival temporal reachability and SCC coloring. This module
+owns the decisions those loops share:
 
 - **the score-side join policy** (``score_join_hint`` /
   ``edge_sides``): below ``BROADCAST_MAX_V`` vertices the O(V) score
@@ -13,7 +17,10 @@ module owns the three decisions those loops share:
   key; above it the score side shuffle-hashes against one persisted
   edge copy per join key, so the fat O(E) side never re-exchanges;
 - **the gather-sum** (``gather_sum``);
-- **the L1-delta convergence probe** (``l1_delta`` / ``l1_converged``).
+- **the L1-delta convergence probe** (``l1_delta`` / ``l1_converged``);
+- **the monotone relaxation** (``relax``) and its edge copy
+  (``relax_edges``): the fixpoint loop of the path family, stopped by
+  an observed count + xor-checksum probe.
 
 Each caller keeps its own edge-row shape and update expression; only
 these shared pieces live here.
@@ -24,8 +31,10 @@ import operator
 from collections.abc import Callable, Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.iterate import Probe, iterate
 
 # Re-broadcasting a small score vector every round beats shuffling it;
 # past ~100k vertices the per-use driver collect + torrent dominates
@@ -99,6 +108,88 @@ def gather_sum(
         .groupBy(*keys, F.col(to).alias("id"))
         .agg(F.sum(term).alias(out))
     )
+
+
+def relax_edges(
+    edges: DataFrame,
+    fold: Callable[[str], Column],
+    weight: str | None = None,
+) -> DataFrame:
+    """The loop-invariant edge copy of a :func:`relax`:
+    ``DataFrame[src, dst, _w]`` hash-partitioned on ``src``, persisted
+    and materialized, so each round moves only the state side. Parallel
+    edges collapse by the semiring's ``fold`` (only the winning weight
+    of a ``(src, dst)`` pair can ever be offered through it, so the
+    collapse is result-identical); unweighted edges become distinct
+    pairs with ``_w = 1`` (long). The caller unpersists it."""
+    if weight is None:
+        e = (
+            edges.select("src", "dst")
+            .distinct()
+            .select("src", "dst", F.lit(1).cast("long").alias("_w"))
+        )
+    else:
+        e = (
+            edges.select(
+                "src", "dst", F.col(weight).cast("double").alias("_w")
+            )
+            .groupBy("src", "dst")
+            .agg(fold("_w").alias("_w"))
+        )
+    P = edges.sparkSession.sparkContext.defaultParallelism
+    e = e.repartition(P, "src").persist()
+    e.count()
+    return e
+
+
+def relax(
+    e: DataFrame,
+    state: DataFrame,
+    keys: Sequence[str],
+    value: str,
+    offer: Column,
+    fold: Callable[[str], Column],
+    max_iter: int,
+    warn: str | None,
+    hint: str | None = None,
+) -> DataFrame:
+    """Monotone relaxation of ``state`` (``DataFrame[*keys, id,
+    value]``) over ``e`` to its fixpoint, or ``max_iter`` rounds (then
+    ``warn``, if given). Each round joins the state onto ``e`` on
+    ``src``, offers every ``dst`` the column ``offer`` (null: the edge
+    is not usable) and keeps ``fold`` per ``(*keys, id)``; ``keys`` and
+    ``hint`` are as in :func:`gather_sum`.
+
+    Values move one way and the reached set only grows, so an unchanged
+    ``(count, xor of row hashes)`` signature of consecutive rounds is
+    the fixpoint (up to a 2^-64 collision) — a xor, not a sum: a float
+    sum can absorb a real improvement (1e16 + 3.0 == 1e16 + 2.0) or
+    differ by an ulp across partition orders. It is observed on
+    ``iterate``'s checkpoint job; round 1 is compared to nothing.
+    """
+
+    def step(cur: DataFrame, _round: int) -> DataFrame:
+        side = cur.withColumnRenamed("id", "src")
+        if hint is not None:
+            side = side.hint(hint)
+        offered = (
+            e.join(side, "src")
+            .select(*keys, F.col("dst").alias("id"), offer.alias(value))
+            .where(F.col(value).isNotNull())
+        )
+        return (
+            cur.unionByName(offered)
+            .groupBy(*keys, "id")
+            .agg(fold(value).alias(value))
+        )
+
+    sig = Probe(
+        c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64(*keys, "id", value))
+    )
+    out, _rounds, _done = iterate(
+        state, step, sig.unchanged(after=1), max_iter, warn=warn, probe=sig
+    )
+    return out
 
 
 def l1_delta(

@@ -2,8 +2,11 @@
 
 The engine's iterative graph algorithms (connected components, label
 propagation, join-mode PageRank, keyed personalized PageRank, Katz,
-eigenvector, HITS, forward/reverse push, absorbing walks, temporal
-reachability) share one loop skeleton: compute the
+eigenvector, HITS, forward/reverse push, absorbing walks, k-core and
+truss peels, random walks, and the path family's one monotone
+relaxation, ``plans.gather.relax``, behind shortest paths, keyed BFS,
+widest paths, topological levels, temporal reachability and SCC
+coloring) share one loop skeleton: compute the
 next state from the current one, truncate lineage with
 ``localCheckpoint`` so the physical plan stays O(1) across rounds, run
 one cheap convergence action, stop at ``max_iter`` otherwise. This is

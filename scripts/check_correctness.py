@@ -12,10 +12,18 @@ import math
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout (the other
+# side of an A/B) checks its own engine; Python workers import it from
+# PYTHONPATH, which the session's JVM passes on
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import __spark_entry__ as entrymod
 from pagerank_spark.session import get_spark
@@ -87,9 +95,9 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    ran = [name for name in qs if not only or name in only]
+    for name in ran:
+        fn = qs[name]
         t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir)
@@ -154,7 +162,7 @@ def main():
                     print(f"      spark={x}\n      duck ={y}")
                     break
             failed.append(name)
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} ok; failed: {failed}")
+    print(f"\n{len(ran) - len(failed)}/{len(ran)} ok; failed: {failed}")
     spark.stop()
     sys.exit(1 if failed else 0)
 

@@ -200,19 +200,27 @@ def test_jobs_per_round_cc_stars_and_lpa(spark):
     """Upper bounds on Spark jobs per round: CC by stars is one exchange
     per star operation plus small-star's distinct, and the checkpoint
     job (its signature probe is observed on that job); LPA's round plan
-    plus its checkpoint, whose changed-label count is observed too.
-    Two rounds are the difference between max_iter=3 and max_iter=1 on
-    graphs that do not settle within three rounds."""
+    plus its checkpoint, whose changed-label count is observed too;
+    temporal reachability's relaxation round plus its checkpoint, whose
+    count+xor signature is observed too. Two rounds are the difference
+    between max_iter=3 and max_iter=1 on graphs that do not settle
+    within three rounds."""
+    from pagerank_spark.operators.temporal import temporal_reachability
+
     path = edges_df(spark, [(i, i + 1) for i in range(63)]).localCheckpoint()
     ring = edges_df(
         spark,
         [(i, (i + 1) % 40) for i in range(40)]
         + [(i, (i + 7) % 40) for i in range(0, 40, 5)],
     ).localCheckpoint()
+    timed = spark.createDataFrame(
+        [(i, i + 1, i + 1) for i in range(63)], "src long, dst long, t long"
+    ).localCheckpoint()
     per_round = {}
     for name, call in (
         ("cc", lambda k: connected_components(path, max_iter=k, mode="stars")),
         ("lpa", lambda k: label_propagation(ring, max_iter=k)),
+        ("temporal", lambda k: temporal_reachability(timed, [0], max_hops=k)),
     ):
         one = _jobs(spark, f"{name}-1", lambda: call(1))
         three = _jobs(spark, f"{name}-3", lambda: call(3))
@@ -221,6 +229,8 @@ def test_jobs_per_round_cc_stars_and_lpa(spark):
     # 14 (CC) and 8 (LPA)
     assert 0 < per_round["cc"] <= 6, per_round
     assert 0 < per_round["lpa"] <= 7, per_round
+    # a row-wise improvement join as the stop test made this 9
+    assert 0 < per_round["temporal"] <= 6, per_round
 
 
 def test_cc_count_first_detection_same_labels(spark):
@@ -952,6 +962,42 @@ def test_failed_scc_round_leaves_no_cached_edges(spark, monkeypatch):
     with _pytest.raises(RuntimeError, match="injected fixpoint failure"):
         mod.strongly_connected_components(e, mode="coloring")
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_failed_relaxation_leaves_no_cached_edges(spark, monkeypatch):
+    """A failure inside a path-family fixpoint still unpersists the
+    operator's edge copy."""
+    import importlib
+
+    import pytest as _pytest
+
+    from pagerank_spark.operators.paths import (
+        multi_source_bfs,
+        shortest_paths,
+        topological_levels,
+        widest_paths,
+    )
+
+    gather = importlib.import_module("pagerank_spark.plans.gather")
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected fixpoint failure")
+
+    monkeypatch.setattr(gather, "iterate", boom)
+    e = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 2.0), (2, 0, 1.0), (2, 3, 1.0)],
+        "src long, dst long, weight double",
+    )
+    for call in (
+        lambda: shortest_paths(e, [0], weight_col="weight"),
+        lambda: multi_source_bfs(e, [0, 2]),
+        lambda: widest_paths(e, [0]),
+        lambda: topological_levels(e),
+    ):
+        spark.catalog.clearCache()
+        with _pytest.raises(RuntimeError, match="injected fixpoint failure"):
+            call()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_new_operators_handle_empty_graph(spark):
