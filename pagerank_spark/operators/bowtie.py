@@ -27,9 +27,11 @@ Note IN ∩ OUT = ∅ by construction: a vertex that both reaches CORE and
 is reachable from it is mutually reachable with CORE, hence in CORE.
 
 Scale shape: one SCC run plus five multi-source reachability BFS
-sweeps whose state is *skinny id sets*. Each BFS level is checkpointed
-once as its own frame and the settled set is a lazy union over those
-frames (the same per-level-append pattern as ``brandes_forward``,
+sweeps whose state is *skinny id sets*. Each sweep runs on
+``plans.iterate``: a BFS level is one round whose frame the harness
+checkpoints once, and the sweep stops when that checkpoint job observes
+no new id (``Probe.drained``). The settled set is a lazy union over the
+level frames (the same per-level-append pattern as ``brandes_forward``,
 ``centrality.py``) — no O(depth × reached) rewrite. Region assignment
 is a chain of left-semi-style flag joins on id, all broadcast-able
 when the periphery sets are small.
@@ -37,10 +39,10 @@ when the periphery sets are small.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.iterate import Probe, iterate, union_all
 
 from .scc import strongly_connected_components
 
@@ -52,37 +54,30 @@ def _reach(edges: DataFrame, seeds: DataFrame, max_iter: int) -> DataFrame:
     single blended multi-source BFS — ``DataFrame[id]``, distinct.
 
     ``edges`` must expose (src, dst); only the frontier (new ids this
-    level) moves per round, and the anti-join scans previously
-    checkpointed level frames read-only.
+    level) moves per round, and the anti-join scans the level frames
+    ``iterate`` already checkpointed, read-only.
     """
     frames = [seeds.select("id").distinct().localCheckpoint()]
-    reached = frames[0]
-    frontier = frames[0]
-    for _level in range(max_iter):
-        nxt = (
+    new_ids = Probe(n=F.count(F.lit(1)))
+
+    def _level(frontier: DataFrame, _round: int) -> DataFrame:
+        return (
             edges.join(frontier.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"))
             .distinct()
-            .join(reached, "id", "left_anti")
-            .localCheckpoint()
+            .join(union_all(frames), "id", "left_anti")
         )
-        if nxt.isEmpty():
-            break
-        frames.append(nxt)
-        reached = reached.unionByName(nxt)
-        frontier = nxt
-    else:
-        warnings.warn(
+
+    iterate(
+        frames[0], _level, new_ids.drained("n", keep=frames), max_iter,
+        warn=(
             f"bowtie reach stopped at max_iter={max_iter} with a "
             "non-empty frontier; region assignment may undercount "
-            "reachable sets — raise max_iter above the graph diameter",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+            "reachable sets — raise max_iter above the graph diameter"
+        ),
+        probe=new_ids,
+    )
+    return union_all(frames)
 
 
 def _flag(ids: DataFrame, name: str) -> DataFrame:
@@ -132,31 +127,34 @@ def bowtie_decomposition(
         .repartition(P, "src")
         .persist()
     )
-    fwd = _reach(e_fwd, core, max_iter)  # CORE ∪ OUT
-    bwd = _reach(e_bwd, core, max_iter)  # CORE ∪ IN
-    out_ = fwd.join(core, "id", "left_anti").localCheckpoint()
-    in_ = bwd.join(core, "id", "left_anti").localCheckpoint()
+    try:
+        fwd = _reach(e_fwd, core, max_iter)  # CORE ∪ OUT
+        bwd = _reach(e_bwd, core, max_iter)  # CORE ∪ IN
+        out_ = fwd.join(core, "id", "left_anti").localCheckpoint()
+        in_ = bwd.join(core, "id", "left_anti").localCheckpoint()
 
-    # weak connectivity to CORE: reach over the symmetrized edge set
-    e_sym = e_fwd.unionByName(e_bwd)
-    wcc = _reach(e_sym, core, max_iter)
+        # weak connectivity to CORE: reach over the symmetrized edge set
+        wcc = _reach(e_fwd.unionByName(e_bwd), core, max_iter)
 
-    # CORE-free subgraph for tube/tendril paths
-    core_src = core.withColumnRenamed("id", "src")
-    core_dst = core.withColumnRenamed("id", "dst")
-    e_nc = (
-        e.join(core_src, "src", "left_anti")
-        .join(core_dst, "dst", "left_anti")
-        .select("src", "dst")
-        .localCheckpoint()
-    )
-    e_nc_bwd = e_nc.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    from_in = _reach(e_nc, in_, max_iter)
-    to_out = _reach(e_nc_bwd, out_, max_iter)
+        # CORE-free subgraph for tube/tendril paths
+        core_src = core.withColumnRenamed("id", "src")
+        core_dst = core.withColumnRenamed("id", "dst")
+        e_nc = (
+            e.join(core_src, "src", "left_anti")
+            .join(core_dst, "dst", "left_anti")
+            .select("src", "dst")
+            .localCheckpoint()
+        )
+        e_nc_bwd = e_nc.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst")
+        )
+        from_in = _reach(e_nc, in_, max_iter)
+        to_out = _reach(e_nc_bwd, out_, max_iter)
+    finally:
+        e_fwd.unpersist()
+        e_bwd.unpersist()
 
-    out = (
+    return (
         vertices.join(_flag(core, "_core"), "id", "left")
         .join(_flag(in_, "_in"), "id", "left")
         .join(_flag(out_, "_out"), "id", "left")
@@ -176,6 +174,3 @@ def bowtie_decomposition(
             .alias("region"),
         )
     )
-    e_fwd.unpersist()
-    e_bwd.unpersist()
-    return out

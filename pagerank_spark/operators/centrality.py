@@ -39,7 +39,7 @@ from pagerank_spark.plans.gather import (
     never_converged,
     score_side,
 )
-from pagerank_spark.plans.iterate import iterate
+from pagerank_spark.plans.iterate import Probe, iterate, union_all
 
 
 def _gather_ready(edges: DataFrame, weight_col: str | None):
@@ -157,12 +157,14 @@ def brandes_forward(
     every vertex settles at its first reachable level, so the
     anti-join is exact, not an approximation.
 
-    Each level is checkpointed ONCE as its own frame; the settled set
-    the anti-join scans is a lazy union over those frames (read-only
-    scans of already-materialized blocks), and the full result is
-    unioned once at the end. Re-checkpointing the growing union every
-    level would instead REWRITE O(reached-so-far) rows per round —
-    O(depth × reached) total writes, the dominant cost at
+    Each level is one ``plans.iterate`` round: the harness checkpoints
+    its frame ONCE, and the pass stops when that checkpoint job observes
+    an empty level (``Probe.drained``, no job of its own). The settled
+    set the anti-join scans is a lazy union over the level frames
+    (read-only scans of already-materialized blocks), and the full
+    result is unioned once at the end. Re-checkpointing the growing
+    union every level would instead REWRITE O(reached-so-far) rows per
+    round — O(depth × reached) total writes, the dominant cost at
     full-vertex-set exactness on a high-diameter graph.
     """
     if not pivots:
@@ -184,49 +186,39 @@ def brandes_forward(
         .repartition(P, "src")
         .persist()
     )
-    e.count()
-    init = spark.createDataFrame(
-        [(int(s), int(s), 0, 1.0) for s in set(pivots)],
-        "source long, id long, dist long, sigma double",
-    ).localCheckpoint()
+    try:
+        e.count()
+        init = spark.createDataFrame(
+            [(int(s), int(s), 0, 1.0) for s in set(pivots)],
+            "source long, id long, dist long, sigma double",
+        ).localCheckpoint()
+        frames = [init]
+        new_pairs = Probe(n=F.count(F.lit(1)))
 
-    settled_ids = init.select("source", "id")
-    frontier = init
-    frames = [init]
-    for level in range(1, max_iter + 1):
-        msgs = (
-            e.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy("source", F.col("dst").alias("id"))
-            .agg(F.sum(F.col("sigma") * F.col("_m")).alias("sigma"))
-        )
-        new = (
-            msgs.join(settled_ids, ["source", "id"], "left_anti")
-            .select(
+        def _level(frontier: DataFrame, level: int) -> DataFrame:
+            msgs = (
+                e.join(frontier.withColumnRenamed("id", "src"), "src")
+                .groupBy("source", F.col("dst").alias("id"))
+                .agg(F.sum(F.col("sigma") * F.col("_m")).alias("sigma"))
+            )
+            settled = union_all([f.select("source", "id") for f in frames])
+            return msgs.join(settled, ["source", "id"], "left_anti").select(
                 "source", "id", F.lit(level).cast("long").alias("dist"), "sigma"
             )
-            .localCheckpoint()
-        )
-        if new.isEmpty():
-            break
-        frames.append(new)
-        settled_ids = settled_ids.unionByName(new.select("source", "id"))
-        frontier = new
-    else:
-        import warnings
 
-        warnings.warn(
-            f"brandes_forward stopped at max_iter={max_iter} with a "
-            "non-empty frontier; betweenness dependencies would "
-            "accumulate over a TRUNCATED shortest-path DAG — raise "
-            "max_iter above the graph diameter",
-            RuntimeWarning,
-            stacklevel=2,
+        iterate(
+            init, _level, new_pairs.drained("n", keep=frames), max_iter,
+            warn=(
+                f"brandes_forward stopped at max_iter={max_iter} with a "
+                "non-empty frontier; betweenness dependencies would "
+                "accumulate over a TRUNCATED shortest-path DAG — raise "
+                "max_iter above the graph diameter"
+            ),
+            probe=new_pairs,
         )
-    e.unpersist()
-    settled = frames[0]
-    for f in frames[1:]:
-        settled = settled.unionByName(f)
-    return settled
+    finally:
+        e.unpersist()
+    return union_all(frames)
 
 
 def betweenness_centrality(
@@ -330,10 +322,7 @@ def _brandes_dependencies(
         )
         frames.append(new)
         prev = new
-    deltas = prev if not frames else frames[0]
-    for f in frames[1:]:
-        deltas = deltas.unionByName(f)
-    return levels, deltas, e
+    return levels, (union_all(frames) if frames else prev), e
 
 
 def edge_betweenness(

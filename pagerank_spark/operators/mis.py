@@ -19,11 +19,14 @@ collapsed.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions.text import hash64
 from pagerank_spark.operators.triangles import _simple_undirected
+from pagerank_spark.plans.iterate import Probe, iterate, union_all
 
 
 def maximal_independent_set(
@@ -56,18 +59,9 @@ def maximal_independent_set(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).union(simple.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     sym = sym.repartition(P, "src").persist()
-    undecided = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
     mis_parts: list[DataFrame] = []
-    exhausted = True
-    for rnd in range(1, max_iter + 1):
-        if undecided.isEmpty():
-            exhausted = False
-            break
+
+    def _round(undecided: DataFrame, rnd: int) -> DataFrame:
         # no checkpoint: both consumers re-derive the priorities with
         # one deterministic hash projection over the checkpointed
         # undecided frame — cheaper than materializing + re-reading
@@ -103,22 +97,29 @@ def maximal_independent_set(
         # the union is assembled once at the end (no per-round
         # materialization of the growing set)
         mis_parts.append(cand)
-        undecided = undecided.join(removed, "id", "left_anti").localCheckpoint()
-    if exhausted and not undecided.isEmpty():
-        import warnings
+        return undecided.join(removed, "id", "left_anti")
 
+    probe = Probe(n=F.count(F.lit(1)))
+    try:
+        undecided, _rounds, _done = iterate(
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .localCheckpoint(),
+            _round, probe.drained("n"), max_iter, probe=probe,
+        )
+        n_left = probe.of(undecided)["n"]
+    finally:
+        sym.unpersist()
+    if n_left:
         warnings.warn(
-            f"maximal_independent_set: {undecided.count()} vertices still "
+            f"maximal_independent_set: {n_left} vertices still "
             f"undecided after max_iter={max_iter} rounds — the returned "
             "set is independent but may not be maximal",
             RuntimeWarning,
             stacklevel=2,
         )
-    sym.unpersist()
-    mis = spark.createDataFrame([], "id long")
-    for part in mis_parts:
-        mis = mis.unionByName(part)
-    return mis
+    return union_all([spark.createDataFrame([], "id long"), *mis_parts])
 
 
 def greedy_coloring(
@@ -229,8 +230,6 @@ def maximal_matching(
     durable kill-and-resume contract as PageRank/CC (E5): the round
     counter resumes too, keeping the per-round hash draws identical.
     """
-    from pagerank_spark.plans.iterate import iterate
-
     spark = edges.sparkSession
     P = num_partitions or spark.sparkContext.defaultParallelism
     live0 = _simple_undirected(edges).repartition(P, "a")
@@ -291,13 +290,11 @@ def maximal_matching(
             .unionByName(next_live.select("a", "b", F.lit("L").alias("tag")))
         )
 
-    def _converged(_prev: DataFrame, new: DataFrame, _rnd: int) -> bool:
-        return new.where(F.col("tag") == "L").isEmpty()
-
+    probe = Probe(n=F.count_if(F.col("tag") == "L"))
     final, _rounds, _done = iterate(
         state0,
         _step,
-        _converged,
+        probe.drained("n"),
         max_iter,
         warn=(
             f"maximal_matching: edges still live after max_iter="
@@ -306,6 +303,7 @@ def maximal_matching(
         ),
         checkpoint_dir=checkpoint_dir,
         resume=resume,
+        probe=probe,
     )
     return final.where(F.col("tag") == "M").select("a", "b")
 

@@ -27,10 +27,13 @@ accumulates as skinny (a, b, weight) frames unioned once at the end.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.components import connected_components
+from pagerank_spark.plans.iterate import Probe, iterate, union_all
 
 
 def minimum_spanning_forest(
@@ -56,8 +59,10 @@ def minimum_spanning_forest(
         if weight_col is not None
         else F.lit(1.0)
     )
-    # simple undirected edge set, parallel edges collapsed to min weight
-    base = (
+    # simple undirected edge set, parallel edges collapsed to min weight;
+    # live edges carry their endpoints' component labels, maintained
+    # in-place: (a, b, weight, la, lb); initially label = vertex id
+    live = (
         edges.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
@@ -67,20 +72,14 @@ def minimum_spanning_forest(
         .groupBy("a", "b")
         .agg(F.min("weight").alias("weight"))
         .repartition(P, "a")
+        .select(
+            "a", "b", "weight", F.col("a").alias("la"), F.col("b").alias("lb")
+        )
         .localCheckpoint()
     )
-    # live edges carry their endpoints' component labels, maintained
-    # in-place: (a, b, weight, la, lb); initially label = vertex id
-    live = base.select(
-        "a", "b", "weight", F.col("a").alias("la"), F.col("b").alias("lb")
-    ).localCheckpoint()
     forest_parts: list[DataFrame] = []
-    exhausted = True
-    for _ in range(max_iter):
-        live = live.where(F.col("la") != F.col("lb")).localCheckpoint()
-        if live.isEmpty():
-            exhausted = False
-            break
+
+    def _round(live: DataFrame, _r: int) -> DataFrame:
         # min incident edge per component over both endpoint sides.
         # The edge's CURRENT labels ride inside the struct after the
         # deciding (weight, a, b) prefix — (w, a, b) already identifies
@@ -113,27 +112,18 @@ def minimum_spanning_forest(
         )
         # contract: CC on the LABEL graph of the selection (the edge's
         # current labels, not its endpoints — ≤ 1 edge per component)
-        sel_labels = sel.select(
-            F.col("_la").alias("src"), F.col("_lb").alias("dst")
+        comp = connected_components(
+            sel.select(F.col("_la").alias("src"), F.col("_lb").alias("dst"))
         )
-        relabel = connected_components(sel_labels).select(
-            F.col("id").alias("_old"), F.col("component").alias("_new")
+        new_a = comp.select(
+            F.col("id").alias("la"), F.col("component").alias("_na")
         )
-        live = (
-            live.join(
-                relabel.withColumnRenamed("_old", "la").withColumnRenamed(
-                    "_new", "_na"
-                ),
-                "la",
-                "left",
-            )
-            .join(
-                relabel.withColumnRenamed("_old", "lb").withColumnRenamed(
-                    "_new", "_nb"
-                ),
-                "lb",
-                "left",
-            )
+        new_b = comp.select(
+            F.col("id").alias("lb"), F.col("component").alias("_nb")
+        )
+        return (
+            live.join(new_a, "la", "left")
+            .join(new_b, "lb", "left")
             .select(
                 "a",
                 "b",
@@ -141,11 +131,14 @@ def minimum_spanning_forest(
                 F.coalesce("_na", F.col("la")).alias("la"),
                 F.coalesce("_nb", F.col("lb")).alias("lb"),
             )
-            .localCheckpoint()
+            .where(F.col("la") != F.col("lb"))
         )
-    if exhausted and not live.where(F.col("la") != F.col("lb")).isEmpty():
-        import warnings
 
+    probe = Probe(n=F.count(F.lit(1)))
+    live, _rounds, _done = iterate(
+        live, _round, probe.drained("n"), max_iter, probe=probe
+    )
+    if probe.of(live)["n"]:
         warnings.warn(
             "minimum_spanning_forest: inter-component edges remain after "
             f"max_iter={max_iter} rounds — the returned forest spans "
@@ -155,7 +148,4 @@ def minimum_spanning_forest(
         )
     if not forest_parts:
         return spark.createDataFrame([], "a long, b long, weight double")
-    out = forest_parts[0]
-    for part in forest_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    return union_all(forest_parts)

@@ -37,7 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.plans.iterate import iterate
+from pagerank_spark.plans.iterate import Probe, iterate
 
 
 @dataclass
@@ -65,19 +65,18 @@ def _push_rounds(
     until no row is active or ``max_rounds`` pushes ran.
 
     ``step`` returns the next state already flagged, so the harness's
-    one eager checkpoint per round serves both the idle probe and the
-    next round's push/keep branches. A start state with nothing active
+    one eager checkpoint per round serves both the next round's
+    push/keep branches and the stop test, whose active count is
+    observed on that job. A start state with nothing active
     runs no round at all. The flag columns are dropped from the result.
     """
 
-    def _idle(st: DataFrame) -> bool:
-        return st.where("act").isEmpty()
-
-    if _idle(flagged):
+    active = Probe(n=F.count_if(F.col("act")))
+    if active.of(flagged)["n"] == 0:
         st, rounds, done = flagged, 0, True
     else:
         st, rounds, done = iterate(
-            flagged, step, lambda _prev, new, _round: _idle(new), max_rounds
+            flagged, step, active.drained("n"), max_rounds, probe=active
         )
     return PushResult(st.drop("deg", "act"), rounds, done)
 

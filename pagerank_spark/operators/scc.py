@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.plans.gather import edge_sides, relax, score_join_hint
-from pagerank_spark.plans.iterate import Probe, iterate
+from pagerank_spark.plans.iterate import Probe, iterate, union_all
 
 
 # same adaptive policy as connected_components.LOCAL_CC_MAX_E: below
@@ -230,7 +230,4 @@ def strongly_connected_components(
 
     if not done:  # no vertices at all
         return spark.createDataFrame([], "id long, component long")
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out
+    return union_all(done)

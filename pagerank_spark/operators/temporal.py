@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.plans.gather import relax
+from pagerank_spark.plans.gather import partition_on_src, relax
 
 
 def _earliest_arrival(
@@ -33,9 +33,9 @@ def _earliest_arrival(
     ``(u, v, t)`` is usable once ``t >= arrival(u)`` and lands at ``t``
     (``t + duration`` with ``duration_col``).
 
-    Duplicate timestamped rows are exactly redundant under the min
-    fold, so the edge frame is deduplicated and materialized ONCE —
-    otherwise every round re-runs the source scan + casts.
+    Duplicate timestamped rows are exactly redundant under the min fold,
+    so the edge frame is deduplicated (every timestamp stays), partitioned
+    on ``src`` and persisted ONCE: rounds move only the arrival side.
     """
     cols = [
         F.col("src").cast("long"),
@@ -46,14 +46,17 @@ def _earliest_arrival(
     if duration_col is not None:
         cols.append(F.col(duration_col).cast("long").alias("_dur"))
         land = land + F.col("_dur")
-    te = tedges.select(*cols).distinct().localCheckpoint(eager=True)
-    # max(1, ...): do-while — max_hops <= 0 still relaxes one round
-    return relax(
-        te, arr, keys, "arrival",
-        F.when(F.col("t") >= F.col("arrival"), land), F.min,
-        max(1, max_hops) if max_hops is not None else (1 << 31),
-        warn=None,
-    )
+    te = partition_on_src(tedges.select(*cols).distinct())
+    try:
+        # max(1, ...): do-while — max_hops <= 0 still relaxes one round
+        return relax(
+            te, arr, keys, "arrival",
+            F.when(F.col("t") >= F.col("arrival"), land), F.min,
+            max(1, max_hops) if max_hops is not None else (1 << 31),
+            warn=None,
+        )
+    finally:
+        te.unpersist()
 
 
 def temporal_reachability(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions.text import hash64
-from pagerank_spark.plans.iterate import iterate
+from pagerank_spark.plans.iterate import Probe, iterate, union_all
 
 
 def random_walks(
@@ -93,7 +93,7 @@ def random_walks(
         F.col("id").alias("vertex"),
     ).localCheckpoint()
 
-    steps = [frontier.select("walk_id", F.lit(0).alias("step"), "vertex")]
+    steps = [frontier]
 
     def _step(fr: DataFrame, t: int) -> DataFrame:
         cand = e.join(
@@ -148,17 +148,16 @@ def random_walks(
             "walk_id", F.col("hv.v").alias("vertex")
         )
 
-    def _collect_step(_prev: DataFrame, new: DataFrame, t: int) -> bool:
-        steps.append(new.select("walk_id", F.lit(t).alias("step"), "vertex"))
-        return new.isEmpty()  # all walks dead-ended — stop early
-
     if length > 0:
-        iterate(frontier, _step, _collect_step, length)
+        walking = Probe(n=F.count(F.lit(1)))
+        iterate(frontier, _step, walking.drained("n", keep=steps), length,
+                probe=walking)
     e.unpersist()
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    return out
+    # steps[t] is step t: a drained loop keeps no empty frontier
+    return union_all([
+        fr.select("walk_id", F.lit(t).alias("step"), "vertex")
+        for t, fr in enumerate(steps)
+    ])
 
 
 def skipgram_pairs(
@@ -303,7 +302,7 @@ def node2vec_walks(
         F.col("id").alias("vertex"),
     ).localCheckpoint()
 
-    steps = [frontier.select("walk_id", F.lit(0).alias("step"), "vertex")]
+    steps = [frontier]
 
     def _step(fr: DataFrame, t: int) -> DataFrame:
         cand = e.join(
@@ -348,15 +347,13 @@ def node2vec_walks(
             F.col("_pick.dst").alias("vertex"),
         )
 
-    def _collect_step(_prev: DataFrame, new: DataFrame, t: int) -> bool:
-        steps.append(new.select("walk_id", F.lit(t).alias("step"), "vertex"))
-        return new.isEmpty()
-
     if length > 0:
-        iterate(frontier, _step, _collect_step, length)
+        walking = Probe(n=F.count(F.lit(1)))
+        iterate(frontier, _step, walking.drained("n", keep=steps), length,
+                probe=walking)
     e.unpersist()
     und.unpersist()
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    return out
+    return union_all([
+        fr.select("walk_id", F.lit(t).alias("step"), "vertex")
+        for t, fr in enumerate(steps)
+    ])

@@ -19,8 +19,9 @@ owns the decisions those loops share:
 - **the gather-sum** (``gather_sum``);
 - **the L1-delta convergence probe** (``l1_delta`` / ``l1_converged``);
 - **the monotone relaxation** (``relax``) and its edge copy
-  (``relax_edges``): the fixpoint loop of the path family, stopped by
-  an observed count + xor-checksum probe.
+  (``relax_edges``, or any frame put through ``partition_on_src``): the
+  fixpoint loop of the path family, stopped by an observed count +
+  xor-checksum probe.
 
 Each caller keeps its own edge-row shape and update expression; only
 these shared pieces live here.
@@ -110,6 +111,16 @@ def gather_sum(
     )
 
 
+def partition_on_src(e: DataFrame) -> DataFrame:
+    """``e`` hash-partitioned on ``src``, persisted and materialized: the
+    loop-invariant side of a round's join on ``src``, so each round moves
+    only the state side. The caller unpersists it."""
+    P = e.sparkSession.sparkContext.defaultParallelism
+    e = e.repartition(P, "src").persist()
+    e.count()
+    return e
+
+
 def relax_edges(
     edges: DataFrame,
     fold: Callable[[str], Column],
@@ -136,10 +147,7 @@ def relax_edges(
             .groupBy("src", "dst")
             .agg(fold("_w").alias("_w"))
         )
-    P = edges.sparkSession.sparkContext.defaultParallelism
-    e = e.repartition(P, "src").persist()
-    e.count()
-    return e
+    return partition_on_src(e)
 
 
 def relax(

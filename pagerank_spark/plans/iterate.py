@@ -3,10 +3,11 @@
 The engine's iterative graph algorithms (connected components, label
 propagation, join-mode PageRank, keyed personalized PageRank, Katz,
 eigenvector, HITS, forward/reverse push, absorbing walks, k-core and
-truss peels, random walks, and the path family's one monotone
-relaxation, ``plans.gather.relax``, behind shortest paths, keyed BFS,
-widest paths, topological levels, temporal reachability and SCC
-coloring) share one loop skeleton: compute the
+truss peels, random and node2vec walks, bow-tie reachability, the
+Brandes forward pass, Luby MIS, maximal matching, Borůvka MSF, and
+the path family's one monotone relaxation, ``plans.gather.relax``,
+behind shortest paths, keyed BFS, widest paths, topological levels,
+temporal reachability and SCC coloring) share one loop skeleton: compute the
 next state from the current one, truncate lineage with
 ``localCheckpoint`` so the physical plan stays O(1) across rounds, run
 one cheap convergence action, stop at ``max_iter`` otherwise. This is
@@ -51,16 +52,31 @@ The contract:
   ``resume``) has no observed row; ``Probe.of`` then runs the same
   aggregates once as an explicit job.
 
+**Drain loops.** A loop that runs until a frame comes out empty stops on
+``Probe.drained(name)``: the new state's observed count ``name`` is 0.
+A doubled partition can only make a non-empty count larger, never 0, so
+it never stops early either. The frontier loops (bow-tie reachability,
+the Brandes forward pass, random and node2vec walks) take the frontier
+as the state and let ``drained(name, keep=frames)`` collect each
+non-empty level; Luby MIS and Borůvka MSF take the shrinking set
+(undecided vertices, inter-component edges) as the state and collect
+their winners and selected edges from ``step``; maximal matching counts
+its live rows and the push family its active rows. Each unions its
+frames once at the end (``union_all``).
+
 The C reference hand-rolls the equivalent do-while in every variant
 (``Page_Rank_SERIAL.c:206-279``). Here the operators that loop over
-Spark rounds are expressed on ``iterate``; a few older round loops
-still hand-roll their own.
+Spark rounds are expressed on ``iterate``, except greedy coloring's
+per-color loop, densest subgraph, the Brandes backward pass, HyperANF,
+SimRank, WL refinement, Louvain levels, the SCC outer loop and the IVF
+Lloyd loop, which still hand-roll their own.
 """
 from __future__ import annotations
 
 import json
 import os
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation
 
@@ -106,6 +122,25 @@ class Probe:
         return lambda prev, new, r: (
             r > after and self.of(new) == self.of(prev)
         )
+
+    def drained(self, name: str, keep: list[DataFrame] | None = None):
+        """Stop test: the new state's count ``name`` is 0. A non-empty
+        new state is appended to ``keep``, so a loop whose rounds each
+        emit a frame collects them for one union at the end."""
+
+        def stop(_prev: DataFrame, new: DataFrame, _r: int) -> bool:
+            if self.of(new)[name] == 0:
+                return True
+            if keep is not None:
+                keep.append(new)
+            return False
+
+        return stop
+
+
+def union_all(frames: list[DataFrame]) -> DataFrame:
+    """One lazy union of the frames a loop collected, in order."""
+    return reduce(DataFrame.unionByName, frames)
 
 
 def iterate(

@@ -79,10 +79,9 @@ def main():
     # built for the SAME graph the comparison runs on
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     only = sys.argv[2:] if len(sys.argv) > 2 else None
-    spark = get_spark(
-        master="local[8]", shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    # get_spark's defaults: local[$SPARK_GRAFT_CPUS] with as many shuffle
+    # partitions (all cores and 32 when unset), half the RAM as heap
+    spark = get_spark()
     con = duckdb.connect()
     # big oracles (triangles/CC on dense graphs) can spill: keep DuckDB's
     # temp storage out of the repo and bound its memory

@@ -1,6 +1,7 @@
 """CC / LPA / triangle tests vs independent oracles (SURVEY.md §5.2)."""
 
 import numpy as np
+import pytest
 
 from pagerank_spark import connected_components, label_propagation, triangle_count
 from pagerank_spark.testing import DEMO_EDGES, edges_df, synth_edges
@@ -202,9 +203,12 @@ def test_jobs_per_round_cc_stars_and_lpa(spark):
     job (its signature probe is observed on that job); LPA's round plan
     plus its checkpoint, whose changed-label count is observed too;
     temporal reachability's relaxation round plus its checkpoint, whose
-    count+xor signature is observed too. Two rounds are the difference
-    between max_iter=3 and max_iter=1 on graphs that do not settle
-    within three rounds."""
+    count+xor signature is observed too; a Brandes forward level plus
+    its checkpoint, whose new-vertex count is observed too (an isEmpty
+    job made this 6; 5 with the observed count). Two rounds are the
+    difference between max_iter=3 and max_iter=1 on graphs that do not
+    settle within three rounds."""
+    from pagerank_spark.operators.centrality import brandes_forward
     from pagerank_spark.operators.temporal import temporal_reachability
 
     path = edges_df(spark, [(i, i + 1) for i in range(63)]).localCheckpoint()
@@ -221,6 +225,7 @@ def test_jobs_per_round_cc_stars_and_lpa(spark):
         ("cc", lambda k: connected_components(path, max_iter=k, mode="stars")),
         ("lpa", lambda k: label_propagation(ring, max_iter=k)),
         ("temporal", lambda k: temporal_reachability(timed, [0], max_hops=k)),
+        ("brandes", lambda k: brandes_forward(path, [0], max_iter=k)),
     ):
         one = _jobs(spark, f"{name}-1", lambda: call(1))
         three = _jobs(spark, f"{name}-3", lambda: call(3))
@@ -231,6 +236,7 @@ def test_jobs_per_round_cc_stars_and_lpa(spark):
     assert 0 < per_round["lpa"] <= 7, per_round
     # a row-wise improvement join as the stop test made this 9
     assert 0 < per_round["temporal"] <= 6, per_round
+    assert 0 < per_round["brandes"] <= 5, per_round
 
 
 def test_cc_count_first_detection_same_labels(spark):
@@ -977,6 +983,7 @@ def test_failed_relaxation_leaves_no_cached_edges(spark, monkeypatch):
         topological_levels,
         widest_paths,
     )
+    from pagerank_spark.operators.temporal import temporal_reachability
 
     gather = importlib.import_module("pagerank_spark.plans.gather")
 
@@ -988,16 +995,51 @@ def test_failed_relaxation_leaves_no_cached_edges(spark, monkeypatch):
         [(0, 1, 1.0), (1, 2, 2.0), (2, 0, 1.0), (2, 3, 1.0)],
         "src long, dst long, weight double",
     )
+    timed = spark.createDataFrame(
+        [(0, 1, 1), (1, 2, 2), (2, 0, 1), (2, 3, 1)], "src long, dst long, t long"
+    )
     for call in (
         lambda: shortest_paths(e, [0], weight_col="weight"),
         lambda: multi_source_bfs(e, [0, 2]),
         lambda: widest_paths(e, [0]),
         lambda: topological_levels(e),
+        lambda: temporal_reachability(timed, [0]),
     ):
         spark.catalog.clearCache()
         with _pytest.raises(RuntimeError, match="injected fixpoint failure"):
             call()
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "module, call",
+    [
+        ("bowtie", lambda m, e: m.bowtie_decomposition(e)),
+        ("mis", lambda m, e: m.maximal_independent_set(e)),
+        ("centrality", lambda m, e: m.brandes_forward(e, [0])),
+    ],
+)
+def test_failed_drain_loop_leaves_no_cached_edges(
+    spark, monkeypatch, module, call
+):
+    """A failure inside a drain loop still unpersists the operator's
+    edge copies (bow-tie's two orientations, MIS's symmetrized edges,
+    Brandes' multiplicity-collapsed edges)."""
+    import importlib
+
+    mod = importlib.import_module(f"pagerank_spark.operators.{module}")
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected drain failure")
+
+    monkeypatch.setattr(mod, "iterate", boom)
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)], "src long, dst long"
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="injected drain failure"):
+        call(mod, e)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_new_operators_handle_empty_graph(spark):
