@@ -29,6 +29,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.kernel import map_arrow, sketch_column, sketch_matrix
+
 # HLL bias-correction constants (Flajolet et al. 2007)
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
 
@@ -60,7 +62,6 @@ def _init_sketches(
     string (``functions.text.hash64``) so register placement is
     ANSI-recomputable — the twin pattern every sketch gate uses;
     xxhash64 (hashing the raw long) stays the production default."""
-    m = 1 << p
     if hash_fn == "md5":
         from pagerank_spark.functions.text import hash64
 
@@ -71,90 +72,77 @@ def _init_sketches(
     else:
         hashed = vertices.select("id", F.xxhash64(F.col("id")).alias("_h"))
         bits = 64
+    return map_arrow(hashed, _pack, "id long, sk binary", p=p, bits=bits)
 
-    def pack(batches):
-        for batch in batches:
-            ids = batch.column("id").to_numpy(zero_copy_only=False)
-            h = batch.column("_h").to_numpy(zero_copy_only=False).astype(np.uint64)
-            j = (h & np.uint64(m - 1)).astype(np.int64)
-            rest = h >> np.uint64(p)
-            # rho = position of the first 1-bit of `rest` (1-based) =
-            # trailing-zero count + 1, computed exactly: isolate the
-            # lowest set bit (two's complement trick) and take its
-            # log2 — powers of two are exact in fp64 for any exponent
-            lowbit = rest & (np.uint64(0) - rest)
-            with np.errstate(divide="ignore"):
-                rho = (
-                    np.log2(np.maximum(lowbit, np.uint64(1)).astype(np.float64))
-                    + 1.0
-                ).astype(np.uint8)
-            rho[rest == 0] = np.uint8(bits - p + 1)
-            mat = np.zeros((len(ids), m), dtype=np.uint8)
-            mat[np.arange(len(ids)), j] = rho
+
+def _pack(batches, *, p: int, bits: int):
+    m = 1 << p
+    for batch in batches:
+        ids = batch.column("id").to_numpy(zero_copy_only=False)
+        h = batch.column("_h").to_numpy(zero_copy_only=False).astype(np.uint64)
+        j = (h & np.uint64(m - 1)).astype(np.int64)
+        rest = h >> np.uint64(p)
+        # rho = position of the first 1-bit of `rest` (1-based) =
+        # trailing-zero count + 1, computed exactly: isolate the
+        # lowest set bit (two's complement trick) and take its
+        # log2 — powers of two are exact in fp64 for any exponent
+        lowbit = rest & (np.uint64(0) - rest)
+        with np.errstate(divide="ignore"):
+            rho = (
+                np.log2(np.maximum(lowbit, np.uint64(1)).astype(np.float64))
+                + 1.0
+            ).astype(np.uint8)
+        rho[rest == 0] = np.uint8(bits - p + 1)
+        mat = np.zeros((len(ids), m), dtype=np.uint8)
+        mat[np.arange(len(ids)), j] = rho
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids), sketch_column(mat)], ["id", "sk"]
+        )
+
+
+def _merge(batches, *, m: int):
+    carry_id = None
+    carry_sk = None
+    for batch in batches:
+        ids = batch.column("id").to_numpy(zero_copy_only=False)
+        sk = sketch_matrix(batch.column("sk"), m)
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        sk = sk[order]
+        if carry_id is not None:
+            ids = np.concatenate([[carry_id], ids])
+            sk = np.vstack([carry_sk, sk])
+        starts = np.flatnonzero(
+            np.concatenate([[True], ids[1:] != ids[:-1]])
+        )
+        merged = np.maximum.reduceat(sk, starts, axis=0)
+        uids = ids[starts]
+        # hold back the LAST group: it may continue in the next batch
+        carry_id = uids[-1]
+        carry_sk = merged[-1]
+        if len(uids) > 1:
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids),
-                    pa.array(list(mat.tobytes(order="C")[i * m:(i + 1) * m]
-                                  for i in range(len(ids))), type=pa.binary()),
-                ],
-                ["id", "sk"],
+                [pa.array(uids[:-1]), sketch_column(merged[:-1])], ["id", "sk"]
             )
+    if carry_id is not None:
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([carry_id]), sketch_column(carry_sk[None, :])],
+            ["id", "sk"],
+        )
 
-    return hashed.mapInArrow(pack, "id long, sk binary")
+
+def _estimate(batches, *, m: int):
+    for batch in batches:
+        sk = sketch_matrix(batch.column("sk"), m)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([float(_hll_estimate_rows(sk).sum())])], ["s"]
+        )
 
 
 def _merge_by_id(df: DataFrame, m: int, num_partitions: int) -> DataFrame:
     """Element-wise-max merge of sketches per id: repartition by id,
     then one vectorized segment reduce per Arrow batch (carry dict for
     ids spanning batches — bounded by one sketch per boundary id)."""
-
-    def merge(batches):
-        carry_id = None
-        carry_sk = None
-        for batch in batches:
-            ids = batch.column("id").to_numpy(zero_copy_only=False)
-            sk = np.frombuffer(
-                b"".join(batch.column("sk").to_pylist()), dtype=np.uint8
-            ).reshape(len(ids), m)
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            sk = sk[order]
-            if carry_id is not None:
-                ids = np.concatenate([[carry_id], ids])
-                sk = np.vstack([carry_sk, sk])
-            if len(ids) == 0:
-                # empty Arrow batches are legal in mapInArrow streams;
-                # with no carry there is nothing to merge (reduceat on a
-                # zero-row matrix raises, and uids[-1] would IndexError)
-                continue
-            starts = np.flatnonzero(
-                np.concatenate([[True], ids[1:] != ids[:-1]])
-            )
-            merged = np.maximum.reduceat(sk, starts, axis=0)
-            uids = ids[starts]
-            # hold back the LAST group: it may continue in the next batch
-            carry_id = uids[-1]
-            carry_sk = merged[-1]
-            if len(uids) > 1:
-                out = merged[:-1]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(uids[:-1]),
-                        pa.array(
-                            [out[i].tobytes() for i in range(len(out))],
-                            type=pa.binary(),
-                        ),
-                    ],
-                    ["id", "sk"],
-                )
-        if carry_id is not None:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([carry_id]),
-                    pa.array([carry_sk.tobytes()], type=pa.binary()),
-                ],
-                ["id", "sk"],
-            )
 
     # sortWithinPartitions is load-bearing: repartition alone does NOT
     # order rows, so an id could appear mid-batch in two batches and be
@@ -168,27 +156,16 @@ def _merge_by_id(df: DataFrame, m: int, num_partitions: int) -> DataFrame:
     # the shuffle saving when distinct ids ≪ messages-per-partition.
     # At a 10⁹-vertex scale where per-partition id cardinality is
     # large, revisit the combiner.)
-    return (
-        df.repartition(num_partitions, "id")
-        .sortWithinPartitions("id")
-        .mapInArrow(merge, "id long, sk binary")
+    return map_arrow(
+        df.repartition(num_partitions, "id").sortWithinPartitions("id"),
+        _merge, "id long, sk binary", m=m,
     )
 
 
 def _total_estimate(sketches: DataFrame, m: int) -> float:
     """Σ_v estimate(sketch_v) via per-partition NumPy partials."""
 
-    def est(batches):
-        for batch in batches:
-            ids = batch.column("id")
-            sk = np.frombuffer(
-                b"".join(batch.column("sk").to_pylist()), dtype=np.uint8
-            ).reshape(len(ids), m)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([float(_hll_estimate_rows(sk).sum())])], ["s"]
-            )
-
-    parts = sketches.mapInArrow(est, "s double")
+    parts = map_arrow(sketches, _estimate, "s double", m=m)
     row = parts.agg(F.sum("s").alias("t")).collect()[0]
     return float(row["t"] or 0.0)
 
@@ -220,28 +197,30 @@ def hyper_anf(
     # result-identical and divides the per-round message volume (each
     # message carries a 2^p-byte sketch) by the duplication factor
     e = edges.select("src", "dst").distinct().repartition(P, "dst").persist()
-    e.count()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    sketches = _merge_by_id(
-        _init_sketches(vertices, p, hash_fn), m, P
-    ).localCheckpoint()
-    rows = [(0, _total_estimate(sketches, m))]
-    for r in range(1, max_iter + 1):
-        msgs = e.join(
-            sketches.withColumnRenamed("id", "dst"), "dst"
-        ).select(F.col("src").alias("id"), "sk")
-        merged = _merge_by_id(
-            sketches.unionByName(msgs.select("id", "sk")), m, P
+    try:
+        e.count()
+        vertices = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+        sketches = _merge_by_id(
+            _init_sketches(vertices, p, hash_fn), m, P
         ).localCheckpoint()
-        est = _total_estimate(merged, m)
-        sketches = merged
-        prev = rows[-1][1]
-        rows.append((r, est))
-        if prev > 0 and (est - prev) / prev < rel_tol:
-            break
-    e.unpersist()
+        rows = [(0, _total_estimate(sketches, m))]
+        for r in range(1, max_iter + 1):
+            msgs = e.join(
+                sketches.withColumnRenamed("id", "dst"), "dst"
+            ).select(F.col("src").alias("id"), "sk")
+            merged = _merge_by_id(
+                sketches.unionByName(msgs.select("id", "sk")), m, P
+            ).localCheckpoint()
+            est = _total_estimate(merged, m)
+            sketches = merged
+            prev = rows[-1][1]
+            rows.append((r, est))
+            if prev > 0 and (est - prev) / prev < rel_tol:
+                break
+    finally:
+        e.unpersist()
     return spark.createDataFrame(rows, "radius long, pairs_est double")

@@ -28,6 +28,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.kernel import list_values, map_arrow
+
 # Mersenne prime for universal hashing of 64-bit shingle hashes.
 _MERSENNE = (1 << 61) - 1
 
@@ -150,56 +152,47 @@ def minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return am, bm
 
 
-def _minhash_kernel(num_perm: int, bands: int, seed: int):
+def _minhash(batches, *, am: np.ndarray, bm: np.ndarray, bands: int):
+    num_perm = len(am)
     rows_per_band = num_perm // bands
-    am, bm = minhash_params(num_perm, seed)
-
-    def kernel(batches):
-        for batch in batches:
-            nrows = batch.num_rows
-            if nrows == 0:
-                continue
-            ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            hl = batch.column("hashes")
-            arr = hl.combine_chunks() if isinstance(hl, pa.ChunkedArray) else hl
-            offsets = np.asarray(arr.offsets)
-            vals = arr.flatten().to_numpy(zero_copy_only=False).astype(np.uint64)
-            counts = np.diff(offsets)
-            # Vectorized per permutation (cache-friendly 1-D temporaries
-            # instead of one (E, K) matrix): per-doc segment min via
-            # minimum.reduceat — zero per-row (and per-doc) Python.
-            # A +inf sentinel is appended so a trailing empty document's
-            # start index stays valid WITHOUT clamping (clamping would
-            # truncate the previous document's segment); empty-doc rows
-            # are overwritten by the counts==0 mask below.
-            sig = np.empty((nrows, num_perm), dtype=np.uint64)
-            if len(vals):
-                starts = offsets[:-1].astype(np.intp)
-                sentinel = np.uint64(0xFFFFFFFFFFFFFFFF)
-                for k in range(num_perm):
-                    hk = np.append(vals * am[k] + bm[k], sentinel)
-                    sig[:, k] = np.minimum.reduceat(hk, starts)
-            sig[counts == 0] = np.uint64(0xFFFFFFFFFFFFFFFF)
-            if rows_per_band == 1:
-                # one row per band: the band hash IS the signature value
-                # (keeps the bands=num_perm configuration portable — an
-                # unmixed MinHash signature is SQL-recomputable)
-                acc = sig
-            else:
-                # band hashes: fold each band's rows with a splitmix finalizer
-                band_sig = sig.reshape(nrows, bands, rows_per_band)
-                acc = np.zeros((nrows, bands), dtype=np.uint64)
-                for r in range(rows_per_band):
-                    acc ^= band_sig[:, :, r] + np.uint64(0x9E3779B97F4A7C15) + (acc << np.uint64(6)) + (acc >> np.uint64(2))
-            out_ids = np.repeat(ids, bands)
-            out_band = np.tile(np.arange(bands, dtype=np.int32), nrows)
-            out_hash = acc.reshape(-1).astype(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids), pa.array(out_band), pa.array(out_hash)],
-                ["doc_id", "band", "band_hash"],
-            )
-
-    return kernel
+    for batch in batches:
+        nrows = batch.num_rows
+        ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
+        offsets, vals = list_values(batch.column("hashes"), np.uint64)
+        counts = np.diff(offsets)
+        # Vectorized per permutation (cache-friendly 1-D temporaries
+        # instead of one (E, K) matrix): per-doc segment min via
+        # minimum.reduceat — zero per-row (and per-doc) Python.
+        # A +inf sentinel is appended so a trailing empty document's
+        # start index stays valid WITHOUT clamping (clamping would
+        # truncate the previous document's segment); empty-doc rows
+        # are overwritten by the counts==0 mask below.
+        sig = np.empty((nrows, num_perm), dtype=np.uint64)
+        if len(vals):
+            starts = offsets[:-1].astype(np.intp)
+            sentinel = np.uint64(0xFFFFFFFFFFFFFFFF)
+            for k in range(num_perm):
+                hk = np.append(vals * am[k] + bm[k], sentinel)
+                sig[:, k] = np.minimum.reduceat(hk, starts)
+        sig[counts == 0] = np.uint64(0xFFFFFFFFFFFFFFFF)
+        if rows_per_band == 1:
+            # one row per band: the band hash IS the signature value
+            # (keeps the bands=num_perm configuration portable — an
+            # unmixed MinHash signature is SQL-recomputable)
+            acc = sig
+        else:
+            # band hashes: fold each band's rows with a splitmix finalizer
+            band_sig = sig.reshape(nrows, bands, rows_per_band)
+            acc = np.zeros((nrows, bands), dtype=np.uint64)
+            for r in range(rows_per_band):
+                acc ^= band_sig[:, :, r] + np.uint64(0x9E3779B97F4A7C15) + (acc << np.uint64(6)) + (acc >> np.uint64(2))
+        out_ids = np.repeat(ids, bands)
+        out_band = np.tile(np.arange(bands, dtype=np.int32), nrows)
+        out_hash = acc.reshape(-1).astype(np.int64)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(out_ids), pa.array(out_band), pa.array(out_hash)],
+            ["doc_id", "band", "band_hash"],
+        )
 
 
 def minhash_bands(
@@ -224,9 +217,10 @@ def _bands_from_hashes(
     the single implementation behind minhash_bands and the pair join."""
     if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
-    return sh.mapInArrow(
-        _minhash_kernel(num_perm, bands, seed),
-        "doc_id long, band int, band_hash long",
+    am, bm = minhash_params(num_perm, seed)
+    return map_arrow(
+        sh, _minhash, "doc_id long, band int, band_hash long",
+        am=am, bm=bm, bands=bands,
     )
 
 
@@ -374,55 +368,47 @@ def minhash_lsh_pairs(
     return cross.unionByName(within)
 
 
-def _simhash_kernel():
-    def kernel(batches):
-        bit_idx = np.arange(64, dtype=np.uint64)
-        for batch in batches:
-            nrows = batch.num_rows
-            if nrows == 0:
-                continue
-            ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            hl = batch.column("hashes")
-            arr = hl.combine_chunks() if isinstance(hl, pa.ChunkedArray) else hl
-            offsets = np.asarray(arr.offsets)
-            vals = arr.flatten().to_numpy(zero_copy_only=False).astype(np.uint64)
-            counts = np.diff(offsets)
-            starts = offsets[:-1].astype(np.intp)
-            if len(vals):
-                # Bit matrix via unpackbits on the little-endian byte
-                # view: (tokens, 64) uint8 — 64x smaller temporaries
-                # than the previous int64 ±1 broadcast (large fresh
-                # allocations dominated the kernel: first-touch page
-                # faults cost seconds per task on this class of box).
-                # The trailing zero row keeps a trailing-empty-doc
-                # start index valid without clamping (clamping would
-                # truncate the previous document's segment).
-                # explicit little-endian view: on a big-endian host a
-                # bare .view(np.uint8) would byte-swap every fingerprint
-                bits = np.unpackbits(
-                    vals.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8),
-                    axis=1,
-                    bitorder="little",
-                )
-                ones_ext = np.zeros((len(vals) + 1, 64), dtype=np.int32)
-                ones_ext[:-1] = bits
-                ones = np.add.reduceat(ones_ext, starts, axis=0)
-            else:
-                ones = np.zeros((nrows, 64), dtype=np.int32)
-            ones[counts == 0] = 0
-            # bit-majority: set iff strictly more than half the token
-            # hashes have the bit (== sum of ±1 > 0; ties clear the
-            # bit) — the exact rule the ANSI oracle recomputes.
-            fp = (
-                ((2 * ones > counts[:, None]).astype(np.uint64))
-                << bit_idx[None, :]
-            ).sum(axis=1, dtype=np.uint64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(fp.astype(np.int64))],
-                ["doc_id", "simhash"],
+def _simhash(batches):
+    bit_idx = np.arange(64, dtype=np.uint64)
+    for batch in batches:
+        nrows = batch.num_rows
+        ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
+        offsets, vals = list_values(batch.column("hashes"), np.uint64)
+        counts = np.diff(offsets)
+        starts = offsets[:-1].astype(np.intp)
+        if len(vals):
+            # Bit matrix via unpackbits on the little-endian byte
+            # view: (tokens, 64) uint8 — 64x smaller temporaries
+            # than the previous int64 ±1 broadcast (large fresh
+            # allocations dominated the kernel: first-touch page
+            # faults cost seconds per task on this class of box).
+            # The trailing zero row keeps a trailing-empty-doc
+            # start index valid without clamping (clamping would
+            # truncate the previous document's segment).
+            # explicit little-endian view: on a big-endian host a
+            # bare .view(np.uint8) would byte-swap every fingerprint
+            bits = np.unpackbits(
+                vals.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8),
+                axis=1,
+                bitorder="little",
             )
-
-    return kernel
+            ones_ext = np.zeros((len(vals) + 1, 64), dtype=np.int32)
+            ones_ext[:-1] = bits
+            ones = np.add.reduceat(ones_ext, starts, axis=0)
+        else:
+            ones = np.zeros((nrows, 64), dtype=np.int32)
+        ones[counts == 0] = 0
+        # bit-majority: set iff strictly more than half the token
+        # hashes have the bit (== sum of ±1 > 0; ties clear the
+        # bit) — the exact rule the ANSI oracle recomputes.
+        fp = (
+            ((2 * ones > counts[:, None]).astype(np.uint64))
+            << bit_idx[None, :]
+        ).sum(axis=1, dtype=np.uint64)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids), pa.array(fp.astype(np.int64))],
+            ["doc_id", "simhash"],
+        )
 
 
 def simhash_fingerprints(
@@ -442,7 +428,7 @@ def simhash_fingerprints(
         F.col(id_col).alias("doc_id"),
         F.transform(tokens, lambda t: hash64(t, hash_fn)).alias("hashes"),
     )
-    return th.mapInArrow(_simhash_kernel(), "doc_id long, simhash long")
+    return map_arrow(th, _simhash, "doc_id long, simhash long")
 
 
 def simhash_duplicate_pairs(

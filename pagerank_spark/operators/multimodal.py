@@ -2,8 +2,8 @@
 
 Image/audio/video payloads are ``binary`` columns moved through the
 pipeline untouched; per-asset compute (decode, resize, frame-sample,
-feature-extract) runs as Arrow-batched kernels over ``mapInArrow`` /
-``mapInPandas`` so bytes never round-trip through per-row Python.
+feature-extract) runs as Arrow-batched kernels over ``mapInArrow``
+(``plans/kernel.py``) so bytes never round-trip through per-row Python.
 
 The decode step itself is STUBBED in this environment (no image/audio
 codecs in the container): ``decode_stub=True`` (default) derives a
@@ -18,10 +18,12 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.kernel import map_arrow
 
 ASSET_SCHEMA = (
     "asset_id long, kind string, payload binary, media_type string, "
@@ -68,7 +70,7 @@ def _decode_unavailable(payload: bytes) -> np.ndarray:
 def extract_features(
     assets: DataFrame, decode_stub: bool = True, decode_fn=None
 ) -> DataFrame:
-    """``(asset_id, kind, n_bytes, feature: array<float>)`` via mapInPandas.
+    """``(asset_id, kind, n_bytes, feature: array<float>)`` via an Arrow kernel.
 
     Real pipeline shape: one Arrow batch in, vectorized work, one batch
     out. ``decode_fn`` is the codec adapter — ``bytes -> feature
@@ -80,28 +82,31 @@ def extract_features(
     """
     if decode_fn is None:
         decode_fn = _decode_features if decode_stub else _decode_unavailable
-
-    def kernel(batches):
-        for pdf in batches:
-            payloads = pdf["payload"]
-            # the injected codec call is inherently per-asset; keep it —
-            # and ONLY it — inside the comprehension
-            feats = [
-                np.asarray(decode_fn(bytes(p)), dtype=np.float32).tolist()
-                for p in payloads
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "feature": feats,
-                }
-            )
-
-    return assets.mapInPandas(
-        kernel, "asset_id long, kind string, n_bytes long, feature array<float>"
+    return map_arrow(
+        assets, _features,
+        "asset_id long, kind string, n_bytes long, feature array<float>",
+        decode_fn=decode_fn,
     )
+
+
+def _features(batches, *, decode_fn):
+    for batch in batches:
+        payload = batch.column("payload")
+        # the injected codec call is inherently per-asset; keep it —
+        # and ONLY it — inside the comprehension
+        feats = [
+            np.asarray(decode_fn(p), dtype=np.float32)
+            for p in payload.to_pylist()
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("asset_id"),
+                batch.column("kind"),
+                pc.binary_length(payload).cast(pa.int64()),
+                pa.array(feats, type=pa.list_(pa.float32())),
+            ],
+            ["asset_id", "kind", "n_bytes", "feature"],
+        )
 
 
 def resize_images(assets: DataFrame, max_side: int = 256, decode_stub: bool = True) -> DataFrame:

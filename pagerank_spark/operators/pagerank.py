@@ -78,12 +78,14 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pagerank_spark.plans.gather import gather_sum, l1_delta
 from pagerank_spark.plans.inspect import plan_has
 from pagerank_spark.plans.iterate import iterate
+from pagerank_spark.plans.kernel import map_arrow
 from pagerank_spark.plans.metrics import (
     shuffle_delta as _shuffle_delta,
     shuffle_totals as _shuffle_totals,
@@ -462,7 +464,7 @@ def _pagerank_local(
 # block-store strategy (broadcast rank vector, Arrow CSR blocks)
 # --------------------------------------------------------------------------
 
-def _block_build_kernel(block_dir: str, strength_path: str):
+def _block_build(batches, *, block_dir: str, strength_path: str):
     """Build one CSR-style block per input partition, persisted as an
     Arrow IPC file (columns: src, inv, uniq), and emit its lineage row.
 
@@ -472,80 +474,70 @@ def _block_build_kernel(block_dir: str, strength_path: str):
     no sort, no unique, no per-row Python. The build pays the
     O(E log E) unique once; every iteration after is O(E).
     """
-
-    def kernel(batches):
-        from pyspark import TaskContext
-
-        srcs, dsts, ews = [], [], []
-        weighted = None
-        for batch in batches:
-            if batch.num_rows:
-                if weighted is None:
-                    weighted = "_w" in batch.schema.names
-                srcs.append(batch.column("src").to_numpy(zero_copy_only=False))
-                dsts.append(batch.column("dst").to_numpy(zero_copy_only=False))
-                if weighted:
-                    ews.append(batch.column("_w").to_numpy(zero_copy_only=False))
-        if not srcs:
-            return
-        pid = TaskContext.get().partitionId()
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
-        ew = np.concatenate(ews) if ews else np.ones(len(src))
-        uniq, inv = np.unique(dst, return_inverse=True)
-        # Per-edge factor d*w/strength(src), loop-invariant
-        # (Page_Rank_SERIAL.c:168-180): baked into the block so each
-        # iteration needs only ONE random gather (rank[src]).
-        strength = _load_vec(strength_path, None)
-        wfac = ew * strength[src]  # strength file holds d/strength
-        # pos: index of src within this block's own dst set (-1 if the
-        # source vertex is external) — enables block-Jacobi local
-        # iterations (O18 `local_iters`, Page_Rank_improved.c:404-468).
-        p = np.searchsorted(uniq, src)
-        p[p >= len(uniq)] = len(uniq) - 1 if len(uniq) else 0
-        local = uniq[p] == src if len(uniq) else np.zeros(len(src), bool)
-        pos = np.where(local, p, -1).astype(np.int32)
-        # src and inv are stored int64 even when ids fit 32 bits:
-        # np.bincount and fancy indexing both convert index arrays to
-        # intp internally, so an int32 column costs an 8-byte-per-edge
-        # conversion copy EVERY iteration (measured per 1e8 edges:
-        # bincount 0.50s int32 vs 0.32s int64; the 8-core sync dropped
-        # 1.40 -> 0.95 s/iter end-to-end) — storing the wider type once
-        # beats converting per sync. pos stays int32: the local_iters
-        # kernel reads it once per sync into a boolean mask only.
-        edges_tbl = pa.table(
-            {
-                "src": pa.array(src.astype(np.int64)),
-                "inv": pa.array(inv.astype(np.int64)),
-                "wfac": pa.array(wfac.astype(np.float64)),
-                "pos": pa.array(pos),
-            }
-        )
-        uniq_tbl = pa.table({"uniq": pa.array(uniq.astype(np.int64))})
-        # uniq sidecar FIRST: the main file's existence then implies a
-        # complete block even if the build is interrupted mid-partition.
-        for suffix, tbl in ((".uniq", uniq_tbl), ("", edges_tbl)):
-            path = os.path.join(block_dir, f"block_{pid:05d}{suffix}.arrow")
-            tmp = path + ".tmp"
-            with pa.OSFile(tmp, "wb") as f:
-                with pa.ipc.new_file(f, tbl.schema) as w:
-                    w.write_table(tbl)
-            os.replace(tmp, path)
-        n_bytes = sum(
-            os.path.getsize(os.path.join(block_dir, f"block_{pid:05d}{sfx}.arrow"))
-            for sfx in ("", ".uniq")
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid], type=pa.int32()),
-                pa.array([len(src)], type=pa.int64()),
-                pa.array([len(uniq)], type=pa.int64()),
-                pa.array([n_bytes], type=pa.int64()),
-            ],
-            ["pid", "n_edges", "n_uniq", "n_bytes"],
-        )
-
-    return kernel
+    srcs, dsts, ews = [], [], []
+    for batch in batches:
+        srcs.append(batch.column("src").to_numpy(zero_copy_only=False))
+        dsts.append(batch.column("dst").to_numpy(zero_copy_only=False))
+        if "_w" in batch.schema.names:
+            ews.append(batch.column("_w").to_numpy(zero_copy_only=False))
+    if not srcs:
+        return
+    pid = TaskContext.get().partitionId()
+    src = np.concatenate(srcs)
+    dst = np.concatenate(dsts)
+    ew = np.concatenate(ews) if ews else np.ones(len(src))
+    uniq, inv = np.unique(dst, return_inverse=True)
+    # Per-edge factor d*w/strength(src), loop-invariant
+    # (Page_Rank_SERIAL.c:168-180): baked into the block so each
+    # iteration needs only ONE random gather (rank[src]).
+    strength = _load_vec(strength_path, None)
+    wfac = ew * strength[src]  # strength file holds d/strength
+    # pos: index of src within this block's own dst set (-1 if the
+    # source vertex is external) — enables block-Jacobi local
+    # iterations (O18 `local_iters`, Page_Rank_improved.c:404-468).
+    p = np.searchsorted(uniq, src)
+    p[p >= len(uniq)] = len(uniq) - 1 if len(uniq) else 0
+    local = uniq[p] == src if len(uniq) else np.zeros(len(src), bool)
+    pos = np.where(local, p, -1).astype(np.int32)
+    # src and inv are stored int64 even when ids fit 32 bits:
+    # np.bincount and fancy indexing both convert index arrays to
+    # intp internally, so an int32 column costs an 8-byte-per-edge
+    # conversion copy EVERY iteration (measured per 1e8 edges:
+    # bincount 0.50s int32 vs 0.32s int64; the 8-core sync dropped
+    # 1.40 -> 0.95 s/iter end-to-end) — storing the wider type once
+    # beats converting per sync. pos stays int32: the local_iters
+    # kernel reads it once per sync into a boolean mask only.
+    edges_tbl = pa.table(
+        {
+            "src": pa.array(src.astype(np.int64)),
+            "inv": pa.array(inv.astype(np.int64)),
+            "wfac": pa.array(wfac.astype(np.float64)),
+            "pos": pa.array(pos),
+        }
+    )
+    uniq_tbl = pa.table({"uniq": pa.array(uniq.astype(np.int64))})
+    # uniq sidecar FIRST: the main file's existence then implies a
+    # complete block even if the build is interrupted mid-partition.
+    for suffix, tbl in ((".uniq", uniq_tbl), ("", edges_tbl)):
+        path = os.path.join(block_dir, f"block_{pid:05d}{suffix}.arrow")
+        tmp = path + ".tmp"
+        with pa.OSFile(tmp, "wb") as f:
+            with pa.ipc.new_file(f, tbl.schema) as w:
+                w.write_table(tbl)
+        os.replace(tmp, path)
+    n_bytes = sum(
+        os.path.getsize(os.path.join(block_dir, f"block_{pid:05d}{sfx}.arrow"))
+        for sfx in ("", ".uniq")
+    )
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array([pid], type=pa.int32()),
+            pa.array([len(src)], type=pa.int64()),
+            pa.array([len(uniq)], type=pa.int64()),
+            pa.array([n_bytes], type=pa.int64()),
+        ],
+        ["pid", "n_edges", "n_uniq", "n_bytes"],
+    )
 
 
 # Per-worker-process cache for the replicated vectors. PySpark
@@ -569,8 +561,9 @@ def _load_vec(path: str, version) -> np.ndarray:
     return _VEC_CACHE["vec"]
 
 
-def _block_kernel(
-    block_dir: str, rank_path: str, expected_pids: frozenset, k: int = 1,
+def _block_gather(
+    batches, *, block_dir: str, rank_path: str, expected_pids: frozenset,
+    k: int,
 ):
     """Gather over materialized blocks, built once per call and re-run
     each iteration: memory-map the Arrow file (zero-copy), gather
@@ -599,57 +592,51 @@ def _block_kernel(
     gates its local phase behind a coarse global phase
     (``Page_Rank_improved.c:368`` eps 1e-3 first). Off (k=1) by default.
     """
-
-    def kernel(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        iteration = ctx.getLocalProperty(_ITER_PROP)
-        if iteration is None:
-            raise RuntimeError(
-                f"block kernel ran without the {_ITER_PROP} task property"
+    ctx = TaskContext.get()
+    iteration = ctx.getLocalProperty(_ITER_PROP)
+    if iteration is None:
+        raise RuntimeError(
+            f"block kernel ran without the {_ITER_PROP} task property"
+        )
+    r = _load_vec(rank_path, int(iteration))
+    base = float.fromhex(ctx.getLocalProperty(_BASE_PROP))
+    for batch in batches:
+        for pid in batch.column("pid").to_pylist():
+            path = os.path.join(block_dir, f"block_{pid:05d}.arrow")
+            if not os.path.exists(path):
+                if pid in expected_pids:
+                    raise FileNotFoundError(
+                        f"block store incomplete: {path} is listed in "
+                        "the manifest but missing on disk — rebuild "
+                        "(resume=False) or restore the block files"
+                    )
+                continue  # pid genuinely owns no edges
+            with pa.memory_map(path, "r") as mm, pa.memory_map(
+                path.replace(".arrow", ".uniq.arrow"), "r"
+            ) as mu:
+                tbl = pa.ipc.open_file(mm).read_all()
+                src = tbl.column("src").to_numpy(zero_copy_only=False)
+                inv = tbl.column("inv").to_numpy(zero_copy_only=False)
+                wfac = tbl.column("wfac").to_numpy(zero_copy_only=False)
+                uniq = pa.ipc.open_file(mu).read_all().column("uniq")
+                uniq = uniq.to_numpy(zero_copy_only=False)
+                if k == 1:
+                    out = np.bincount(
+                        inv, weights=wfac * r[src], minlength=len(uniq)
+                    )
+                else:
+                    pos = tbl.column("pos").to_numpy(zero_copy_only=False)
+                    vals = r[src].astype(np.float64)
+                    local_mask = pos >= 0
+                    lpos = pos[local_mask]
+                    for _ in range(k):
+                        out = base + np.bincount(
+                            inv, weights=wfac * vals, minlength=len(uniq)
+                        )
+                        vals[local_mask] = out[lpos]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(uniq), pa.array(out)], ["dst", "s"]
             )
-        r = _load_vec(rank_path, int(iteration))
-        base = float.fromhex(ctx.getLocalProperty(_BASE_PROP))
-        for batch in batches:
-            for pid in batch.column("pid").to_pylist():
-                path = os.path.join(block_dir, f"block_{pid:05d}.arrow")
-                if not os.path.exists(path):
-                    if pid in expected_pids:
-                        raise FileNotFoundError(
-                            f"block store incomplete: {path} is listed in "
-                            "the manifest but missing on disk — rebuild "
-                            "(resume=False) or restore the block files"
-                        )
-                    continue  # pid genuinely owns no edges
-                with pa.memory_map(path, "r") as mm, pa.memory_map(
-                    path.replace(".arrow", ".uniq.arrow"), "r"
-                ) as mu:
-                    tbl = pa.ipc.open_file(mm).read_all()
-                    src = tbl.column("src").to_numpy(zero_copy_only=False)
-                    inv = tbl.column("inv").to_numpy(zero_copy_only=False)
-                    wfac = tbl.column("wfac").to_numpy(zero_copy_only=False)
-                    uniq = pa.ipc.open_file(mu).read_all().column("uniq")
-                    uniq = uniq.to_numpy(zero_copy_only=False)
-                    if k == 1:
-                        out = np.bincount(
-                            inv, weights=wfac * r[src], minlength=len(uniq)
-                        )
-                    else:
-                        pos = tbl.column("pos").to_numpy(zero_copy_only=False)
-                        vals = r[src].astype(np.float64)
-                        local_mask = pos >= 0
-                        lpos = pos[local_mask]
-                        for _ in range(k):
-                            out = base + np.bincount(
-                                inv, weights=wfac * vals, minlength=len(uniq)
-                            )
-                            vals[local_mask] = out[lpos]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(uniq), pa.array(out)], ["dst", "s"]
-                )
-
-    return kernel
 
 
 def _pagerank_broadcast(
@@ -768,9 +755,10 @@ def _pagerank_broadcast(
             if weight_col:
                 sel.append(F.col(weight_col).cast("double").alias("_w"))
             prepared = edges.select(*sel).repartition(P, pk)
-            man_rows = prepared.mapInArrow(
-                _block_build_kernel(block_dir, strength_path),
+            man_rows = map_arrow(
+                prepared, _block_build,
                 "pid int, n_edges long, n_uniq long, n_bytes long",
+                block_dir=block_dir, strength_path=strength_path,
             ).collect()
             part_sizes = {int(r["pid"]): int(r["n_edges"]) for r in man_rows}
             sizes = np.array(list(part_sizes.values()) or [0], dtype=np.float64)
@@ -810,11 +798,12 @@ def _pagerank_broadcast(
         # numPartitions=P places id i in partition i — a hash repartition
         # would leave ~1/e of tasks empty and pile blocks onto others).
         # Built once with its kernel; each iteration re-runs it.
-        frame = spark.range(
-            0, lineage["num_partitions"], 1, lineage["num_partitions"]
-        ).select(F.col("id").cast("int").alias("pid")).mapInArrow(
-            _block_kernel(block_dir, rank_path, expected_pids, local_iters),
-            "dst long, s double",
+        frame = map_arrow(
+            spark.range(
+                0, lineage["num_partitions"], 1, lineage["num_partitions"]
+            ).select(F.col("id").cast("int").alias("pid")),
+            _block_gather, "dst long, s double", block_dir=block_dir,
+            rank_path=rank_path, expected_pids=expected_pids, k=local_iters,
         )
         # zero-shuffle iterations by design (blocks are mmapped
         # executor-local Arrow files): proven once from the plan

@@ -26,6 +26,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.kernel import list_values, map_arrow
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -147,30 +149,21 @@ def _seq_dot(q, signs) -> float:
     return acc
 
 
-def _hyperplane_kernel(planes: np.ndarray):
+def _hyperplane(batches, *, planes: np.ndarray):
     nbits, dim = planes.shape
-
-    def kernel(batches):
-        weights = np.ascontiguousarray(planes.T)  # (dim, nbits)
-        shifts = np.arange(nbits, dtype=np.uint64)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            col = batch.column("embedding")
-            arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-            flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            mat = flat.reshape(n, dim)  # fixed-dim embeddings
-            proj = mat @ weights  # (n, nbits) — one BLAS call per batch
-            bits = (proj > 0).astype(np.uint64)
-            bucket = (bits << shifts[None, :]).sum(axis=1, dtype=np.uint64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(bucket.astype(np.int64))],
-                ["vec_id", "bucket"],
-            )
-
-    return kernel
+    weights = np.ascontiguousarray(planes.T)  # (dim, nbits)
+    shifts = np.arange(nbits, dtype=np.uint64)
+    for batch in batches:
+        ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
+        _, flat = list_values(batch.column("embedding"), np.float64)
+        mat = flat.reshape(batch.num_rows, dim)  # fixed-dim embeddings
+        proj = mat @ weights  # (n, nbits) — one BLAS call per batch
+        bits = (proj > 0).astype(np.uint64)
+        bucket = (bits << shifts[None, :]).sum(axis=1, dtype=np.uint64)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids), pa.array(bucket.astype(np.int64))],
+            ["vec_id", "bucket"],
+        )
 
 
 def lsh_cosine_buckets(
@@ -207,8 +200,8 @@ def lsh_cosine_buckets(
             ),
         )
     if method == "kernel":
-        return src.mapInArrow(
-            _hyperplane_kernel(plane_m), "vec_id long, bucket long"
+        return map_arrow(
+            src, _hyperplane, "vec_id long, bucket long", planes=plane_m
         )
     raise ValueError(f"method must be 'kernel' or 'expr': {method!r}")
 
@@ -306,9 +299,9 @@ def ivf_centroids(
         # per-centroid (sum-vector, count) partials per Arrow batch —
         # O(batches * k) skinny rows to the driver, independent of both
         # dim (no per-dimension expressions in the plan) and row count.
-        partials = src.mapInArrow(
-            _lloyd_partial_kernel(centroids),
-            "centroid int, cnt long, vsum array<double>",
+        partials = map_arrow(
+            src, _lloyd_partials, "centroid int, cnt long, vsum array<double>",
+            centroids=centroids,
         ).collect()
         k, dim = centroids.shape
         sums = np.zeros((k, dim), dtype=np.float64)
@@ -332,69 +325,43 @@ def _unit_rows(m: np.ndarray) -> np.ndarray:
     return m / norms
 
 
-def _norm_rows(batch, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, row-normalized matrix) from an Arrow batch of embeddings."""
-    n = batch.num_rows
-    ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
-    col = batch.column("embedding")
-    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    mat = (
-        arr.flatten()
-        .to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-        .reshape(n, dim)
-    )
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return ids, mat / norms
+def _nearest(batches, centroids: np.ndarray):
+    """Per batch: (ids, unit rows, nearest centroid). Spherical
+    assignment: normalize rows, argmax cosine with the unit centroids —
+    magnitude must not influence routing (the rerank metric is cosine)."""
+    cT = np.ascontiguousarray(centroids.T)
+    for batch in batches:
+        _, flat = list_values(batch.column("embedding"), np.float64)
+        unit = _unit_rows(flat.reshape(batch.num_rows, centroids.shape[1]))
+        ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
+        yield ids, unit, (unit @ cT).argmax(axis=1)
 
 
-def _lloyd_partial_kernel(centroids: np.ndarray):
+def _lloyd_partials(batches, *, centroids: np.ndarray):
     """Assign + partial-aggregate in one pass: per batch, emit one row
     per non-empty centroid with (count, sum of normalized vectors)."""
     k, dim = centroids.shape
-
-    def kernel(batches):
-        cT = np.ascontiguousarray(centroids.T)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            _, unit = _norm_rows(batch, dim)
-            best = (unit @ cT).argmax(axis=1)
-            cnts = np.bincount(best, minlength=k)
-            sums = np.zeros((k, dim), dtype=np.float64)
-            np.add.at(sums, best, unit)
-            nz = np.flatnonzero(cnts)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(nz.astype(np.int32)),
-                    pa.array(cnts[nz].astype(np.int64)),
-                    pa.array(list(sums[nz])),
-                ],
-                ["centroid", "cnt", "vsum"],
-            )
-
-    return kernel
+    for _, unit, best in _nearest(batches, centroids):
+        cnts = np.bincount(best, minlength=k)
+        sums = np.zeros((k, dim), dtype=np.float64)
+        np.add.at(sums, best, unit)
+        nz = np.flatnonzero(cnts)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(nz.astype(np.int32)),
+                pa.array(cnts[nz].astype(np.int64)),
+                pa.array(list(sums[nz])),
+            ],
+            ["centroid", "cnt", "vsum"],
+        )
 
 
-def _assign_kernel(centroids: np.ndarray):
-    k, dim = centroids.shape
-
-    def kernel(batches):
-        cT = np.ascontiguousarray(centroids.T)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            # spherical assignment: normalize rows, argmax cosine with
-            # the unit centroids — magnitude must not influence routing
-            # (the rerank metric is cosine)
-            ids, unit = _norm_rows(batch, dim)
-            best = (unit @ cT).argmax(axis=1).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(best)], ["vec_id", "centroid"]
-            )
-
-    return kernel
+def _assign(batches, *, centroids: np.ndarray):
+    for ids, _, best in _nearest(batches, centroids):
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids), pa.array(best.astype(np.int32))],
+            ["vec_id", "centroid"],
+        )
 
 
 @dataclass
@@ -448,8 +415,8 @@ def ivf_index(
     src = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    assigned = src.mapInArrow(
-        _assign_kernel(centroids), "vec_id long, centroid int"
+    assigned = map_arrow(
+        src, _assign, "vec_id long, centroid int", centroids=centroids
     )
     if path is not None:
         assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
@@ -584,10 +551,11 @@ def semdedup(
         cents = ivf_centroids(
             embeddings, n_centroids, iters, seed, id_col, vec_col
         )
-        clusters = embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ).mapInArrow(
-            _assign_kernel(cents), "vec_id long, centroid int"
+        clusters = map_arrow(
+            embeddings.select(
+                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+            ),
+            _assign, "vec_id long, centroid int", centroids=cents,
         ).select("vec_id", F.col("centroid").cast("long").alias("cluster"))
     elif method == "lsh":
         clusters = lsh_cosine_buckets(

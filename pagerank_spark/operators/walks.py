@@ -148,11 +148,13 @@ def random_walks(
             "walk_id", F.col("hv.v").alias("vertex")
         )
 
-    if length > 0:
-        walking = Probe(n=F.count(F.lit(1)))
-        iterate(frontier, _step, walking.drained("n", keep=steps), length,
-                probe=walking)
-    e.unpersist()
+    try:
+        if length > 0:
+            walking = Probe(n=F.count(F.lit(1)))
+            iterate(frontier, _step, walking.drained("n", keep=steps), length,
+                    probe=walking)
+    finally:
+        e.unpersist()
     # steps[t] is step t: a drained loop keeps no empty frontier
     return union_all([
         fr.select("walk_id", F.lit(t).alias("step"), "vertex")
@@ -347,12 +349,14 @@ def node2vec_walks(
             F.col("_pick.dst").alias("vertex"),
         )
 
-    if length > 0:
-        walking = Probe(n=F.count(F.lit(1)))
-        iterate(frontier, _step, walking.drained("n", keep=steps), length,
-                probe=walking)
-    e.unpersist()
-    und.unpersist()
+    try:
+        if length > 0:
+            walking = Probe(n=F.count(F.lit(1)))
+            iterate(frontier, _step, walking.drained("n", keep=steps), length,
+                    probe=walking)
+    finally:
+        e.unpersist()
+        und.unpersist()
     return union_all([
         fr.select("walk_id", F.lit(t).alias("step"), "vertex")
         for t, fr in enumerate(steps)

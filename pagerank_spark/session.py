@@ -11,12 +11,11 @@ an archive only when the archive changed on disk. Every Python task
 starts with ``importlib.invalidate_caches()``, and on CPython
 3.10-3.12 each zipimporter on ``sys.path`` then re-parses its whole
 archive directory; with ``pyspark.zip``, the py4j zip and the Spark
-core jar on a worker's path that is ~0.25 s per task. A kernel that
-references a module-level engine helper is pickled with that helper by
-reference, so a Python worker imports the package, and installs the
-guard, when it unpickles the first such kernel; kernels that close over
-NumPy/pyarrow only do not install it. CPython 3.13+ re-reads lazily,
-and the guard is inactive there.
+core jar on a worker's path that is ~0.25 s per task. Every engine
+kernel goes through ``plans/kernel.py``, which binds module-level
+functions only; they pickle by reference, so a Python worker imports
+the package, and installs the guard, when it unpickles its first
+kernel. CPython 3.13+ re-reads lazily, and the guard is inactive there.
 """
 
 from __future__ import annotations

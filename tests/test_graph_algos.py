@@ -1017,6 +1017,8 @@ def test_failed_relaxation_leaves_no_cached_edges(spark, monkeypatch):
         ("bowtie", lambda m, e: m.bowtie_decomposition(e)),
         ("mis", lambda m, e: m.maximal_independent_set(e)),
         ("centrality", lambda m, e: m.brandes_forward(e, [0])),
+        ("walks", lambda m, e: m.random_walks(e, 3)),
+        ("walks", lambda m, e: m.node2vec_walks(e, 3)),
     ],
 )
 def test_failed_drain_loop_leaves_no_cached_edges(
@@ -1024,7 +1026,8 @@ def test_failed_drain_loop_leaves_no_cached_edges(
 ):
     """A failure inside a drain loop still unpersists the operator's
     edge copies (bow-tie's two orientations, MIS's symmetrized edges,
-    Brandes' multiplicity-collapsed edges)."""
+    Brandes' multiplicity-collapsed edges, the walkers' edge copies and
+    node2vec's undirected pair set)."""
     import importlib
 
     mod = importlib.import_module(f"pagerank_spark.operators.{module}")
@@ -1039,6 +1042,28 @@ def test_failed_drain_loop_leaves_no_cached_edges(
     spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="injected drain failure"):
         call(mod, e)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_failed_anf_round_leaves_no_cached_edges(spark, monkeypatch):
+    """A failure inside HyperANF's round loop (the second sketch merge)
+    still unpersists its distinct edge copy."""
+    from pagerank_spark.operators import anf
+
+    merge = anf._merge_by_id
+    calls = []
+
+    def boom(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected round failure")
+        return merge(*args, **kwargs)
+
+    monkeypatch.setattr(anf, "_merge_by_id", boom)
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="injected round failure"):
+        anf.hyper_anf(e, p=4, max_iter=3)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

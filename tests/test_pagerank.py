@@ -429,29 +429,21 @@ def test_block_call_shape(spark, monkeypatch):
     iteration frame once: at most 7 jobs before the first iteration,
     one job per iteration, an iteration plan without an Exchange, and a
     kernel that refuses to run without its iteration property."""
-    import importlib
-
     from pyspark.sql import functions as F
 
     from pagerank_spark.plans.inspect import plan_has
 
-    pr_mod = importlib.import_module("pagerank_spark.operators.pagerank")
     kernels, frames = [], []
-    build = pr_mod._block_kernel
     frame_cls = type(spark.range(1))  # the session's concrete DataFrame
     map_in_arrow = frame_cls.mapInArrow
-
-    def spy_kernel(*args, **kwargs):
-        kernels.append(build(*args, **kwargs))
-        return kernels[-1]
 
     def spy_map(self, fn, schema, *args, **kwargs):
         out = map_in_arrow(self, fn, schema, *args, **kwargs)
         if schema == "dst long, s double":
+            kernels.append(fn)
             frames.append(out)
         return out
 
-    monkeypatch.setattr(pr_mod, "_block_kernel", spy_kernel)
     monkeypatch.setattr(frame_cls, "mapInArrow", spy_map)
     e = synth_edges(spark, n=300, e=3000, seed=9).localCheckpoint()
     jobs = {
