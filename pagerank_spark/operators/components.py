@@ -87,8 +87,9 @@ def _small_star(e: DataFrame) -> DataFrame:
 LOCAL_CC_MAX_E = 250_000
 
 
-def _cc_local(spark, vertices: DataFrame, e: DataFrame) -> DataFrame:
-    """Driver union-find over the (small) distinct simple edge set.
+def _cc_local(spark, e: DataFrame) -> DataFrame:
+    """Driver union-find over the (small) distinct pair set ``e``, whose
+    self-loops ``(v, v)`` carry the vertices seen only in self-loops.
 
     Union-by-min-root: attaching the larger root under the smaller
     keeps every tree rooted at its component's minimum index, and ids
@@ -100,10 +101,8 @@ def _cc_local(spark, vertices: DataFrame, e: DataFrame) -> DataFrame:
     import pyarrow as pa
 
     epdf = e.toPandas()
-    vs = vertices.toPandas()["id"].to_numpy()
-    uniq = np.unique(
-        np.concatenate([vs, epdf["src"].to_numpy(), epdf["dst"].to_numpy()])
-    )
+    src, dst = epdf["src"].to_numpy(), epdf["dst"].to_numpy()
+    uniq = np.unique(np.concatenate([src, dst]))
     parent = np.arange(len(uniq))
 
     def find(x: int) -> int:
@@ -112,20 +111,13 @@ def _cc_local(spark, vertices: DataFrame, e: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for x, y in zip(
-        np.searchsorted(uniq, epdf["src"].to_numpy()),
-        np.searchsorted(uniq, epdf["dst"].to_numpy()),
-    ):
+    for x, y in zip(np.searchsorted(uniq, src), np.searchsorted(uniq, dst)):
         rx, ry = find(int(x)), find(int(y))
         if rx != ry:
             parent[max(rx, ry)] = min(rx, ry)
     roots = np.array([find(i) for i in range(len(uniq))], dtype=np.int64)
-    vs_sorted = np.sort(vs)
-    vi = np.searchsorted(uniq, vs_sorted)
     return spark.createDataFrame(
-        pa.table(
-            {"id": pa.array(vs_sorted), "component": pa.array(uniq[roots[vi]])}
-        )
+        pa.table({"id": pa.array(uniq), "component": pa.array(uniq[roots])})
     )
 
 
@@ -145,27 +137,33 @@ def connected_components(
     """
     if mode not in ("auto", "local", "stars"):
         raise ValueError("mode must be 'auto', 'local' or 'stars'")
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    loop = F.col("src") == F.col("dst")
     # bit_xor: order-insensitive, no ANSI overflow; every state is a
-    # distinct edge set, so xor-cancellation of duplicates cannot occur
-    probe = Probe(c=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("src", "dst")))
+    # distinct edge set, so xor-cancellation of duplicates cannot occur.
+    # Self-loops count in neither aggregate, so the first state, which
+    # keeps them, has the signature of its loop-free edge set
+    probe = Probe(
+        c=F.count_if(~loop),
+        h=F.bit_xor(F.when(~loop, F.xxhash64("src", "dst"))),
+    )
+    # the one read of the graph: its distinct (greatest, least) pairs,
+    # self-loops kept as (v, v) so that a vertex seen only in self-loops
+    # keeps its row; the star rounds drop them
     e = probe.checkpoint(
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
+        edges.select(
             F.greatest("src", "dst").alias("src"),
             F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
+        ).distinct()
     )
     if mode == "local" or (
         mode == "auto" and probe.of(e)["c"] <= LOCAL_CC_MAX_E
     ):
-        return _cc_local(edges.sparkSession, vertices, e)
+        return _cc_local(edges.sparkSession, e)
+    vertices = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
 
     e, _rounds, _done = iterate(
         e,

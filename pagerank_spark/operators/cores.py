@@ -9,12 +9,13 @@ leaf pages peel away; the dense core survives).
 Peeling is a textbook fixpoint on the ``plans.iterate`` harness: each
 round computes induced degrees (one map-side-combinable aggregate),
 drops vertices below k (two left-semi joins against the surviving
-vertex set), and stops when the edge count is stable — degrees only
-ever decrease, so a stable count IS the fixpoint, observed on the
-harness's per-round checkpoint job (no probe job). Lineage is truncated
-per round by the harness. At 100 TB each round is bounded shuffles
-over a monotonically SHRINKING edge set; rounds-to-fixpoint is small
-in practice (degenerate long-chain peels are bounded by ``max_iter``).
+vertex set), and stops when the edge count is stable or 0 — degrees
+only ever decrease, so a stable count IS the fixpoint, and so is an
+empty edge set; both are observed on the harness's per-round checkpoint
+job (no probe job). Lineage is truncated per round by the harness.
+At 100 TB each round is bounded shuffles over a monotonically SHRINKING
+edge set; rounds-to-fixpoint is small in practice (degenerate
+long-chain peels are bounded by ``max_iter``).
 """
 
 from __future__ import annotations
@@ -23,10 +24,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.triangles import (
+    _neighbours,
     _simple_degrees,
     _simple_undirected,
+    _support,
 )
 from pagerank_spark.plans.iterate import Probe, iterate
+
+
+def _peeled(probe: Probe):
+    """Stop test of a peel: the edge count ``c`` is unchanged, or 0 (an
+    empty edge set is a fixpoint, so a round more would only confirm it)."""
+    drained, unchanged = probe.drained("c"), probe.unchanged()
+    return lambda prev, new, r: drained(prev, new, r) or unchanged(prev, new, r)
 
 
 def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
@@ -57,7 +67,7 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     final, _rounds, done = iterate(
         state,
         _step,
-        probe.unchanged(),
+        _peeled(probe),
         max_iter,
         warn=(
             f"k_core: peeling did not reach a fixpoint within "
@@ -176,106 +186,36 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     (Cohen 2008, "Trusses: cohesive subgraphs for social network
     analysis"). The (k)-truss is a stricter cohesion filter than the
     (k−1)-core it is contained in — the standard community-core miner.
-
-    Peeling fixpoint on the ``plans.iterate`` harness. Triangles are
-    enumerated ONCE, up front, via the degree-ordered orientation join
-    (the engine's triangle kernel — no wedge explosion at hubs): the
-    peel only ever REMOVES edges, so the triangles of any later
-    round's graph are exactly the original triangles whose three
-    member edges all survive. Each round therefore (a) filters the
-    materialized triangle table with three semi-joins against the
-    surviving edge set, (b) recounts per-edge support by exploding
-    the surviving triangles (one scan — a 3-branch union would re-run
-    the filter per edge position), (c) drops edges below support, and
-    stops when the edge count is stable (support only ever decreases
-    as edges leave, so a stable count is the fixpoint — observed on the
-    checkpoint job, the same monotone argument as :func:`k_core`).
     ``k <= 2`` degenerates to the whole simple edge set (every edge
     trivially closes ≥ 0 triangles).
 
-    This trades O(#triangles) materialized skinny rows (6 longs each,
-    spillable localCheckpoint — the same storage class the trussness
-    decomposition's triangle→member-edge table already uses) for
-    removing the two O(E^1.5-ish) wedge self-joins from EVERY round
-    after the first: rounds become bounded semi-joins + one
-    map-side-combinable aggregate over a monotonically shrinking
-    triangle set.
+    Peeling fixpoint on the ``plans.iterate`` harness, with the
+    surviving edge set as the state. Each round recomputes the support
+    of every surviving edge by neighbour-list intersection
+    (``triangles._support``: one groupBy into neighbour arrays, one join,
+    ``array_intersect``) and keeps the edges with ``sup >= k − 2``.
+    Support only decreases as edges leave, so the peel stops when the
+    edge count is unchanged or 0, both observed on the checkpoint job
+    (the same monotone argument as :func:`k_core`). Nothing but the
+    edge set is ever materialized, so peak state is O(E), never
+    O(#triangles).
     """
-    from pagerank_spark.operators.triangles import _orient, _triangles
-
     probe = Probe(c=F.count(F.lit(1)))
     state = probe.checkpoint(_simple_undirected(edges))
     if k <= 2:
         return state
-    o = _orient(state, _simple_degrees(state)).localCheckpoint()
-    # LAZY triangle plan: round 1 streams it straight into the support
-    # aggregate (a graph whose peel converges immediately — common for
-    # dense cores — then never pays the O(#triangles) materialization;
-    # measured 9.2 s of pure checkpoint write at sf0.1's 20.2M
-    # triangles). The first round that actually filters (round 2)
-    # re-runs the enumeration once and checkpoints the SURVIVING set;
-    # later rounds filter the shrinking materialized table.
-    tri0 = _triangles(o).select(
-        F.least("x", "y").alias("a1"),
-        F.greatest("x", "y").alias("b1"),
-        F.least("y", "z").alias("a2"),
-        F.greatest("y", "z").alias("b2"),
-        F.least("x", "z").alias("a3"),
-        F.greatest("x", "z").alias("b3"),
-    )
-    tri_ctx = {"tri": tri0}
 
     def _step(e: DataFrame, _round: int) -> DataFrame:
-        tri = tri_ctx["tri"]
-        if _round > 1:
-            # surviving triangles = rows whose three edges all survive
-            tri = (
-                tri.join(
-                    e.select(F.col("a").alias("a1"), F.col("b").alias("b1")),
-                    ["a1", "b1"],
-                    "left_semi",
-                )
-                .join(
-                    e.select(F.col("a").alias("a2"), F.col("b").alias("b2")),
-                    ["a2", "b2"],
-                    "left_semi",
-                )
-                .join(
-                    e.select(F.col("a").alias("a3"), F.col("b").alias("b3")),
-                    ["a3", "b3"],
-                    "left_semi",
-                )
-                .localCheckpoint()
-            )
-            tri_ctx["tri"] = tri
-        support = (
-            tri.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a1").alias("a"), F.col("b1").alias("b")
-                        ),
-                        F.struct(
-                            F.col("a2").alias("a"), F.col("b2").alias("b")
-                        ),
-                        F.struct(
-                            F.col("a3").alias("a"), F.col("b3").alias("b")
-                        ),
-                    )
-                ).alias("_e")
-            )
-            .select("_e.a", "_e.b")
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("_sup"))
-            .where(F.col("_sup") >= k - 2)
+        return (
+            _support(_neighbours(e, "a", "b"))
+            .where(F.col("sup") >= k - 2)
             .select("a", "b")
         )
-        return e.join(support, ["a", "b"], "left_semi")
 
     final, _rounds, _done = iterate(
         state,
         _step,
-        probe.unchanged(),
+        _peeled(probe),
         max_iter,
         warn=(
             f"k_truss: peeling did not reach a fixpoint within "
@@ -284,7 +224,7 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
         ),
         probe=probe,
     )
-    return final.select("a", "b")
+    return final
 
 
 def densest_subgraph(

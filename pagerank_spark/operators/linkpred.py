@@ -170,7 +170,7 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     Unlike :func:`link_prediction` (which scores NON-adjacent pairs
     via the full wedge join), support for existing edges uses the
     degree-ORIENTED triangle kernel — Σ min(deg) join rows instead of
-    Σ deg², the hub-safe plan shared with `triangle_count`/`k_truss` —
+    Σ deg², the hub-safe plan shared with `trussness` —
     plus two O(V) degree joins. Zero-support edges keep their row via
     the left join.
     """

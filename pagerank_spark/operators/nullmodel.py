@@ -104,9 +104,9 @@ def triangle_null_samples(
     (sample std, ddof=1; z = NULL when std = 0).
 
     Scale shape: n_samples × (one rewire = two skinny sorts + a rank
-    join, one triangle count = the oriented wedge join) — independent
-    bounded jobs; nothing beyond the scalar counts ever reaches the
-    driver.
+    join, one triangle count = one neighbour-list intersection join) —
+    independent bounded jobs; nothing beyond the scalar counts ever
+    reaches the driver.
     """
     import math as _math
 

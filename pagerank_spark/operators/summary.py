@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 from pagerank_spark.operators.components import connected_components
 from pagerank_spark.operators.degrees import reciprocity
 from pagerank_spark.operators.triangles import (
-    _orient,
-    _simple_degrees,
-    _simple_undirected,
-    _triangles,
+    _degrees,
+    _neighbours,
+    _support,
+    _total,
 )
 
 
@@ -35,14 +35,12 @@ def graph_summary(edges: DataFrame) -> DataFrame:
     counts raw rows (duplicate-edge multiplicity preserved), and
     ``density = 2·e_s / (n·(n−1))``, ``avg_degree = 2·e_s / n``.
     """
-    # ONE materialized pass over the source, then the simple projection
-    # and degree table are shared by every downstream figure — the
-    # degree-oriented triangle join (the costly constituent) runs once
-    # and transitivity reuses its count plus the degree aggregate.
+    # ONE materialized pass over the source, then the neighbour arrays
+    # are shared by every simple-graph figure: the edge count and the
+    # degree figures are sums of their sizes, and the triangle count (the
+    # costly constituent) is the support sum over them.
     edges = edges.select("src", "dst").localCheckpoint()
-    simple = _simple_undirected(edges).localCheckpoint()
-    deg = _simple_degrees(simple).localCheckpoint()
-    o = _orient(simple, deg).localCheckpoint()
+    nbrs = _neighbours(edges).localCheckpoint()
     # The scalar figures are INDEPENDENT actions over shared
     # checkpointed frames — submit them from a small thread pool so
     # the cheap counts back-fill executors freed by the triangle
@@ -52,9 +50,9 @@ def graph_summary(edges: DataFrame) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_ne = pool.submit(edges.count)
-        f_es = pool.submit(simple.count)
         f_deg = pool.submit(
-            deg.agg(
+            _degrees(nbrs).agg(
+                F.sum("deg").alias("sumd"),
                 F.max("deg").alias("maxd"),
                 F.sum(F.col("deg") * (F.col("deg") - 1)).alias("w2"),
             ).collect
@@ -65,9 +63,7 @@ def graph_summary(edges: DataFrame) -> DataFrame:
             .distinct()
             .count
         )
-        f_tri = pool.submit(
-            _triangles(o).agg(F.count(F.lit(1)).alias("t")).collect
-        )
+        f_tri = pool.submit(_total(_support(nbrs)).collect)
         f_rec = pool.submit(reciprocity(edges).collect)
         f_ncomp = pool.submit(
             lambda: connected_components(edges)
@@ -76,10 +72,10 @@ def graph_summary(edges: DataFrame) -> DataFrame:
             .count()
         )
         n_edges = f_ne.result()
-        e_s = f_es.result()
         deg_row = f_deg.result()[0]
+        e_s = (deg_row["sumd"] or 0) // 2
         n = int(f_n.result())
-        tri = int(f_tri.result()[0]["t"])
+        tri = int(f_tri.result()[0]["triangles"])
         rec = float(f_rec.result()[0]["reciprocity"])
         ncomp = int(f_ncomp.result())
     # same operand order as the clustering_global oracle: 3.0*t / (W/2)

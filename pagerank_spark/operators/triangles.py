@@ -1,17 +1,20 @@
-"""Triangle counting via degree-ordered edge iteration.
+"""Triangle counts by neighbour-list intersection.
 
 Extension mandated by BASELINE.json.north_star (SURVEY.md §2.3).
 Counts triangles of the UNDIRECTED SIMPLE projection (self-loops
 dropped, duplicates and direction collapsed) — the oracle is
 trace(A³)/6 on that projection (FIXTURES.md F1: DEMO → 4).
 
-Degree ordering is the classic shuffle-volume bound: orient every
-edge from its lower-(degree, id) endpoint to the higher one, so each
-wedge is generated exactly once at its lowest-degree corner — the
-heavy-hitter vertex never fans out its full neighborhood. Triangles
-are then two self-joins of the oriented edge table (wedge build +
-closing-edge semi-join), all JVM-side, whole-stage-codegen'd, with AQE
-free to pick broadcast sides.
+Every count is a sum of per-edge supports sup(a, b) = |N(a) ∩ N(b)|
+(triangle counting as set intersection, HERO, SIGMOD 2024): one groupBy
+into neighbour arrays, one join, ``array_intersect``. No wedge and no
+triangle is ever a row. The total is Σsup/3, the corner count is
+T(v) = Σ_b sup(v, b)/2, the degree is ``size(nbrs)``, and
+``cores.k_truss`` peels on the same support.
+
+Out of scope: ``trussness``, ``edge_embeddedness``, ``edge_dispersion``,
+``burt_constraint`` and ``four_profile`` need triangle identities and
+keep ``_triangles``, the degree-oriented wedge join.
 """
 
 from __future__ import annotations
@@ -60,11 +63,6 @@ def _orient(simple: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-def _oriented_simple(edges: DataFrame) -> DataFrame:
-    simple = _simple_undirected(edges)
-    return _orient(simple, _simple_degrees(simple))
-
-
 def _triangles(o: DataFrame) -> DataFrame:
     """``(x, y, z)`` triangle corner triples from a (checkpointed)
     degree-oriented edge table: wedge self-join + closing-edge join."""
@@ -89,14 +87,72 @@ def _corner_counts(tris: DataFrame) -> DataFrame:
     return corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
 
 
+def _neighbours(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """``(id, nbrs)`` — the neighbour set of every non-isolated vertex of
+    the simple undirected graph on columns ``a``/``b`` of ``edges``: one
+    groupBy, whose set aggregate also collapses duplicates and direction."""
+    pairs = edges.where(F.col(a) != F.col(b)).select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias("id"), F.col(b).alias("nb")),
+                F.struct(F.col(b).alias("id"), F.col(a).alias("nb")),
+            )
+        ).alias("_p")
+    )
+    return pairs.groupBy("_p.id").agg(F.collect_set("_p.nb").alias("nbrs"))
+
+
+def _support(nbrs: DataFrame) -> DataFrame:
+    """``(a, b, sup)`` (a < b) — every simple edge and the number of
+    triangles closing on it, ``|N(a) ∩ N(b)|``. The edges are exploded out
+    of the lower endpoint's array, which they carry to one join with the
+    upper endpoint's: that shuffle moves Σ_{a<b} |N(a)| ids, O(Σ deg²) at
+    worst. ``array_intersect`` hashes one array and probes the other, so
+    arrays need no order."""
+    # the planner sizes an array as one element, so it would broadcast the
+    # carrying side (out of driver memory on a 500k-edge R-MAT); the hint
+    # makes the neighbour table the hashed side
+    upper = nbrs.select(F.col("id").alias("b"), F.col("nbrs").alias("nb"))
+    return (
+        nbrs.select(
+            F.col("id").alias("a"),
+            F.explode("nbrs").alias("b"),
+            F.col("nbrs").alias("na"),
+        )
+        .where(F.col("a") < F.col("b"))
+        .join(upper.hint("shuffle_hash"), "b")
+        .select("a", "b", F.size(F.array_intersect("na", "nb")).alias("sup"))
+    )
+
+
+def _total(sup: DataFrame) -> DataFrame:
+    """One row ``triangles``: Σsup/3, 0 on a graph without edges."""
+    return sup.agg(
+        F.coalesce((F.sum("sup") / 3).cast("long"), F.lit(0)).alias("triangles")
+    )
+
+
+def _vertex_triangles(sup: DataFrame) -> DataFrame:
+    """``(id, triangles)`` for every corner of a triangle: T(v) =
+    Σ_b sup(v, b)/2."""
+    return (
+        sup.where(F.col("sup") > 0)
+        .select(F.explode(F.array("a", "b")).alias("id"), "sup")
+        .groupBy("id")
+        .agg((F.sum("sup") / 2).cast("long").alias("triangles"))
+    )
+
+
+def _degrees(nbrs: DataFrame) -> DataFrame:
+    return nbrs.select("id", F.size("nbrs").cast("long").alias("deg"))
+
+
 def triangle_count(edges: DataFrame, per_vertex: bool = False) -> DataFrame:
     """Total triangle count (``DataFrame[triangles: long]``, one row),
-    or per-vertex corner counts (``DataFrame[id, triangles]``)."""
-    o = _oriented_simple(edges).localCheckpoint()
-    tris = _triangles(o)
-    if not per_vertex:
-        return tris.agg(F.count(F.lit(1)).alias("triangles"))
-    return _corner_counts(tris)
+    or per-vertex corner counts (``DataFrame[id, triangles]``, the
+    vertices with at least one triangle)."""
+    sup = _support(_neighbours(edges))
+    return _vertex_triangles(sup) if per_vertex else _total(sup)
 
 
 def clustering_coefficient(
@@ -111,17 +167,16 @@ def clustering_coefficient(
     ``W = Σ deg·(deg−1)/2`` open+closed wedges (0.0 on a wedgeless
     graph).
 
-    Shares the degree-oriented triangle join with ``triangle_count``;
-    the degree table is reused for the denominator, so the only extra
-    work over a triangle count is one broadcast-size join.
+    The triangle counts and the degrees come from the same neighbour
+    arrays, so the only work over a triangle count is one O(V) join
+    (per vertex) or one O(V) aggregate (global).
     """
-    simple = _simple_undirected(edges)
-    deg = _simple_degrees(simple).localCheckpoint()
-    o = _orient(simple, deg).localCheckpoint()
-    tris = _triangles(o)
+    nbrs = _neighbours(edges)
+    sup = _support(nbrs)
+    deg = _degrees(nbrs)
     if per_vertex:
         return (
-            deg.join(_corner_counts(tris), "id", "left")
+            deg.join(_vertex_triangles(sup), "id", "left")
             .select(
                 "id",
                 F.when(
@@ -134,12 +189,11 @@ def clustering_coefficient(
                 .alias("coeff"),
             )
         )
-    total = tris.agg(F.count(F.lit(1)).alias("t"))
     wedges = deg.agg(
         (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2).alias("w")
     )
-    return total.crossJoin(wedges).select(
-        F.when(F.col("w") > 0, 3.0 * F.col("t") / F.col("w"))
+    return _total(sup).crossJoin(wedges).select(
+        F.when(F.col("w") > 0, 3.0 * F.col("triangles") / F.col("w"))
         .otherwise(F.lit(0.0))
         .alias("coeff")
     )
@@ -159,16 +213,13 @@ def effective_size(edges: DataFrame) -> DataFrame:
     broker position). The standard ego-level complement of the
     edge-level Backstrom-Kleinberg dispersion already in the engine.
 
-    Cost: exactly the per-vertex triangle kernel (Σ min-deg oriented
-    join — hub-safe) plus the O(V) degree join
-    :func:`clustering_coefficient` already pays; no new shuffle shape.
+    Cost: exactly the per-vertex triangle count plus the O(V) degree
+    join :func:`clustering_coefficient` already pays.
     """
-    simple = _simple_undirected(edges)
-    deg = _simple_degrees(simple).localCheckpoint()
-    o = _orient(simple, deg).localCheckpoint()
-    tri = _corner_counts(_triangles(o))
+    nbrs = _neighbours(edges)
+    tri = _vertex_triangles(_support(nbrs))
     es = F.col("deg") - 2.0 * F.coalesce("triangles", F.lit(0)) / F.col("deg")
-    return deg.join(tri, "id", "left").select(
+    return _degrees(nbrs).join(tri, "id", "left").select(
         "id",
         "deg",
         es.alias("effective_size"),

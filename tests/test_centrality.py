@@ -503,6 +503,17 @@ def _truss_oracle(pairs, k):
         edges = nxt
 
 
+def _clique_with_star():
+    """K30 plus 200 pendant vertices on clique vertex 0 (635 simple
+    edges, 4,060 triangles): a hub whose neighbour list is mostly edges
+    without triangles."""
+    import itertools
+
+    return list(itertools.combinations(range(30), 2)) + [
+        (0, 1000 + i) for i in range(200)
+    ]
+
+
 def test_k_truss_vs_peeling_oracle(spark):
     from pagerank_spark.operators.cores import k_truss
 
@@ -514,6 +525,11 @@ def test_k_truss_vs_peeling_oracle(spark):
     # k<=2: the whole simple edge set
     simple = {(min(s, d), max(s, d)) for s, d in pairs if s != d}
     assert {(r["a"], r["b"]) for r in k_truss(e, 2).collect()} == simple
+    hub = _clique_with_star()
+    e = spark.createDataFrame(hub, "src long, dst long")
+    for k in (3, 5, 30, 31):
+        got = {(r["a"], r["b"]) for r in k_truss(e, k).collect()}
+        assert got == _truss_oracle(hub, k), k
 
 
 def test_k_truss_clique_and_empty(spark):
@@ -529,6 +545,49 @@ def test_k_truss_clique_and_empty(spark):
     assert k_truss(e, 6).count() == 0
     got3 = {(r["a"], r["b"]) for r in k_truss(e, 3).collect()}
     assert (4, 9) not in got3
+
+
+def test_k_truss_checkpoints_no_triangle_table(spark, monkeypatch):
+    """The peel materializes only edge sets: on the clique-and-star graph
+    (two rounds at k=3) no frame k_truss checkpoints has more rows than
+    the simple edge set. The triangle table made one of 4,060 rows."""
+    from pagerank_spark.operators.cores import k_truss
+
+    frame_cls = type(spark.range(1))
+    local_checkpoint = frame_cls.localCheckpoint
+    saved = []
+
+    def spy(self, *args, **kwargs):
+        out = local_checkpoint(self, *args, **kwargs)
+        saved.append(out)
+        return out
+
+    e = spark.createDataFrame(_clique_with_star(), "src long, dst long")
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    assert k_truss(e, 3).count() == 435
+    monkeypatch.undo()
+    rows = [df.count() for df in saved]
+    assert rows and max(rows) <= 635, rows
+
+
+def test_peels_stop_when_empty(spark):
+    """An empty edge set is a peel's fixpoint: a peel that empties in
+    its second round stops there, within max_iter=2, without the
+    not-converged warning."""
+    import warnings
+
+    from pagerank_spark.operators.cores import k_core, k_truss
+
+    # a diamond: k=4 keeps only the shared edge, which then has no support
+    diamond = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3)], "src long, dst long"
+    )
+    # a 4-path: the 2-core peel keeps (1, 2), then drops it
+    path = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert k_truss(diamond, 4, max_iter=2).count() == 0
+        assert k_core(path, 2, max_iter=2).count() == 0
 
 
 def test_new_single_pass_ops_no_cartesian(spark):

@@ -239,6 +239,32 @@ def test_jobs_per_round_cc_stars_and_lpa(spark):
     assert 0 < per_round["brandes"] <= 5, per_round
 
 
+def test_triangle_call_shape(spark):
+    """Jobs per triangle_count call and per k_truss round: one groupBy
+    into neighbour arrays and one intersection join. The wedge join made
+    triangle_count 11 jobs here; the triangle table's semi-joins and
+    checkpoint made a k_truss round 10. The k_truss graph (k=5) peels for
+    22 rounds, so rounds 2 and 3 both remove edges."""
+    import warnings
+
+    from pagerank_spark.operators.cores import k_truss
+
+    small = synth_edges(spark, n=60, e=500, seed=5).localCheckpoint()
+    assert _jobs(spark, "triangles", lambda: triangle_count(small)) <= 9
+    rng = np.random.RandomState(124)
+    peel = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in rng.randint(0, 30, size=(200, 2))],
+        "src long, dst long",
+    ).localCheckpoint()
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        k_truss(peel, 5, max_iter=3).count()
+    assert any("did not reach a fixpoint" in str(x.message) for x in w)
+    one = _jobs(spark, "truss-1", lambda: k_truss(peel, 5, max_iter=1))
+    three = _jobs(spark, "truss-3", lambda: k_truss(peel, 5, max_iter=3))
+    assert 0 < (three - one) / 2 <= 5, (one, three)
+
+
 def test_cc_count_first_detection_same_labels(spark):
     """The cheaper convergence detection must not change labels."""
     e = synth_edges(spark, 200, 600, seed=7)
