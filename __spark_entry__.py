@@ -339,7 +339,7 @@ def q_hits_weighted(spark, sf_dir):
 
 def q_clustering_coeff(spark, sf_dir):
     """Per-vertex clustering coefficient (closed-wedge fraction) —
-    reuses the degree-oriented triangle join plus the degree table."""
+    reuses the neighbour-list triangle support plus the degree table."""
     from pagerank_spark.operators.triangles import clustering_coefficient
 
     return (

@@ -201,7 +201,7 @@ class LinkGraph:
         return coreness(self.edges, max_iter=max_iter)
 
     def link_prediction(
-        self, min_common: int = 1, max_degree: int | None = None
+        self, min_common: int = 1, max_degree: int | None = 10_000
     ) -> DataFrame:
         from pagerank_spark.operators.linkpred import link_prediction
 
@@ -425,12 +425,12 @@ class LinkGraph:
 
         return edge_embeddedness(self.edges)
 
-    def edge_dispersion(self, max_common: int | None = None) -> DataFrame:
+    def edge_dispersion(self, max_common: int | None = 10_000) -> DataFrame:
         from pagerank_spark.operators.linkpred import edge_dispersion
 
         return edge_dispersion(self.edges, max_common=max_common)
 
-    def four_cycles(self, max_degree: int | None = None) -> DataFrame:
+    def four_cycles(self, max_degree: int | None = 10_000) -> DataFrame:
         from pagerank_spark.operators.linkpred import four_cycles
 
         return four_cycles(self.edges, max_degree=max_degree)

@@ -20,10 +20,11 @@ long-chain peels are bounded by ``max_iter``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.triangles import (
+    _common,
     _neighbours,
     _simple_degrees,
     _simple_undirected,
@@ -83,6 +84,37 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     )
 
 
+def _h_index(msgs: DataFrame) -> DataFrame:
+    """One H-index round of :func:`coreness` and :func:`trussness`:
+    ``msgs`` holds ``(key, h, t)`` rows, each a neighbour's value ``t``
+    already capped at the receiver's current ``h``; returns ``(key, h,
+    changed)``, the largest h' such that at least h' values are ≥ h',
+    and whether it differs from the current h. The stop test counts
+    ``changed`` on the checkpoint job, so no round compares two states.
+
+    The values are histogrammed by ``groupBy(key, h, t)`` first, so the
+    descending cumulative-sum window sees ≤ h+1 distinct values per key,
+    never a hub's raw neighbour count.
+    """
+    key = msgs.columns[0]
+    hist = msgs.groupBy(key, "h", "t").agg(F.count(F.lit(1)).alias("c"))
+    w = (
+        Window.partitionBy(key)
+        .orderBy(F.desc("t"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        hist.select(key, "h", F.least("t", F.sum("c").over(w)).alias("m"))
+        .groupBy(key, "h")
+        .agg(F.max("m").alias("m"))
+        .select(
+            key,
+            F.col("m").alias("h"),
+            (F.col("m") != F.col("h")).alias("changed"),
+        )
+    )
+
+
 def coreness(
     edges: DataFrame,
     max_iter: int = 200,
@@ -114,16 +146,16 @@ def coreness(
     of that compressed histogram. Per round: one O(E) message join
     keyed by vertex + two map-side-combinable aggregations; rounds to
     fixpoint are small on real graphs (≤ ~O(diameter)-ish in
-    practice), bounded by ``max_iter``. Convergence is one O(V)
-    changed-count action per round. Every per-round quantity is
-    integer arithmetic on deterministic inputs — the driver gate's
-    DuckDB oracle replays each round in ANSI SQL bit-for-bit.
+    practice), bounded by ``max_iter``. The step flags each changed
+    value and the stop test counts the flags on the round's checkpoint
+    job (``Probe.drained``), so convergence costs no job. Every
+    per-round quantity is integer arithmetic on deterministic inputs —
+    the driver gate's DuckDB oracle replays each round in ANSI SQL
+    bit-for-bit.
 
     Cross-operator invariant (machine-checked in tests):
     ``k_core(edges, k)`` equals ``coreness(edges) ≥ k`` for every k.
     """
-    from pyspark.sql import Window
-
     simple = _simple_undirected(edges).localCheckpoint()
     nbr = (
         simple.select(F.col("a").alias("id"), F.col("b").alias("nb"))
@@ -136,37 +168,13 @@ def coreness(
         msgs = nbr.join(
             h.select(F.col("id").alias("nb"), F.col("h").alias("nh")), "nb"
         ).join(h, "id")
-        hist = (
-            msgs.select("id", F.least("nh", "h").alias("t"))
-            .groupBy("id", "t")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = (
-            Window.partitionBy("id")
-            .orderBy(F.desc("t"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            hist.select("id", "t", F.sum("c").over(w).alias("ge"))
-            .select("id", F.least("t", "ge").alias("m"))
-            .groupBy("id")
-            .agg(F.max("m").alias("h"))
-        )
+        return _h_index(msgs.select("id", "h", F.least("nh", "h").alias("t")))
 
-    def _converged(prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        return (
-            new.join(
-                prev.select("id", F.col("h").alias("_ph")), "id"
-            )
-            .where(F.col("h") != F.col("_ph"))
-            .count()
-            == 0
-        )
-
+    probe = Probe(changed=F.count_if("changed"))
     final, _rounds, _done = iterate(
         state,
         _step,
-        _converged,
+        probe.drained("changed"),
         max_iter,
         warn=(
             f"coreness: H-index fixpoint did not converge within "
@@ -175,6 +183,7 @@ def coreness(
         ),
         checkpoint_dir=checkpoint_dir,
         resume=resume,
+        probe=probe,
     )
     return final.select("id", F.col("h").alias("coreness"))
 
@@ -322,25 +331,28 @@ def trussness(
     :func:`coreness`, this turns the sequential min-support peel into
     a Pregel-style fixpoint — no global priority queue.
 
-    Shape: the triangle→member-edge table (3·#triangles rows, built
-    ONCE from the degree-oriented kernel and checkpointed) is the
-    per-round message source; values are capped at the receiver's
-    current h before the histogram fold, so the per-edge window input
-    is ≤ h(e)+1 distinct values, never the raw triangle count of a hot
-    edge. Per round: two skinny hash joins against the O(E) state +
-    two map-side-combinable aggregations. Every quantity is integer
-    arithmetic on deterministic inputs — the gate's DuckDB oracle
-    replays each round bit-for-bit.
+    Shape: every edge's common neighbours (``triangles._common``, the
+    neighbour-list intersection: Σ_{a<b} |N(a)| ids shuffled once) are
+    checkpointed ONCE; exploding them gives the triangle→member-edge
+    messages (edge (a, b) with third corner w hears from (a, w) and
+    (b, w): 3·#triangles rows) and their sizes give h₀. Values are
+    capped at the receiver's current h before the histogram fold
+    (``_h_index``), so the per-edge window input is ≤ h(e)+1 distinct
+    values, never the raw triangle count of a hot edge. Per round:
+    three skinny hash joins against the O(E) state + two
+    map-side-combinable aggregations; the stop test counts changed
+    values on the checkpoint job. Every quantity is integer arithmetic
+    on deterministic inputs — the gate's DuckDB oracle replays each
+    round bit-for-bit.
 
     Cross-operator invariant (machine-checked in tests):
     ``k_truss(edges, k)`` equals ``trussness(edges) >= k`` per edge.
     """
-    from pyspark.sql import Window
-
-    from pagerank_spark.operators.triangles import _orient, _triangles
-
-    simple = _simple_undirected(edges).localCheckpoint()
-    o = _orient(simple, _simple_degrees(simple)).localCheckpoint()
+    # one checkpoint of every edge's common neighbours: the state and the
+    # per-round messages are narrow reads of it
+    common = (
+        _common(_neighbours(edges)).select("a", "b", "cn").localCheckpoint()
+    )
 
     def _ek(u, v):
         return F.struct(
@@ -348,33 +360,14 @@ def trussness(
         )
 
     # one row per (triangle, member edge), carrying the other two edges
-    tri_edges = (
-        _triangles(o)
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        _ek(F.col("x"), F.col("y")).alias("e"),
-                        _ek(F.col("y"), F.col("z")).alias("o1"),
-                        _ek(F.col("x"), F.col("z")).alias("o2"),
-                    ),
-                    F.struct(
-                        _ek(F.col("y"), F.col("z")).alias("e"),
-                        _ek(F.col("x"), F.col("y")).alias("o1"),
-                        _ek(F.col("x"), F.col("z")).alias("o2"),
-                    ),
-                    F.struct(
-                        _ek(F.col("x"), F.col("z")).alias("e"),
-                        _ek(F.col("x"), F.col("y")).alias("o1"),
-                        _ek(F.col("y"), F.col("z")).alias("o2"),
-                    ),
-                )
-            ).alias("_t")
-        )
-        .select("_t.e", "_t.o1", "_t.o2")
-        .localCheckpoint()
+    tri_edges = common.select("a", "b", F.explode("cn").alias("w")).select(
+        F.struct("a", "b").alias("e"),
+        _ek(F.col("a"), F.col("w")).alias("o1"),
+        _ek(F.col("b"), F.col("w")).alias("o2"),
     )
-    state = tri_edges.groupBy("e").agg(F.count(F.lit(1)).alias("h"))
+    state = common.where(F.size("cn") > 0).select(
+        F.struct("a", "b").alias("e"), F.size("cn").cast("long").alias("h")
+    )
 
     def _step(h: DataFrame, _round: int) -> DataFrame:
         msgs = (
@@ -387,33 +380,16 @@ def trussness(
                 "o2",
             )
             .join(h, "e")
-            .select("e", F.least("h1", "h2", "h").alias("t"))
         )
-        hist = msgs.groupBy("e", "t").agg(F.count(F.lit(1)).alias("c"))
-        w = (
-            Window.partitionBy("e")
-            .orderBy(F.desc("t"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            hist.select("e", "t", F.sum("c").over(w).alias("ge"))
-            .select("e", F.least("t", "ge").alias("m"))
-            .groupBy("e")
-            .agg(F.max("m").alias("h"))
+        return _h_index(
+            msgs.select("e", "h", F.least("h1", "h2", "h").alias("t"))
         )
 
-    def _converged(prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        return (
-            new.join(prev.select("e", F.col("h").alias("_ph")), "e")
-            .where(F.col("h") != F.col("_ph"))
-            .count()
-            == 0
-        )
-
+    probe = Probe(changed=F.count_if("changed"))
     final, _rounds, _done = iterate(
         state,
         _step,
-        _converged,
+        probe.drained("changed"),
         max_iter,
         warn=(
             f"trussness: H-index fixpoint did not converge within "
@@ -422,9 +398,10 @@ def trussness(
         ),
         checkpoint_dir=checkpoint_dir,
         resume=resume,
+        probe=probe,
     )
     return (
-        simple.join(
+        common.select("a", "b").join(
             final.select(F.col("e.a").alias("a"), F.col("e.b").alias("b"), "h"),
             ["a", "b"],
             "left",

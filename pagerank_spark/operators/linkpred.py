@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.triangles import (
+    _common,
+    _corner_pairs,
+    _neighbours,
     _simple_degrees,
     _simple_undirected,
 )
@@ -168,59 +171,21 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     ``common == 0``). 0.0 when both endpoints have no other neighbors.
 
     Unlike :func:`link_prediction` (which scores NON-adjacent pairs
-    via the full wedge join), support for existing edges uses the
-    degree-ORIENTED triangle kernel — Σ min(deg) join rows instead of
-    Σ deg², the hub-safe plan shared with `trussness` —
-    plus two O(V) degree joins. Zero-support edges keep their row via
-    the left join.
+    via the full wedge join), every term is read off the triangle
+    kernel's intersection row of the edge (``triangles._common``):
+    ``common`` is the size of the intersection and the degrees are the
+    sizes of the two neighbour arrays. The kernel's shuffle carries
+    Σ_{a<b} |N(a)| ids; nothing is joined past it.
     """
-    from pagerank_spark.operators.triangles import (
-        _orient,
-        _simple_degrees,
-        _simple_undirected,
-        _triangles,
-    )
-
-    simple = _simple_undirected(edges).localCheckpoint()
-    deg = _simple_degrees(simple).localCheckpoint()
-    o = _orient(simple, deg).localCheckpoint()
-    support = (
-        _triangles(o)
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("x", "y").alias("a"),
-                        F.greatest("x", "y").alias("b"),
-                    ),
-                    F.struct(
-                        F.least("y", "z").alias("a"),
-                        F.greatest("y", "z").alias("b"),
-                    ),
-                    F.struct(
-                        F.least("x", "z").alias("a"),
-                        F.greatest("x", "z").alias("b"),
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    denom = F.col("_da") + F.col("_db") - F.lit(2) - F.col("common")
-    return (
-        simple.join(support, ["a", "b"], "left")
-        .join(deg.select(F.col("id").alias("a"), F.col("deg").alias("_da")), "a")
-        .join(deg.select(F.col("id").alias("b"), F.col("deg").alias("_db")), "b")
-        .select(
-            "a",
-            "b",
-            F.coalesce("common", F.lit(0)).alias("common"),
-            F.when(denom > 0, F.coalesce("common", F.lit(0)) / denom)
-            .otherwise(F.lit(0.0))
-            .alias("embeddedness"),
-        )
+    common = F.size("cn").cast("long")
+    denom = F.size("na") + F.size("nb") - F.lit(2) - common
+    return _common(_neighbours(edges)).select(
+        "a",
+        "b",
+        common.alias("common"),
+        F.when(denom > 0, common / denom)
+        .otherwise(F.lit(0.0))
+        .alias("embeddedness"),
     )
 
 
@@ -235,91 +200,34 @@ def edge_dispersion(
     unconnected contexts — their best single predictor of the partner
     relationship, where embeddedness fails.
 
-    Shape: the per-edge common-neighbor table (the same oriented
-    triangle kernel as :func:`edge_embeddedness` — each triangle
-    (x, y, z) contributes its third corner to each of its three edges)
-    self-joined per edge into C(common, 2) candidate pairs, then one
-    anti-join against the edge set removes adjacent pairs. The
-    self-join is Σ_edges common² rows — ``max_common`` caps it (edges
-    above the cap get ``dispersion = NULL`` instead of a quadratic
-    blow-up; their common count still reports). Defaults to 10_000 so
-    the uncapped quadratic needs an explicit ``max_common=None``
-    opt-out; exact either way while no edge exceeds the cap.
+    Shape: the common neighbours of every edge come from the triangle
+    kernel's intersection (``triangles._common``, as in
+    :func:`edge_embeddedness`); each edge's pairs of them are exploded
+    from its own array into C(common, 2) candidate rows, then one
+    anti-join against the edge set removes adjacent pairs. The pairs
+    are Σ_edges common² rows — ``max_common`` caps them (edges above
+    the cap get ``dispersion = NULL`` instead of a quadratic blow-up;
+    their common count still reports). Defaults to 10_000 so the
+    uncapped quadratic needs an explicit ``max_common=None`` opt-out;
+    exact either way while no edge exceeds the cap.
     """
-    from pagerank_spark.operators.triangles import (
-        _orient,
-        _simple_degrees,
-        _simple_undirected,
-        _triangles,
-    )
-
-    simple = _simple_undirected(edges).localCheckpoint()
-    o = _orient(simple, _simple_degrees(simple)).localCheckpoint()
-    # (a, b, w): w is a common neighbor of existing edge (a, b) — the
-    # triangle's third corner, once per (edge, corner)
-    cn = (
-        _triangles(o)
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("x", "y").alias("a"),
-                        F.greatest("x", "y").alias("b"),
-                        F.col("z").alias("w"),
-                    ),
-                    F.struct(
-                        F.least("y", "z").alias("a"),
-                        F.greatest("y", "z").alias("b"),
-                        F.col("x").alias("w"),
-                    ),
-                    F.struct(
-                        F.least("x", "z").alias("a"),
-                        F.greatest("x", "z").alias("b"),
-                        F.col("y").alias("w"),
-                    ),
-                )
-            ).alias("_t")
-        )
-        .select("_t.a", "_t.b", "_t.w")
-        .localCheckpoint()
-    )
-    counts = cn.groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
-    eligible = counts
+    nbrs = _neighbours(edges)
+    common = _common(nbrs).withColumn("common", F.size("cn").cast("long"))
+    capped = common
     if max_common is not None:
-        eligible = counts.where(F.col("common") <= max_common)
-    pairs = (
-        cn.join(eligible.select("a", "b"), ["a", "b"], "left_semi")
-        .alias("l")
-        .join(
-            cn.select(
-                F.col("a"), F.col("b"), F.col("w").alias("w2")
-            ).alias("r"),
-            ["a", "b"],
-        )
-        .where(F.col("w") < F.col("w2"))
+        capped = common.where(F.col("common") <= max_common)
+    disp = (
+        _corner_pairs(capped, nbrs, adjacent=False)
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("dispersion"))
     )
-    open_pairs = pairs.join(
-        simple.select(
-            F.col("a").alias("w"), F.col("b").alias("w2")
-        ),
-        ["w", "w2"],
-        "left_anti",
-    )
-    disp = open_pairs.groupBy("a", "b").agg(
-        F.count(F.lit(1)).alias("dispersion")
-    )
-    out = simple.join(counts, ["a", "b"], "left").join(disp, ["a", "b"], "left")
-    zero = F.lit(0).cast("long")
-    dispersion = F.coalesce("dispersion", zero)
+    dispersion = F.coalesce("dispersion", F.lit(0).cast("long"))
     if max_common is not None:
         dispersion = F.when(
             F.col("common") > max_common, F.lit(None).cast("long")
         ).otherwise(dispersion)
-    return out.select(
-        "a",
-        "b",
-        F.coalesce("common", zero).alias("common"),
-        dispersion.alias("dispersion"),
+    return common.join(disp, ["a", "b"], "left").select(
+        "a", "b", "common", dispersion.alias("dispersion")
     )
 
 
@@ -339,15 +247,18 @@ def four_profile(
     are tailed-triangle-heavy.
 
     Combinatorial decomposition, NOT subgraph enumeration: every term
-    reduces to the engine's existing degree / per-vertex-triangle /
-    per-edge-support kernels plus two capped quadratic joins —
+    but the 4-cycles is a sum over the triangle kernel's intersection
+    rows (``triangles._common``: per edge, its endpoints' degrees
+    ``d_a``/``d_b`` and common neighbours, ``sup`` of them) —
 
-    - NON-induced counts first: 3-stars ``Σ C(d,3)``; tailed
-      triangles ``Σ_v t_v·(d_v−2)``; paths ``Σ_e (d_a−1)(d_b−1)−3T``;
-      4-cycles from the co-degree wedge join (``max_degree`` hub cap,
-      as :func:`four_cycles`); diamonds ``Σ_e C(sup_e, 2)``; K4s =
-      adjacent common-neighbor pairs per edge / 6 (``max_common``
-      caps the per-edge pair join, as :func:`edge_dispersion`).
+    - NON-induced counts first: triangles ``T = Σ_e sup/3``; 3-stars
+      ``Σ_v C(d,3) = Σ_e ((d_a−1)(d_a−2)+(d_b−1)(d_b−2))/6``; tailed
+      triangles ``Σ_v t_v·(d_v−2) = Σ_e sup·(d_a+d_b−4)/2``; paths
+      ``Σ_e (d_a−1)(d_b−1)−3T``; diamonds ``Σ_e C(sup_e, 2)`` (one
+      aggregate for all five); 4-cycles from the co-degree wedge join
+      (``max_degree`` hub cap, as :func:`four_cycles`); K4s = adjacent
+      common-neighbor pairs per edge / 6 (``max_common`` caps the
+      per-edge pairs, as :func:`edge_dispersion`).
     - then the exact inclusion-exclusion down-conversion (each
       induced class contains a known number of spanning copies of
       each sparser pattern): i_k4 = n_k4; i_dia = n_dia − 6·i_k4;
@@ -358,134 +269,49 @@ def four_profile(
     All scalar sums widen to decimal(38,0) before summing (Σ d³-scale
     terms wrap int64 on hub-dense graphs — the s_metric precedent);
     outputs are exact longs while each count < 2⁶³. The caps make the
-    two inherently quadratic terms (C4 wedges, K4/diamond pair joins)
+    two inherently quadratic terms (C4 wedges, K4/diamond pairs)
     hub-safe by default; with no vertex above the caps the census is
-    exact. Density caveat: on a NEAR-CLIQUE region the K4 pair join
-    is Σ_e C(sup_e, 2) ~ n⁵ by nature (every 4-profile algorithm pays
+    exact. Density caveat: on a NEAR-CLIQUE region the K4 pairs are
+    Σ_e C(sup_e, 2) ~ n⁵ by nature (every 4-profile algorithm pays
     it, ESCAPE included) — ``max_common`` is the honest knob there,
     trading K4/diamond exactness on over-embedded edges for bounded
     work. Brute-force-verified by pytest over all C(n,4) induced
     subgraphs on random graphs.
     """
-    from pagerank_spark.operators.triangles import (
-        _corner_counts,
-        _orient,
-        _simple_degrees,
-        _simple_undirected,
-        _triangles,
+    nbrs = _neighbours(edges)
+    common = _common(nbrs).select(
+        "a",
+        "b",
+        "cn",
+        F.size("na").cast("long").alias("da"),
+        F.size("nb").cast("long").alias("db"),
+        F.size("cn").cast("long").alias("sup"),
     )
+    da, db, sup = F.col("da"), F.col("db"), F.col("sup")
+    keep = F.lit(True) if max_common is None else sup <= max_common
 
-    simple = _simple_undirected(edges).localCheckpoint()
-    deg = _simple_degrees(simple).localCheckpoint()
-    o = _orient(simple, deg).localCheckpoint()
-    tris = _triangles(o).localCheckpoint()
-    d19 = lambda c: c.cast("decimal(19,0)")  # noqa: E731
+    def total(c):
+        return F.coalesce(
+            F.sum(c.cast("decimal(19,0)")), F.lit(0).cast("decimal(38,0)")
+        )
 
-    n_T = tris.count()
-    # per-vertex: stars and tails
-    tv = _corner_counts(tris)
-    vstats = (
-        deg.join(tv, "id", "left")
-        .select(
-            d19(
-                F.col("deg") * (F.col("deg") - 1) * (F.col("deg") - 2)
-            ).alias("_s3x6"),
-            d19(
-                F.coalesce("triangles", F.lit(0)) * (F.col("deg") - 2)
-            ).alias("_tail"),
-        )
-        .agg(
-            F.coalesce(F.sum("_s3x6"), F.lit(0).cast("decimal(38,0)"))
-            .alias("_s3x6"),
-            F.coalesce(F.sum("_tail"), F.lit(0).cast("decimal(38,0)"))
-            .alias("_tail"),
-        )
-    )
-    r = vstats.collect()[0]
+    r = common.agg(
+        total(sup).alias("_t3"),
+        total((da - 1) * (da - 2) + (db - 1) * (db - 2)).alias("_s3x6"),
+        total(sup * (da + db - 4)).alias("_tail2"),
+        total((da - 1) * (db - 1)).alias("_pp"),
+        total(F.when(keep, sup * (sup - 1))).alias("_d2"),
+    ).collect()[0]
+    n_T = int(r["_t3"]) // 3
     n_star = int(r["_s3x6"]) // 6
-    n_paw = int(r["_tail"])
-    # paths: per-edge degree products
-    pe = (
-        simple.join(
-            deg.select(F.col("id").alias("a"), F.col("deg").alias("_da")),
-            "a",
-        )
-        .join(
-            deg.select(F.col("id").alias("b"), F.col("deg").alias("_db")),
-            "b",
-        )
-        .agg(
-            F.coalesce(
-                F.sum(d19((F.col("_da") - 1) * (F.col("_db") - 1))),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("_pp")
-        )
-        .collect()[0]
-    )
-    n_p4 = int(pe["_pp"]) - 3 * n_T
+    n_paw = int(r["_tail2"]) // 2
+    n_p4 = int(r["_pp"]) - 3 * n_T
+    n_dia = int(r["_d2"]) // 2
     # 4-cycles (non-induced) — reuse the capped co-degree kernel
     n_c4 = four_cycles(edges, max_degree=max_degree).collect()[0][
         "n_four_cycles"
     ]
-    # per-edge triangle support -> diamonds; adjacent support pairs -> K4
-    cn = (
-        tris.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("x", "y").alias("a"),
-                        F.greatest("x", "y").alias("b"),
-                        F.col("z").alias("w"),
-                    ),
-                    F.struct(
-                        F.least("y", "z").alias("a"),
-                        F.greatest("y", "z").alias("b"),
-                        F.col("x").alias("w"),
-                    ),
-                    F.struct(
-                        F.least("x", "z").alias("a"),
-                        F.greatest("x", "z").alias("b"),
-                        F.col("y").alias("w"),
-                    ),
-                )
-            ).alias("_t")
-        )
-        .select("_t.a", "_t.b", "_t.w")
-        .localCheckpoint()
-    )
-    sup = cn.groupBy("a", "b").agg(F.count(F.lit(1)).alias("_s"))
-    if max_common is not None:
-        sup = sup.where(F.col("_s") <= max_common)
-        cn = cn.join(sup.select("a", "b"), ["a", "b"], "left_semi")
-    dia = sup.agg(
-        F.coalesce(
-            F.sum(d19(F.col("_s") * (F.col("_s") - 1))),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("_d2")
-    ).collect()[0]
-    n_dia = int(dia["_d2"]) // 2
-    k4pairs = (
-        cn.alias("l")
-        .join(
-            cn.alias("r"),
-            (F.col("l.a") == F.col("r.a"))
-            & (F.col("l.b") == F.col("r.b"))
-            & (F.col("l.w") < F.col("r.w")),
-        )
-        .select(
-            F.least("l.w", "r.w").alias("pa"),
-            F.greatest("l.w", "r.w").alias("pb"),
-        )
-        .join(
-            simple.select(
-                F.col("a").alias("pa"), F.col("b").alias("pb")
-            ),
-            ["pa", "pb"],
-            "left_semi",
-        )
-        .count()
-    )
-    n_k4 = k4pairs // 6
+    n_k4 = _corner_pairs(common.where(keep), nbrs, adjacent=True).count() // 6
     # induced down-conversion
     i_k4 = n_k4
     i_dia = n_dia - 6 * i_k4

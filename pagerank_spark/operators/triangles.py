@@ -7,14 +7,16 @@ trace(A³)/6 on that projection (FIXTURES.md F1: DEMO → 4).
 
 Every count is a sum of per-edge supports sup(a, b) = |N(a) ∩ N(b)|
 (triangle counting as set intersection, HERO, SIGMOD 2024): one groupBy
-into neighbour arrays, one join, ``array_intersect``. No wedge and no
-triangle is ever a row. The total is Σsup/3, the corner count is
+into neighbour arrays, one join, ``array_intersect``. No count makes a
+wedge or a triangle a row. The total is Σsup/3, the corner count is
 T(v) = Σ_b sup(v, b)/2, the degree is ``size(nbrs)``, and
-``cores.k_truss`` peels on the same support.
-
-Out of scope: ``trussness``, ``edge_embeddedness``, ``edge_dispersion``,
-``burt_constraint`` and ``four_profile`` need triangle identities and
-keep ``_triangles``, the degree-oriented wedge join.
+``cores.k_truss`` peels on the same support. The operators that need
+more than counts (``cores.trussness``, ``burt_constraint``,
+``linkpred.edge_embeddedness``, ``edge_dispersion`` and
+``four_profile``) read the same intersection row (``_common``): the
+sizes of its neighbour arrays are the degrees, and exploding it gives
+the triangles as ``(a, b, w)`` rows, w the third corner, or the pairs
+of third corners of one edge.
 """
 
 from __future__ import annotations
@@ -45,48 +47,6 @@ def _simple_degrees(simple: DataFrame) -> DataFrame:
     )
 
 
-def _orient(simple: DataFrame, deg: DataFrame) -> DataFrame:
-    # Orient low (deg, id) -> high (deg, id): total order, no 2-cycles.
-    return (
-        simple.join(deg.select(F.col("id").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("id").alias("b"), F.col("deg").alias("db")), "b")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-            )
-            .otherwise(F.struct(F.col("b").alias("u"), F.col("a").alias("v")))
-            .alias("e")
-        )
-        .select("e.u", "e.v")
-    )
-
-
-def _triangles(o: DataFrame) -> DataFrame:
-    """``(x, y, z)`` triangle corner triples from a (checkpointed)
-    degree-oriented edge table: wedge self-join + closing-edge join."""
-    wedges = o.alias("e1").join(
-        o.alias("e2"), F.col("e1.v") == F.col("e2.u")
-    ).select(
-        F.col("e1.u").alias("x"),
-        F.col("e1.v").alias("y"),
-        F.col("e2.v").alias("z"),
-    )
-    return wedges.join(
-        o.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"]
-    )
-
-
-def _corner_counts(tris: DataFrame) -> DataFrame:
-    """``(id, triangles)`` per corner. ONE scan of the triangle join: a
-    3-branch union would recompute the two self-joins once per corner
-    position (measured 2.2x slower at sf0.1); explode emits the three
-    corners per triangle in place."""
-    corners = tris.select(F.explode(F.array("x", "y", "z")).alias("id"))
-    return corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
-
-
 def _neighbours(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
     """``(id, nbrs)`` — the neighbour set of every non-isolated vertex of
     the simple undirected graph on columns ``a``/``b`` of ``edges``: one
@@ -102,13 +62,16 @@ def _neighbours(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
     return pairs.groupBy("_p.id").agg(F.collect_set("_p.nb").alias("nbrs"))
 
 
-def _support(nbrs: DataFrame) -> DataFrame:
-    """``(a, b, sup)`` (a < b) — every simple edge and the number of
-    triangles closing on it, ``|N(a) ∩ N(b)|``. The edges are exploded out
-    of the lower endpoint's array, which they carry to one join with the
-    upper endpoint's: that shuffle moves Σ_{a<b} |N(a)| ids, O(Σ deg²) at
-    worst. ``array_intersect`` hashes one array and probes the other, so
-    arrays need no order."""
+def _common(nbrs: DataFrame) -> DataFrame:
+    """``(a, b, na, nb, cn)`` (a < b) — every simple edge, the neighbour
+    arrays of its endpoints and their common neighbours ``cn = N(a) ∩
+    N(b)``, the third corners of the triangles closing on it. The edges
+    are exploded out of the lower endpoint's array, which they carry to
+    one join with the upper endpoint's: that shuffle moves Σ_{a<b} |N(a)|
+    ids, O(Σ deg²) at worst. ``array_intersect`` hashes one array and
+    probes the other, so arrays need no order. This is the one triangle
+    kernel: a count reads ``size(cn)``, a caller that needs the triangles
+    themselves explodes ``cn``."""
     # the planner sizes an array as one element, so it would broadcast the
     # carrying side (out of driver memory on a 500k-edge R-MAT); the hint
     # makes the neighbour table the hashed side
@@ -121,8 +84,45 @@ def _support(nbrs: DataFrame) -> DataFrame:
         )
         .where(F.col("a") < F.col("b"))
         .join(upper.hint("shuffle_hash"), "b")
-        .select("a", "b", F.size(F.array_intersect("na", "nb")).alias("sup"))
+        .select(
+            "a", "b", "na", "nb", F.array_intersect("na", "nb").alias("cn")
+        )
     )
+
+
+def _support(nbrs: DataFrame) -> DataFrame:
+    """``(a, b, sup)`` (a < b) — every simple edge and the number of
+    triangles closing on it, ``|N(a) ∩ N(b)|``."""
+    return _common(nbrs).select("a", "b", F.size("cn").alias("sup"))
+
+
+def _corner_pairs(
+    common: DataFrame, nbrs: DataFrame, adjacent: bool
+) -> DataFrame:
+    """``(a, b)`` once per pair of common neighbours of the edge (a, b)
+    that are adjacent (``adjacent=True``: a K4 on the edge) or are not
+    (an open pair, Backstrom-Kleinberg dispersion). The pairs come from
+    the edge's own ``cn``, each element with the ones after it — Σ C(sup,
+    2) rows, no self-join — and the adjacency test is one semi- or
+    anti-join with the edge set. ``slice`` keeps the pair generation in
+    generated code (a ``filter`` lambda, which Spark interprets, was 4x
+    slower on the sf0.01 canonical graph's 21M pairs)."""
+    after = F.slice("cn", F.col("i") + 2, F.size("cn"))
+    pairs = (
+        common.select("a", "b", "cn", F.posexplode("cn").alias("i", "w"))
+        .select("a", "b", "w", F.explode(after).alias("w2"))
+        .select(
+            "a",
+            "b",
+            F.least("w", "w2").alias("w"),
+            F.greatest("w", "w2").alias("w2"),
+        )
+    )
+    simple = nbrs.select(
+        F.col("id").alias("w"), F.explode("nbrs").alias("w2")
+    ).where(F.col("w") < F.col("w2"))
+    how = "left_semi" if adjacent else "left_anti"
+    return pairs.join(simple, ["w", "w2"], how).select("a", "b")
 
 
 def _total(sup: DataFrame) -> DataFrame:
@@ -132,7 +132,7 @@ def _total(sup: DataFrame) -> DataFrame:
     )
 
 
-def _vertex_triangles(sup: DataFrame) -> DataFrame:
+def _triangles_per_vertex(sup: DataFrame) -> DataFrame:
     """``(id, triangles)`` for every corner of a triangle: T(v) =
     Σ_b sup(v, b)/2."""
     return (
@@ -152,7 +152,7 @@ def triangle_count(edges: DataFrame, per_vertex: bool = False) -> DataFrame:
     or per-vertex corner counts (``DataFrame[id, triangles]``, the
     vertices with at least one triangle)."""
     sup = _support(_neighbours(edges))
-    return _vertex_triangles(sup) if per_vertex else _total(sup)
+    return _triangles_per_vertex(sup) if per_vertex else _total(sup)
 
 
 def clustering_coefficient(
@@ -176,7 +176,7 @@ def clustering_coefficient(
     deg = _degrees(nbrs)
     if per_vertex:
         return (
-            deg.join(_vertex_triangles(sup), "id", "left")
+            deg.join(_triangles_per_vertex(sup), "id", "left")
             .select(
                 "id",
                 F.when(
@@ -217,7 +217,7 @@ def effective_size(edges: DataFrame) -> DataFrame:
     join :func:`clustering_coefficient` already pays.
     """
     nbrs = _neighbours(edges)
-    tri = _vertex_triangles(_support(nbrs))
+    tri = _triangles_per_vertex(_support(nbrs))
     es = F.col("deg") - 2.0 * F.coalesce("triangles", F.lit(0)) / F.col("deg")
     return _degrees(nbrs).join(tri, "id", "left").select(
         "id",
@@ -241,53 +241,38 @@ def burt_constraint(edges: DataFrame) -> DataFrame:
     standard structural-holes pair.
 
     Shape: the indirect term is a per-ORDERED-edge weighted
-    common-neighbor sum — each triangle (x, y, z) contributes to all
-    six ordered (v, j) corner pairs with weight 1/(deg_v · deg_q) —
-    i.e. the SAME oriented triangle kernel `edge_dispersion` uses
-    (Σ min-deg join rows, hub-safe), plus two O(V) degree joins and
-    one per-vertex fold. No wedge join, no Σ deg² term.
+    common-neighbour sum: every edge (a, b) with third corner q (one
+    element of its intersection) contributes to the ordered pairs
+    (a, b) and (b, a) with weight 1/(deg_v · deg_q). The degree of v
+    rides on the intersection row (the ``size`` of its neighbour
+    array), so the only join past the kernel is one O(Σ sup) degree
+    lookup for q, followed by two folds.
     """
-    simple = _simple_undirected(edges).localCheckpoint()
-    deg = _simple_degrees(simple).localCheckpoint()
-    o = _orient(simple, deg).localCheckpoint()
-    # ordered-edge frame (v, j): both directions of every simple edge
-    ordered = simple.select(
-        F.col("a").alias("v"), F.col("b").alias("j")
-    ).union(simple.select(F.col("b").alias("v"), F.col("a").alias("j")))
-    # triangle corner contributions: for ordered pair (v, j), q is the
-    # third corner; weight 1/(deg_v * deg_q)
-    tris = _triangles(o)
-    corner = tris.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("x").alias("v"), F.col("y").alias("j"),
-                         F.col("z").alias("q")),
-                F.struct(F.col("y").alias("v"), F.col("x").alias("j"),
-                         F.col("z").alias("q")),
-                F.struct(F.col("x").alias("v"), F.col("z").alias("j"),
-                         F.col("y").alias("q")),
-                F.struct(F.col("z").alias("v"), F.col("x").alias("j"),
-                         F.col("y").alias("q")),
-                F.struct(F.col("y").alias("v"), F.col("z").alias("j"),
-                         F.col("x").alias("q")),
-                F.struct(F.col("z").alias("v"), F.col("y").alias("j"),
-                         F.col("x").alias("q")),
-            )
-        ).alias("_t")
-    ).select("_t.v", "_t.j", "_t.q")
-    dv = deg.select(F.col("id").alias("v"), F.col("deg").alias("_dv"))
-    dq = deg.select(F.col("id").alias("q"), F.col("deg").alias("_dq"))
-    indirect = (
-        corner.join(dv, "v")
-        .join(dq, "q")
-        .groupBy("v", "j")
-        .agg(
-            F.sum(1.0 / (F.col("_dv") * F.col("_dq"))).alias("_ind")
+    nbrs = _neighbours(edges)
+    deg = _degrees(nbrs).select(
+        F.col("id").alias("q"), F.col("deg").alias("_dq")
+    )
+    # one row per ordered edge (v, j) and common neighbour q; an edge in no
+    # triangle keeps one row with q NULL, so its indirect term sums to NULL
+    corner = (
+        _common(nbrs)
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("a").alias("v"), F.col("b").alias("j"),
+                             F.size("na").cast("long").alias("_dv")),
+                    F.struct(F.col("b").alias("v"), F.col("a").alias("j"),
+                             F.size("nb").cast("long").alias("_dv")),
+                )
+            ).alias("_o"),
+            "cn",
         )
+        .select("_o.*", F.explode_outer("cn").alias("q"))
     )
     per_tie = (
-        ordered.join(indirect, ["v", "j"], "left")
-        .join(dv, "v")
+        corner.join(deg, "q", "left")
+        .groupBy("v", "j", "_dv")
+        .agg(F.sum(1.0 / (F.col("_dv") * F.col("_dq"))).alias("_ind"))
         .select(
             "v",
             (

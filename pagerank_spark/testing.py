@@ -27,6 +27,14 @@ DEMO_GOLDEN = [0.3681495, 0.1418013, 0.2879685, 0.2020806]
 DEMODISPARI_GOLDEN = [0.3287118, 0.1231462, 0.2929534, 0.1754708, 0.0797179]
 
 
+# K30 plus 200 pendant vertices on clique vertex 0 (635 simple edges,
+# 4,060 triangles): a hub whose neighbour list is mostly edges without
+# triangles
+CLIQUE_WITH_STAR_EDGES = [
+    (a, b) for a in range(30) for b in range(a + 1, 30)
+] + [(0, 1000 + i) for i in range(200)]
+
+
 def edges_df(spark: SparkSession, pairs) -> DataFrame:
     return spark.createDataFrame(
         [(int(s), int(t)) for s, t in pairs], "src long, dst long"

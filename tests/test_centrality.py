@@ -14,6 +14,8 @@ from collections import deque
 import numpy as np
 import pytest
 
+from pagerank_spark.testing import CLIQUE_WITH_STAR_EDGES
+
 
 def _random_pairs(seed: int, n: int, e: int):
     rng = np.random.RandomState(seed)
@@ -503,17 +505,6 @@ def _truss_oracle(pairs, k):
         edges = nxt
 
 
-def _clique_with_star():
-    """K30 plus 200 pendant vertices on clique vertex 0 (635 simple
-    edges, 4,060 triangles): a hub whose neighbour list is mostly edges
-    without triangles."""
-    import itertools
-
-    return list(itertools.combinations(range(30), 2)) + [
-        (0, 1000 + i) for i in range(200)
-    ]
-
-
 def test_k_truss_vs_peeling_oracle(spark):
     from pagerank_spark.operators.cores import k_truss
 
@@ -525,11 +516,35 @@ def test_k_truss_vs_peeling_oracle(spark):
     # k<=2: the whole simple edge set
     simple = {(min(s, d), max(s, d)) for s, d in pairs if s != d}
     assert {(r["a"], r["b"]) for r in k_truss(e, 2).collect()} == simple
-    hub = _clique_with_star()
+    hub = CLIQUE_WITH_STAR_EDGES
     e = spark.createDataFrame(hub, "src long, dst long")
     for k in (3, 5, 30, 31):
         got = {(r["a"], r["b"]) for r in k_truss(e, k).collect()}
         assert got == _truss_oracle(hub, k), k
+
+
+def test_trussness_vs_peeling_oracle(spark):
+    """trussness on the 30-vertex random graph that the k_truss job
+    bound peels (21 H-index rounds) converges without the max_iter
+    warning, and an edge's truss number is the largest k whose peel
+    keeps it. A checkpoint size estimate cubed every round kept this
+    from converging: round 13 alone took over a minute to plan."""
+    import warnings
+
+    from pagerank_spark.operators.cores import trussness
+
+    pairs = _random_pairs(124, 30, 200)
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = {
+            (r["a"], r["b"]): r["trussness"] for r in trussness(e).collect()
+        }
+    want, k = {}, 2
+    while kept := _truss_oracle(pairs, k):
+        want.update(dict.fromkeys(kept, k))
+        k += 1
+    assert k > 4 and got == want
 
 
 def test_k_truss_clique_and_empty(spark):
@@ -562,7 +577,7 @@ def test_k_truss_checkpoints_no_triangle_table(spark, monkeypatch):
         saved.append(out)
         return out
 
-    e = spark.createDataFrame(_clique_with_star(), "src long, dst long")
+    e = spark.createDataFrame(CLIQUE_WITH_STAR_EDGES, "src long, dst long")
     monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
     assert k_truss(e, 3).count() == 435
     monkeypatch.undo()

@@ -4,7 +4,12 @@ import numpy as np
 import pytest
 
 from pagerank_spark import connected_components, label_propagation, triangle_count
-from pagerank_spark.testing import DEMO_EDGES, edges_df, synth_edges
+from pagerank_spark.testing import (
+    CLIQUE_WITH_STAR_EDGES,
+    DEMO_EDGES,
+    edges_df,
+    synth_edges,
+)
 
 
 def union_find_oracle(pairs):
@@ -240,14 +245,21 @@ def test_jobs_per_round_cc_stars_and_lpa(spark):
 
 
 def test_triangle_call_shape(spark):
-    """Jobs per triangle_count call and per k_truss round: one groupBy
-    into neighbour arrays and one intersection join. The wedge join made
+    """Jobs per triangle_count call, per k_truss round and per call of
+    the operators that need the triangles themselves: one groupBy into
+    neighbour arrays and one intersection join. The wedge join made
     triangle_count 11 jobs here; the triangle table's semi-joins and
     checkpoint made a k_truss round 10. The k_truss graph (k=5) peels for
     22 rounds, so rounds 2 and 3 both remove edges."""
     import warnings
 
     from pagerank_spark.operators.cores import k_truss
+    from pagerank_spark.operators.linkpred import (
+        edge_dispersion,
+        edge_embeddedness,
+        four_profile,
+    )
+    from pagerank_spark.operators.triangles import burt_constraint
 
     small = synth_edges(spark, n=60, e=500, seed=5).localCheckpoint()
     assert _jobs(spark, "triangles", lambda: triangle_count(small)) <= 9
@@ -263,6 +275,44 @@ def test_triangle_call_shape(spark):
     one = _jobs(spark, "truss-1", lambda: k_truss(peel, 5, max_iter=1))
     three = _jobs(spark, "truss-3", lambda: k_truss(peel, 5, max_iter=3))
     assert 0 < (three - one) / 2 <= 5, (one, three)
+    # the callers that explode the intersection into triangles; the
+    # degree-oriented wedge join and its checkpoints made these 19, 23,
+    # 21 and 50 (3, 7, 6 and 21 now)
+    for name, call, bound in (
+        ("embeddedness", edge_embeddedness, 6),
+        ("dispersion", edge_dispersion, 12),
+        ("burt", burt_constraint, 10),
+        ("four_profile", four_profile, 30),
+    ):
+        assert _jobs(spark, name, lambda: call(peel)) <= bound, name
+
+
+def test_jobs_per_round_coreness_and_trussness(spark):
+    """Jobs per H-index round on the k_truss peel graph, where neither
+    fixpoint settles within three rounds: the step flags changed values
+    and the stop test counts them on the checkpoint job. A row-wise
+    compare of the previous and the new state made these 12 and 12.5
+    (7 and 8.5 now)."""
+    import warnings
+
+    from pagerank_spark.operators.cores import coreness, trussness
+
+    rng = np.random.RandomState(124)
+    peel = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in rng.randint(0, 30, size=(200, 2))],
+        "src long, dst long",
+    ).localCheckpoint()
+    for name, call, bound in (
+        ("coreness", coreness, 8),
+        ("trussness", trussness, 10),
+    ):
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            call(peel, max_iter=3).count()
+        assert any("did not converge" in str(x.message) for x in w), name
+        one = _jobs(spark, f"{name}-1", lambda: call(peel, max_iter=1))
+        three = _jobs(spark, f"{name}-3", lambda: call(peel, max_iter=3))
+        assert 0 < (three - one) / 2 <= bound, (name, one, three)
 
 
 def test_cc_count_first_detection_same_labels(spark):
@@ -1679,28 +1729,30 @@ def test_msf_unweighted_spanning_and_empty(spark):
 
 
 def test_edge_embeddedness_vs_bruteforce(spark):
+    """A random graph and K30 plus a 200-leaf star on a clique vertex."""
     from pagerank_spark.operators.linkpred import edge_embeddedness
 
     rng = np.random.RandomState(66)
-    pairs = [(int(a), int(b)) for a, b in rng.randint(0, 25, size=(90, 2))]
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        (r["a"], r["b"]): (r["common"], r["embeddedness"])
-        for r in edge_embeddedness(e).collect()
-    }
-    adj = {}
-    for a, b in pairs:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    simple = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
-    assert set(got) == simple  # one row per existing edge
-    for a, b in simple:
-        cn = len(adj[a] & adj[b])
-        den = len(adj[a]) + len(adj[b]) - 2 - cn
-        want = cn / den if den > 0 else 0.0
-        assert got[(a, b)][0] == cn, (a, b)
-        assert abs(got[(a, b)][1] - want) < 1e-12, (a, b)
+    rand = [(int(a), int(b)) for a, b in rng.randint(0, 25, size=(90, 2))]
+    for pairs in (rand, CLIQUE_WITH_STAR_EDGES):
+        e = spark.createDataFrame(pairs, "src long, dst long")
+        got = {
+            (r["a"], r["b"]): (r["common"], r["embeddedness"])
+            for r in edge_embeddedness(e).collect()
+        }
+        adj = {}
+        for a, b in pairs:
+            if a != b:
+                adj.setdefault(a, set()).add(b)
+                adj.setdefault(b, set()).add(a)
+        simple = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
+        assert set(got) == simple  # one row per existing edge
+        for a, b in simple:
+            cn = len(adj[a] & adj[b])
+            den = len(adj[a]) + len(adj[b]) - 2 - cn
+            want = cn / den if den > 0 else 0.0
+            assert got[(a, b)][0] == cn, (a, b)
+            assert abs(got[(a, b)][1] - want) < 1e-12, (a, b)
     # pendant edge of a K4: the canonical local bridge (common == 0)
     k4p = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (4, 0)]
     out = {
@@ -1713,32 +1765,48 @@ def test_edge_embeddedness_vs_bruteforce(spark):
 
 
 def test_edge_dispersion_vs_bruteforce(spark):
+    """A random graph and K30 plus a 200-leaf star on a clique vertex;
+    with ``max_common`` below the largest support, the edges above it
+    report their true ``common`` and a NULL dispersion."""
     import itertools
 
     from pagerank_spark.operators.linkpred import edge_dispersion
 
     rng = np.random.RandomState(77)
-    pairs = [(int(a), int(b)) for a, b in rng.randint(0, 20, size=(70, 2))]
-    e = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        (r["a"], r["b"]): (r["common"], r["dispersion"])
-        for r in edge_dispersion(e).collect()
-    }
-    adj = {}
-    for a, b in pairs:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    simple = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
-    assert set(got) == simple
-    for a, b in simple:
-        cn = sorted(adj[a] & adj[b])
-        disp = sum(
-            1
-            for w1, w2 in itertools.combinations(cn, 2)
-            if w2 not in adj[w1]
-        )
-        assert got[(a, b)] == (len(cn), disp), (a, b)
+    rand = [(int(a), int(b)) for a, b in rng.randint(0, 20, size=(70, 2))]
+    for pairs in (rand, CLIQUE_WITH_STAR_EDGES):
+        e = spark.createDataFrame(pairs, "src long, dst long")
+        adj = {}
+        for a, b in pairs:
+            if a != b:
+                adj.setdefault(a, set()).add(b)
+                adj.setdefault(b, set()).add(a)
+        simple = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
+        want = {}
+        for a, b in simple:
+            cn = sorted(adj[a] & adj[b])
+            want[(a, b)] = (
+                len(cn),
+                sum(
+                    1
+                    for w1, w2 in itertools.combinations(cn, 2)
+                    if w2 not in adj[w1]
+                ),
+            )
+        got = {
+            (r["a"], r["b"]): (r["common"], r["dispersion"])
+            for r in edge_dispersion(e).collect()
+        }
+        assert got == want
+        cap = max(c for c, _ in want.values()) - 1
+        over = {ed for ed, (c, _) in want.items() if c > cap}
+        capped = {
+            (r["a"], r["b"]): (r["common"], r["dispersion"])
+            for r in edge_dispersion(e, max_common=cap).collect()
+        }
+        assert capped == {
+            ed: (c, None if ed in over else d) for ed, (c, d) in want.items()
+        }
 
 
 def test_s_metric_vs_bruteforce(spark):
@@ -1850,13 +1918,15 @@ def test_louvain_multigraph_matches_simple_projection(spark):
 
 
 def test_wedge_caps_default_finite(spark):
-    """The 100 TB foot-gun is closed by default: a >10k-degree hub is
-    excluded from wedge generation unless the caller explicitly opts
-    out with max_degree=None."""
+    """The 100 TB foot-gun is closed by default, also through the
+    LinkGraph facade: a >10k-degree hub is excluded from wedge
+    generation unless the caller explicitly opts out with
+    max_degree=None."""
     import inspect
 
     from pyspark.sql import functions as F
 
+    from pagerank_spark import LinkGraph
     from pagerank_spark.operators.linkpred import (
         edge_dispersion,
         four_cycles,
@@ -1875,6 +1945,12 @@ def test_wedge_caps_default_finite(spark):
     # hub degree 10_001 > default cap -> no hub-mediated wedges
     assert link_prediction(star).count() == 0
     assert four_cycles(star).collect()[0]["n_four_cycles"] == 0
+    # the facade keeps the operators' caps
+    g = LinkGraph(edges=star)
+    assert g.link_prediction().count() == 0
+    assert g.four_cycles().collect()[0]["n_four_cycles"] == 0
+    assert inspect.signature(LinkGraph.edge_dispersion).parameters[
+        "max_common"].default == 10_000
 
 
 def test_incremental_components_matches_full(spark):
@@ -2108,34 +2184,36 @@ def test_streaming_cc_equals_batch_any_batching(spark, tmp_path):
 
 
 def test_burt_constraint_matches_direct_formula(spark):
-    """Burt eq. 2.4 replayed directly per ego in Python, plus closed
+    """Burt eq. 2.4 replayed directly per ego in Python on a small graph
+    and on K30 plus a 200-leaf star on a clique vertex, plus closed
     forms: an isolated dyad's ends have constraint 1, a K3 member
     (1/2 + 1/4)^2 * 2 = 1.125."""
     from pagerank_spark.operators.triangles import burt_constraint
 
     E = [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (3, 4), (0, 5), (5, 6),
          (8, 9)]
-    adj = {}
-    for a, b in E:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
+    for pairs in (CLIQUE_WITH_STAR_EDGES, E):
+        adj = {}
+        for a, b in pairs:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
 
-    def c(v):
-        out = 0.0
-        for j in adj[v]:
-            p = 1.0 / len(adj[v])
-            ind = sum(
-                (1.0 / len(adj[v])) * (1.0 / len(adj[q]))
-                for q in adj[v] & adj[j]
-            )
-            out += (p + ind) ** 2
-        return out
+        def c(v):
+            out = 0.0
+            for j in adj[v]:
+                p = 1.0 / len(adj[v])
+                ind = sum(
+                    (1.0 / len(adj[v])) * (1.0 / len(adj[q]))
+                    for q in adj[v] & adj[j]
+                )
+                out += (p + ind) ** 2
+            return out
 
-    e = spark.createDataFrame(E, "src long, dst long")
-    got = {r["id"]: r["constraint"] for r in burt_constraint(e).collect()}
-    assert set(got) == set(adj)
-    for v in adj:
-        assert abs(got[v] - c(v)) < 1e-12, v
+        e = spark.createDataFrame(pairs, "src long, dst long")
+        got = {r["id"]: r["constraint"] for r in burt_constraint(e).collect()}
+        assert set(got) == set(adj)
+        for v in adj:
+            assert abs(got[v] - c(v)) < 1e-12, v
     assert got[8] == 1.0 and got[9] == 1.0  # dyad
     tri = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2)], "src long, dst long"

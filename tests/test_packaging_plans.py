@@ -320,6 +320,48 @@ def test_observed_probe_rides_on_the_checkpoint(spark):
         iterate(s0, step, None, 3, probe=counted)
 
 
+def test_checkpoint_size_estimate_stays_bounded(spark):
+    """A checkpoint inherits the size estimate of the plan it came from,
+    and a join's estimate is the product of its inputs'. A step that
+    joins the state to itself three times cubed the estimate every
+    round (thousands of bits by round 8, minutes of planning by round
+    13); capped at ``spark.sql.defaultSizeInBytes``, 30 rounds keep it
+    within 64 bits, and the capped checkpoint keeps its partitioning."""
+    from pagerank_spark.plans.iterate import iterate, local_checkpoint
+
+    s0 = spark.range(200).select(F.col("id"), (F.col("id") % 7).alias("v"))
+
+    def step(s, _r):
+        x = s
+        for i in range(2):
+            x = x.join(s.select("id", F.col("v").alias(f"v{i}")), "id")
+        return x.select("id", F.least("v", "v0", "v1").alias("v"))
+
+    def estimate(df):
+        return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+    bits = []
+
+    def converged(_prev, new, _r):
+        bits.append(int(estimate(new)).bit_length())
+        return False
+
+    out, rounds, _done = iterate(s0, step, converged, 30)
+    assert rounds == 30 and max(bits) <= 64, bits
+    assert out.count() == 200
+    hashed = step(step(s0.repartition(3, "id"), 1), 2)
+    assert int(estimate(hashed)).bit_length() > 64
+    capped = local_checkpoint(hashed)
+    assert int(estimate(capped)).bit_length() <= 64
+    plan = capped._jdf.queryExecution().logical()
+    want = hashed.localCheckpoint()._jdf.queryExecution().logical()
+    assert (
+        plan.outputPartitioning().toString()
+        == want.outputPartitioning().toString()
+    )
+    assert capped.rdd.getNumPartitions() == hashed.rdd.getNumPartitions()
+
+
 def test_linkpred_and_cooccur_no_cartesian(spark):
     """The wedge joins must stay equi-joins — a fallback to
     CartesianProduct would be the 100 TB scale-killer."""
